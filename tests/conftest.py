@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 import time
@@ -104,6 +105,29 @@ def spark():
 
     s = get_spark(app_name="vector_db_core_spark_tests")
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn) -> (fn(), n)``: run ``fn`` under a job group of
+    its own and count the Spark jobs it launched, read from the status
+    tracker once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job_count_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

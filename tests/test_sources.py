@@ -283,3 +283,109 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     assert zspan["user_id"] < 0.5 * global_span["user_id"]
     # ...and the second dimension beats the single-key layout's 2x+
     assert zspan["user_id"] * 2 < sspan["user_id"]
+
+
+# ---------------------------------------------------------------- read_parquet
+
+
+def _same_as_plain_read(spark, path, merge_schema=False):
+    from vector_db_core_spark.sources import read_parquet
+
+    plain = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
+    got = read_parquet(spark, path, merge_schema=merge_schema)
+    assert got.schema == plain.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(map(tuple, plain.collect()), key=repr)
+    return got
+
+
+def test_read_parquet_equals_plain_read_single_file_and_directory(spark, tmp_path):
+    from tests.conftest import SF_SMOKE
+
+    _same_as_plain_read(spark, f"{SF_SMOKE}/nation.parquet")
+    path = str(tmp_path / "dir")
+    spark.range(0, 500, 1, 3).select(
+        F.col("id"), F.concat(F.lit("v"), F.col("id")).alias("s")
+    ).write.parquet(path)
+    _same_as_plain_read(spark, path)
+    _same_as_plain_read(spark, path)  # served from the memo
+
+
+def test_read_parquet_hive_partitioned_scratch_table(spark):
+    """A scratch table written partitioned reads back with its partition
+    columns last, as plain ``spark.read.parquet`` infers them."""
+    from vector_db_core_spark import scratch
+
+    df = scratch.cached_table(
+        spark, "read_parquet_partitioned", "/none",
+        lambda: spark.range(0, 60).select(
+            (F.col("id") % 3).alias("cell"), F.col("id"), (F.col("id") * 2).alias("v")
+        ),
+        partition_by=("cell",),
+    )
+    assert df.columns == ["id", "v", "cell"]
+    _same_as_plain_read(spark, scratch.path_for("read_parquet_partitioned", "/none"))
+    scratch.reset("read_parquet_partitioned")
+
+
+def test_read_parquet_store_with_added_column(spark, tmp_path):
+    store = OrdinalStore(spark, str(tmp_path / "s"))
+    store.pushx(spark.range(0, 10).select(F.col("id").cast("int").alias("a")))
+    store.pushx(spark.range(10, 20).select(
+        F.col("id").cast("int").alias("a"), F.lit("new").alias("b")))
+    got = _same_as_plain_read(spark, store.path, merge_schema=True)
+    assert sorted(got.columns) == ["a", "b", "rowid"]
+    assert store.getall().where("b IS NULL").count() == 10
+
+
+def test_read_parquet_reinfers_on_changed_files(spark, tmp_path, job_count):
+    """A memo hit launches no job; a rewritten file or an added file
+    re-infers and the new schema is returned."""
+    from vector_db_core_spark.sources import read_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(5).select(F.col("id").alias("a")).write.parquet(path)
+    read_parquet(spark, path, merge_schema=True)
+    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
+    assert jobs == 0 and df.columns == ["a"]
+    spark.range(5).select(F.col("id").alias("a"), F.col("id").alias("b")).write.mode("append").parquet(path)
+    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
+    assert jobs == 1 and df.columns == ["a", "b"]
+    spark.range(5).select(F.col("id").cast("string").alias("c")).write.mode("overwrite").parquet(path)
+    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
+    assert jobs == 1 and df.columns == ["c"]
+    assert df.schema["c"].dataType.simpleString() == "string"
+
+
+def test_read_parquet_reinfers_on_changed_inference_conf(spark, tmp_path):
+    """``nanosAsLong`` is part of the memo key: with it on a
+    TIMESTAMP(NANOS) column reads as a long; turned off, the read
+    re-infers (and Spark rejects the column) instead of serving the
+    memoized long schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from vector_db_core_spark.sources import read_parquet
+
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, path).schema["ts"].dataType.simpleString() == "bigint"
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+            read_parquet(spark, path)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_parquet_memo_skips_uris(tmp_path):
+    from vector_db_core_spark.sources.loaders import _data_files
+
+    assert _data_files("hdfs://namenode/warehouse/t") is None
+    assert _data_files("s3a://bucket/t") is None
+    assert _data_files(f"file://{tmp_path}") is None
+    assert _data_files(str(tmp_path / "missing")) == ()

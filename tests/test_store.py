@@ -507,8 +507,8 @@ def test_read_ordered_empty_store_matches_getall(spark, tmp_path):
 def test_round14_pushx_files_are_rowid_ordered_without_sort(spark, tmp_path):
     """r14: pushx dropped its sortWithinPartitions — the rowid is
     provably in physical row order within every partition (offset +
-    the low-33-bit record counter of monotonically_increasing_id, and
-    the broadcast offset join preserves probe-side order). Pin the
+    the low-33-bit record counter of monotonically_increasing_id, a
+    per-row projection that keeps row order). Pin the
     invariant the row-group pruning relies on: within every written
     parquet file, rowids appear strictly increasing.
 
@@ -560,3 +560,78 @@ def test_round14_pushx_files_are_rowid_ordered_without_sort(spark, tmp_path):
             f"{path}: rowids not strictly increasing in physical order"
         )
     assert store.count() == 100_000
+
+
+def _parquet_files(path):
+    import os
+
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def test_pull_row_is_one_job_once_the_schema_is_known(spark, tmp_path, job_count):
+    """A point read launches only its own scan: the store's merged
+    schema is inferred by the first read after a write and reused by
+    every read until the files change."""
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(sample_rows(300))
+    store.pushx(spark.createDataFrame(sample_rows(300, start=300), SCHEMA), deterministic_source=True)
+    assert len(_parquet_files(store.path)) >= 2
+    _, first = job_count(lambda: store.pull_row(10))
+    assert first == 2  # the schema inference, then the scan
+    row, n = job_count(lambda: store.pull_row(450))
+    assert n == 1
+    assert row.rowid == 450 and row.my_number1 == 450
+
+
+def test_dataframe_pushx_has_no_broadcast(spark, tmp_path):
+    """Partition offsets reach the rowid as one constant array, not as a
+    broadcast side frame joined to the batch: no SQL execution that a
+    DataFrame pushx runs has a broadcast exchange or a join."""
+    store = OrdinalStore(spark, str(tmp_path / "s"))
+    batch = spark.range(0, 4_000, 1, 4).select(F.col("id").cast("int").alias("a"))
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    before = sql_store.executionsList().size()
+    store.pushx(batch)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = sql_store.executionsList()
+    plans = [execs.apply(i).physicalPlanDescription() for i in range(before, execs.size())]
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
+    for p in plans:
+        assert "BroadcastExchange" not in p and "Join" not in p, p
+    rowids = [r.rowid for r in store.getall().select("rowid").collect()]
+    assert rowids == list(range(4_000))
+
+
+def test_ingest_buffer_flush_is_one_job_one_file(spark, tmp_path, job_count):
+    """A flushed row list is numbered on the driver: one write job, one
+    file, ordinals continuing the store's and in push order."""
+    from vector_db_core_spark.streaming.ingest import IngestBuffer
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(sample_rows(40))
+    files = _parquet_files(store.path)
+    buf = IngestBuffer(store, threshold=25)
+    for r in sample_rows(24, start=40):
+        buf.push(r)
+    _, jobs = job_count(lambda: buf.push(sample_rows(1, start=64)[0]))
+    assert jobs == 1
+    assert buf.lens() == (0, 65, 65)
+    assert len(_parquet_files(store.path)) == len(files) + 1
+    rows = store.getall().collect()
+    assert [r.rowid for r in rows] == list(range(65))
+    assert [r.my_number1 for r in rows] == list(range(65))
+
+
+def test_hot_table_serves_point_reads(spark, tmp_path):
+    """A warmed hot_table over getall(ordered=False) still answers
+    pull(): every store read builds the same relation, so the cached
+    plan matches."""
+    from vector_db_core_spark.cache import hot_table
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(sample_rows(100))
+    store.pushx(sample_rows(100, start=100))
+    with hot_table(store.getall(ordered=False), warm=True):
+        plan = store.pull(150)._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        assert store.pull_row(150).my_number1 == 150

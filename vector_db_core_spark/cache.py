@@ -23,6 +23,19 @@ under memory pressure), not the row — a documented deviation
                        the reference's stackable decorators: a table
                        fed by streaming/ingest can be hot_table'd by
                        readers independently.
+
+Refresh cost of a hot table over a store that keeps growing: every
+append to a path (``pushx``, an ``IngestBuffer`` flush, a stream
+micro-batch) makes Spark's ``recacheByPath`` drop the cached data of
+each plan that reads that path. The cache entry stays registered, so
+the next read whose plan matches it — a ``pull`` or ``getall`` on the
+same store — re-materializes the WHOLE table before it answers, and
+that one read costs a full scan instead of a pruned one. In a cycle of
+writes followed by point reads, the first read after the writes reads
+every row of the store (about half the rows the ``store`` benchmark
+workload reads per pass). Where writes and reads interleave, release
+the hot table before writing and pin it again when a read burst
+starts.
 """
 
 from __future__ import annotations

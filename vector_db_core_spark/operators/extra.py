@@ -2827,10 +2827,11 @@ def _ranked_customer_spend(spark: SparkSession, sf_dir: str):
       1. range-partition + sort WITHIN partitions on the rank key —
          every partition sorts in parallel, partition p's keys all
          precede partition p+1's;
-      2. per-partition row counts -> driver prefix sum -> broadcast
-         offsets; each row's rank = its partition's offset + its
-         local position (``store._dense_rowid_frame``, the exact
-         protocol ``OrdinalStore.pushx`` uses for dense rowids).
+      2. per-partition row counts -> driver prefix sum -> one
+         constant offsets array; each row's rank = its partition's
+         offset + its local position (``store._dense_rowid_frame``,
+         the exact protocol ``OrdinalStore.pushx`` uses for dense
+         rowids).
 
     The sorted frame is PERSISTED before tagging because
     ``monotonically_increasing_id`` requires deterministic
@@ -6426,8 +6427,9 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-based, so a value never splits across partitions — cumsum
     LOCALLY per partition (window keyed on spark_partition_id, fully
     parallel), collect the K per-partition count totals, prefix-sum
-    them on the driver, and broadcast the offsets back
-    (``_dense_rowid_frame``'s shape with counts in place of rows;
+    them on the driver, and read the offsets back as one constant
+    array (``store.prefix_offsets``, ``_dense_rowid_frame``'s shape
+    with counts in place of rows;
     below(v) is partition-boundary-invariant, and the sorted
     histogram is persisted so the collected offsets stay aligned with
     the frame they came from — the ``_ranked_customer_spend``
@@ -6443,6 +6445,8 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the revenue key; the 6-moment reduction is one map-side-combined
     aggregate to a single row."""
     from pyspark import StorageLevel
+
+    from vector_db_core_spark.store import prefix_offsets
 
     x = (
         _t(spark, sf_dir, "lineitem")
@@ -6474,20 +6478,14 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     totals = srt.groupBy("_pid").agg(F.sum("c").alias("t")).collect()
-    offs, acc = [], 0
-    for row in sorted(totals, key=lambda r: r._pid):
-        offs.append((row._pid, acc))
-        acc += row.t
-    off = spark.createDataFrame(offs, "_pid int, _off bigint")
+    off, _ = prefix_offsets({r._pid: r.t for r in totals}, F.col("_pid"))
     wloc = (
         W.partitionBy("_pid")
         .orderBy("yv")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    below_y = F.col("_off") + F.coalesce(F.sum("c").over(wloc), F.lit(0))
-    cy = srt.join(F.broadcast(off), "_pid").select(
-        "yv", (2 * below_y + F.col("c") + 1).alias("ry2")
-    )
+    below_y = off + F.coalesce(F.sum("c").over(wloc), F.lit(0))
+    cy = srt.select("yv", (2 * below_y + F.col("c") + 1).alias("ry2"))
     r = (
         x.join(F.broadcast(cx), "xv")
         .join(cy, "yv")

@@ -12,7 +12,7 @@ Each operator here is the *query-side* mapping; the write-side
 against temp parquet stores, since the fixtures are read-only.
 
 Scale notes: point and range reads are single pushed-down predicates
-on the ordinal column — with sort-on-write row groups, Parquet min/max
+on the ordinal column — with rowid-ordered row groups, Parquet min/max
 stats prune to the few overlapping row groups, the Spark analog of the
 reference's O(1) offset arithmetic
 (dynamic_vector_manage_service.rs:226-242,332-359). No shuffle in any

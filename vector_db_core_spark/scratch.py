@@ -22,6 +22,8 @@ import tempfile
 import threading
 from typing import TYPE_CHECKING, Callable
 
+from vector_db_core_spark.sources.loaders import read_parquet
+
 if TYPE_CHECKING:  # pragma: no cover - typing only
     from pyspark.sql import DataFrame, SparkSession
 
@@ -117,7 +119,7 @@ def cached_table(
                     _BUILD_COUNTS.get((key, sf_dir), 0) + 1
                 )
                 _PATHS[(key, sf_dir)] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def build_count(key: str, sf_dir: str | None = None) -> int:

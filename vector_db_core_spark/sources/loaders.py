@@ -2,8 +2,9 @@
 
 The testdata layout is one parquet file per table under an sf dir
 (``/root/testdata/sf{0.001,0.01,0.1}/<name>.parquet`` — TESTDATA.md).
-Everything is loaded with ``spark.read.parquet`` so Catalyst gets
-predicate pushdown / column pruning / row-group pruning for free.
+Everything is loaded through ``read_parquet`` (a ``spark.read.parquet``
+whose inferred schema is memoized) so Catalyst gets predicate
+pushdown / column pruning / row-group pruning for free.
 
 Beyond parquet, ``read_any`` exposes the CSV/JSON ingest surface
 ([EXT] — the reference only reads its own binary files,
@@ -13,6 +14,8 @@ Beyond parquet, ``read_any`` exposes the CSV/JSON ingest surface
 from __future__ import annotations
 
 import os
+import threading
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,12 +72,89 @@ def init_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: session confs whose values change what parquet schema inference
+#: returns for the same files — part of ``read_parquet``'s memo key
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+_SCHEMAS_LOCK = threading.Lock()
+#: (path, merge_schema, conf values) -> (data-file signature, schema)
+_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _skipped(name: str) -> bool:
+    """Names Spark's file listing leaves out of a scan: ``.``-prefixed
+    (checksum sidecars) and ``_``-prefixed (``_SUCCESS``, the store's
+    ``_meta.json``) unless they hold ``=`` (a partition directory)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(path: str) -> tuple | None:
+    """``(relative path, size, mtime_ns)`` of every data file a scan of
+    ``path`` reads, sorted; None for a URI (``hdfs:``, ``s3a:``,
+    ``file:``) or a path being changed under the listing."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        files = []
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames[:] = [d for d in dirnames if not _skipped(d)]
+            for f in filenames:
+                if not _skipped(f):
+                    full = os.path.join(dirpath, f)
+                    st = os.stat(full)
+                    files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring an unchanged schema.
+
+    Schema inference is a Spark job that reads file footers (every
+    footer under ``merge_schema``), launched each time a reader is
+    built. This keeps the inferred ``StructType`` per ``(path,
+    merge_schema, values of the confs that change inference)`` and
+    reuses it while the data files' signature — name, size and mtime
+    of every file the scan reads — is unchanged; any rewritten, added
+    or removed file re-infers. The memo is process-wide, with one entry
+    per key replaced on a miss, so it grows with distinct paths only.
+    URIs and paths with no data files (whose errors Spark reports)
+    always go to the inferring reader.
+
+    Hit and miss both return ``spark.read.schema(s).parquet(path)``:
+    one relation shape for every read of a path, so a ``hot_table``
+    over one read still matches the next read's plan.
+    """
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    files = _data_files(path)
+    if not files:
+        return reader.parquet(path)
+    key = (path, merge_schema, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    with _SCHEMAS_LOCK:
+        entry = _SCHEMAS.get(key)
+    if entry is None or entry[0] != files:
+        entry = (files, reader.parquet(path).schema)
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[key] = entry
+    return spark.read.schema(entry[1]).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (lazy parquet scan)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     init_session(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     for c in _TS_COLS.get(name, ()):
         dt = df.schema[c].dataType
         if isinstance(dt, T.LongType):

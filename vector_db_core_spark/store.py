@@ -25,12 +25,15 @@ Scale design
   record_position`` where record_position is consecutive from 0 within
   each partition. One tiny aggregate collects per-partition counts
   (K rows for K partitions — bytes, not data), the driver prefix-sums
-  them into partition start offsets, and a broadcast join + arithmetic
-  yields a dense, batch-stable ordinal. No window over a single
-  partition, no zipWithIndex RDD round-trip, no shuffle of the data.
-* **Point/range reads prune, not scan.** Batches are written sorted by
-  rowid (sortWithinPartitions after a range repartition for large
-  batches), so Parquet row-group min/max statistics answer
+  them into partition start offsets, and one constant array lookup +
+  arithmetic yields a dense, batch-stable ordinal. No window over a
+  single partition, no zipWithIndex RDD round-trip, no join, no
+  shuffle of the data. A batch of driver-local rows skips even the
+  count: its ordinals are its list positions.
+* **Point/range reads prune, not scan.** Rowids come out in physical
+  row order within every partition and each write task writes one
+  file, so every file holds one contiguous, ascending rowid span and
+  Parquet row-group min/max statistics answer
   ``rowid = i`` / ``rowid BETWEEN a AND b`` by reading only the
   overlapping row groups — the Spark analog of the reference's
   O(1) slot arithmetic (dynamic_vector_manage_service.rs:226-242).
@@ -55,14 +58,43 @@ import tempfile
 import threading
 from typing import Iterable, Iterator, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 from pyspark.storagelevel import StorageLevel
 
+from vector_db_core_spark.sources.loaders import read_parquet
+
 _PARTITION_MASK = (1 << 33) - 1  # low 33 bits of monotonically_increasing_id
 
 ROWID = "rowid"
+
+
+def prefix_offsets(counts: dict[int, int], pid: Column, start: int = 0) -> tuple[Column, int]:
+    """Partition start offsets as one constant array lookup.
+
+    ``counts`` maps partition id to its rows (or any weight). The driver
+    prefix-sums them from ``start`` in partition order, and the column
+    is ``offsets[pid]``: ``element_at`` over one ``array(...)`` SQL
+    literal, which Catalyst folds into a constant. There is no side
+    frame, join or broadcast job, and building it takes the same few
+    py4j calls at any partition count. Returns ``(column, total)``.
+    """
+    offsets, acc = [], start
+    for p in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    literal = F.expr(f"array({', '.join(f'{o}L' for o in offsets or [start])})")
+    return F.element_at(literal, pid.cast("int") + 1), acc - start
+
+
+def _rowid(offset: Column, position: Column) -> Column:
+    """``offset + position`` as the stored rowid. ``try_add`` rather
+    than ``+`` keeps the column nullable, so every file stores rowid as
+    an OPTIONAL int64 like the stores written before it (a plain ``+``
+    over non-null inputs writes a REQUIRED column); the sum cannot
+    overflow a long."""
+    return F.try_add(offset, position)
 
 
 def _dense_rowid_frame(tagged: DataFrame, start: int) -> tuple[DataFrame, int]:
@@ -72,22 +104,11 @@ def _dense_rowid_frame(tagged: DataFrame, start: int) -> tuple[DataFrame, int]:
     the same per-partition counts used for the prefix sum, so callers
     never need a second counting job over the data.
     """
-    pid = F.shiftright(F.col("_mid"), 33).alias("_pid")
-    counts = tagged.select(pid).groupBy("_pid").count().collect()
-    offsets = []
-    acc = start
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    spark = tagged.sparkSession
-    offsets_df = spark.createDataFrame(offsets, schema="_pid LONG, _offset LONG")
-    out = (
-        tagged.withColumn("_pid", F.shiftright(F.col("_mid"), 33))
-        .join(F.broadcast(offsets_df), "_pid")
-        .withColumn(ROWID, F.col("_offset") + (F.col("_mid").bitwiseAND(_PARTITION_MASK)))
-        .drop("_mid", "_pid", "_offset")
-    )
-    return out, acc - start
+    pid = F.shiftright(F.col("_mid"), 33)
+    counts = tagged.select(pid.alias("_pid")).groupBy("_pid").count().collect()
+    offset, total = prefix_offsets({r["_pid"]: r["count"] for r in counts}, pid, start)
+    out = tagged.withColumn(ROWID, _rowid(offset, F.col("_mid").bitwiseAND(_PARTITION_MASK))).drop("_mid")
+    return out, total
 
 
 def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> DataFrame:
@@ -96,8 +117,9 @@ def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> D
     Uses the documented bit layout of ``monotonically_increasing_id``:
     partition id in the high bits, a consecutive 0-based record number
     in the low 33 bits. Per-partition counts are collected (K tiny
-    rows), prefix-summed on the driver, and broadcast back — the data
-    itself never shuffles and never funnels through one partition.
+    rows), prefix-summed on the driver, and read back as a constant
+    array (``prefix_offsets``) — the data itself never shuffles, never
+    joins and never funnels through one partition.
 
     The input must be deterministically partitioned between the count
     action and downstream use (true for file scans and cached frames).
@@ -278,10 +300,11 @@ class OrdinalStore:
         # are authoritative (self.schema describes only the payload and
         # is used when coercing python rows in pushx). mergeSchema
         # reconciles batches appended with evolved (column-added)
-        # schemas — see ``pushx`` docstring; cost is one footer read
-        # per file at planning time, so large stores should compact()
-        # periodically anyway.
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        # schemas — see ``pushx`` docstring. Merging reads every
+        # file's footer in a Spark job; read_parquet runs that job only
+        # when the store's files changed since the last read, so the
+        # first read after a write pays it and later reads do not.
+        return read_parquet(self.spark, self.path, merge_schema=True)
 
     def pushx(
         self,
@@ -295,11 +318,16 @@ class OrdinalStore:
         write → one index write pipeline
         (dynamic_vector_manage_service.rs:290-330): rowids are assigned
         shuffle-free and are ALREADY strictly increasing within each
-        partition by construction (offset + the low-33-bit record
-        number of ``monotonically_increasing_id``, and the broadcast
-        offset join preserves probe-side row order), so row-group
-        stats are pruning-friendly without any sort, and one atomic
-        parquet append commits it.
+        partition by construction (the partition's constant offset +
+        the low-33-bit record number of ``monotonically_increasing_id``,
+        a per-row projection that keeps row order), so row-group stats
+        are pruning-friendly without any sort, and one atomic parquet
+        append commits it.
+
+        A list of rows (``push``, ``IngestBuffer.flush``) is already on
+        the driver and in order: it is written as ONE partition whose
+        rowid is ``start`` + its position, one job and one file, with no
+        persist and no counting job.
 
         Schema evolution [EXT — the reference's schemas are fixed at
         compile time, dynamic-vector-macro]: a batch may ADD nullable
@@ -329,33 +357,46 @@ class OrdinalStore:
         batch; the reference under the same crash instead LOSES its
         whole buffer, writable_cache.rs has no WAL).
         """
+        n_rows = 0
         if not isinstance(batch, DataFrame):
-            batch = self.spark.createDataFrame(list(batch), schema=self.schema)
+            rows = list(batch)
+            n_rows = len(rows)
+            batch = self.spark.createDataFrame(rows, schema=self.schema)
         with self._write_lock, self._process_write_lock():
             if txn is not None and txn[1] <= self.last_committed_epoch(txn[0]):
                 return -1
             start = self.count()
-            # Persist the tagged frame so the counts action and the write
-            # see the SAME partitioning even for non-deterministic sources
-            # (shuffles, sampled/rand inputs) — without this, drift between
-            # the two evaluations could assign non-dense or duplicate
-            # ordinals silently.
-            tagged = batch.withColumn("_mid", F.monotonically_increasing_id())
-            if not deterministic_source:
-                tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                out, written = _dense_rowid_frame(tagged, start)
-                # r14: no sortWithinPartitions — rowid is provably in
-                # physical row order within every partition (see the
-                # docstring), so the old sort was a semantic no-op that
-                # still paid a full Tungsten sort pass over the batch
-                # (alternating A/B on the 1M-row w1 append: min 2.08 s
-                # -> 1.62 s). A plan test pins the written files
-                # rowid-ordered.
-                out.write.mode("append").parquet(self.path)
-            finally:
+            if n_rows:
+                written = n_rows
+                (
+                    batch.coalesce(1)
+                    .withColumn(ROWID, _rowid(F.lit(start), F.monotonically_increasing_id()))
+                    .write.mode("append")
+                    .parquet(self.path)
+                )
+            else:
+                # Persist the tagged frame so the counts action and the
+                # write see the SAME partitioning even for
+                # non-deterministic sources (shuffles, sampled/rand
+                # inputs) — without this, drift between the two
+                # evaluations could assign non-dense or duplicate
+                # ordinals silently.
+                tagged = batch.withColumn("_mid", F.monotonically_increasing_id())
                 if not deterministic_source:
-                    tagged.unpersist()
+                    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+                try:
+                    out, written = _dense_rowid_frame(tagged, start)
+                    # r14: no sortWithinPartitions — rowid is provably in
+                    # physical row order within every partition (see the
+                    # docstring), so the old sort was a semantic no-op
+                    # that still paid a full Tungsten sort pass over the
+                    # batch (alternating A/B on the 1M-row w1 append: min
+                    # 2.08 s -> 1.62 s). A plan test pins the written
+                    # files rowid-ordered.
+                    out.write.mode("append").parquet(self.path)
+                finally:
+                    if not deterministic_source:
+                        tagged.unpersist()
             self._write_meta(start + written, txn=txn)
             self._reconciled = True
             return start
@@ -369,7 +410,7 @@ class OrdinalStore:
         """Contiguous range read by ordinal (reference `pullx`).
 
         A rowid BETWEEN predicate pushed into the Parquet scan; with
-        sorted-on-write row groups this touches only the overlapping
+        rowid-ordered row groups this touches only the overlapping
         groups — the analog of the reference's single spanning blob
         read (dynamic_vector_manage_service.rs:332-359).
 
@@ -487,8 +528,8 @@ class OrdinalStore:
         that is a full-data shuffle, so callers that don't need a
         globally-ordered *stream* (most analytics: joins, aggs,
         dedup) should pass ``ordered=False`` and keep the scan
-        shuffle-free; files are already sorted by rowid internally
-        (sortWithinPartitions on write), so per-file order is free.
+        shuffle-free; files already hold rowids in ascending order
+        (see ``pushx``), so per-file order is free.
         """
         df = self._df()
         return df.orderBy(ROWID) if ordered else df
@@ -498,12 +539,13 @@ class OrdinalStore:
 
         The write path makes every parquet file a contiguous,
         non-overlapping rowid span (``_dense_rowid_frame`` hands each
-        task a contiguous range; ``sortWithinPartitions`` + one file
-        per task keeps it that way; ``compact()`` preserves it via
-        ``repartitionByRange``). This validates that invariant from
-        the actual footer stats — min/max/count per file, sorted —
-        and raises if any gap or overlap is found (a torn layout must
-        fail loudly, not export silently misordered data).
+        task a contiguous range in row order, a row list is written as
+        one task, and one file per task keeps it that way;
+        ``compact()`` preserves it via ``repartitionByRange``). This
+        validates that invariant from the actual footer stats —
+        min/max/count per file, sorted — and raises if any gap or
+        overlap is found (a torn layout must fail loudly, not export
+        silently misordered data).
         """
         spans = self.stats()
         expected = 0
@@ -536,8 +578,8 @@ class OrdinalStore:
         replication, sequential audit — can read file after file and
         never shuffle anything: the same pattern lakehouse formats
         use for sorted exports. Rows inside each yielded frame are in
-        on-disk rowid order (sorted on write; parquet splits preserve
-        it). Each frame is also independently re-sortable at
+        on-disk rowid order (ascending as written; parquet splits
+        preserve it). Each frame is also independently re-sortable at
         file-local cost if a hard ordering guarantee is required
         downstream.
         """
@@ -562,8 +604,8 @@ class OrdinalStore:
         scan whose file fits in one split (``<= spark.sql.files.
         maxPartitionBytes`` — the write path sizes files below this)
         is exactly one partition whose rows come back in on-disk
-        order, which IS rowid order (``sortWithinPartitions`` on
-        write, validated by ``ordered_spans``). So partition i of the
+        order, which IS rowid order (ascending as written, validated
+        by ``ordered_spans``). So partition i of the
         result is file i, rows ordered within and across partitions —
         global order with zero shuffle and zero sort, where
         ``getall(ordered=True)`` pays a range-sampling re-scan plus a

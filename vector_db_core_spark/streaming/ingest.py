@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -157,12 +157,11 @@ class IngestBuffer:
             return base
         start = self.store.count()
         pend = self.store.spark.createDataFrame(list(self._pending), schema=self.store.schema)
-        # provisional ordinals = arrival order past the committed end;
-        # the pending list is driver-local and small by design, so a
-        # single-partition window over it is bounded and exact
-        w = Window.orderBy(F.monotonically_increasing_id())
+        # provisional ordinals = arrival order past the committed end,
+        # numbered the way pushx numbers a flushed list: one partition,
+        # start + position
         pend = pend.coalesce(1).withColumn(
-            ROWID, (F.lit(start) + F.row_number().over(w) - 1).cast("long")
+            ROWID, F.lit(start) + F.monotonically_increasing_id()
         )
         return base.unionByName(pend.select(base.columns))
 
