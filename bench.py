@@ -25,19 +25,22 @@ Headline queries exclude the all-pairs O(n²) correctness baselines
 scale you run their scale-path variants (`dedup_minhash_lsh_pairs`,
 `sim_ann_lsh_topk`), exactly as you would at 100 TB.
 
-Query execution is timed with a `noop`-format write: the full plan
-executes on the executors and nothing funnels through the driver, so
-the number measures the engine, not row serialization to Python.
+Every query is timed by ``tools/measure.time_query``: from the call
+of its registered callable to the end of a `noop`-format write of its
+result. Work a callable does while it is built (eager collects,
+iterative loops, streaming replays, scratch builds) is therefore
+counted, and the sink executes the full plan on the executors with
+nothing funneled through the driver.
 
-Headline rows are best-of-2 (both samples recorded under "samples"):
+Query rows are best-of-2 (both samples recorded under "samples"):
 one warm-up query cannot JIT every codegen shape in the suite, so a
 first run occasionally absorbs a one-time whole-stage compilation that
 a steady-state cluster session never re-pays (the q3 0.93 s -> 1.58 s
 run-order artifact in BENCH_r04, documented BASELINE.md §C, which
 already adopted best-of-2 for the scale-slope batches). The min of two
 runs is the steady-state engine number; the second sample re-plans
-from scratch (fresh DataFrame), so only JVM JIT state is shared, not
-Spark cached data.
+from scratch (fresh DataFrame) after ``time_query`` cleared the cache,
+so only JVM JIT state is shared, not Spark cached data.
 """
 
 from __future__ import annotations
@@ -50,6 +53,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools.measure import time_query, warm_up  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -229,7 +234,6 @@ HEADLINE = [
     "pipeline_token_budget_packing",
     "timeseries_theta_forecast",
     "sim_random_projection_energy",
-    # the bridge fixpoint builds eagerly -> HEADLINE_INCLUSIVE
     "graph_bridge_edges",
     # round-13 wave 4: eval hygiene + adaptive retrieval
     "pipeline_contamination_ngram_overlap",
@@ -237,6 +241,55 @@ HEADLINE = [
     "agg_cohens_kappa",
     "quality_uniqueness_approx",
 ]
+
+# Structured Streaming replays, timed OUTSIDE the headline so the
+# headline band stays comparable across rounds (a replay pays
+# landing-dir parquet writes + stream start/stop on top of the query
+# itself — a different workload class). A single-shot replay sample
+# swings 2.6-17 s on a busy host (stream start/stop + state-store init
+# dominate and are cache-sensitive), hence best-of-2 here too.
+STREAMING = (
+    "streaming_tumbling_counts_replay",
+    "streaming_session_counts_replay",
+    "streaming_dedup_watermark_replay",
+    "streaming_interval_join_replay",
+    # round-6: the flagship dedup against a live ingest feed, in both
+    # emission forms (post-sink distinct vs in-stream
+    # dropDuplicatesWithinWatermark)
+    "streaming_minhash_dedup_replay",
+    "streaming_minhash_dedup_instream",
+    "streaming_ewma_daily_replay",
+    "streaming_cdc_upsert_replay",
+    # round-11: the standing KMV distinct sketch
+    "streaming_kmv_distinct_replay",
+    # round-12: incrementally-maintained BM25 postings
+    "streaming_bm25_stats_replay",
+)
+
+# Iterative/spectral section (r7 verdict task 4): the catalog's most
+# expensive queries, tracked round-over-round OUTSIDE the headline
+# band. Each materializes eagerly during construction (checkpointed
+# loops, persisted loop state).
+ITERATIVE = (
+    "graph_pagerank_exact",
+    "sim_pca_power_iteration_exact",
+    # round-8: the wedge join is the catalog's next-heaviest plan (1.9M
+    # triangles at sf0.1) — tracked like the others
+    "graph_triangle_clustering",
+    # round-9: the DOULION scale twin, beside its exact op
+    "graph_triangle_estimate",
+    # round-10: the k-core peel loop (eager persist+count rounds over
+    # the shared edge scratch)
+    "graph_kcore_peeling",
+    # round-11: min-label propagation to the fixpoint (eager per-round
+    # label-sum collects over the shared scratch)
+    "graph_connected_components",
+    # NOT tracked: graph_jaccard_link_prediction — the all-pairs
+    # baseline (67.8 s at sf0.1, Σ C(d,2) wedge generation) is
+    # quarantined at correctness scale exactly like
+    # dedup_ngram_jaccard_pairs, which is also unbenched; the headline
+    # carries its seeded serving twin
+)
 
 # NOTE (round 10, r9 verdict task 7): `pipeline_nb_language_filter`
 # was a headline row r7-r9 but its meaning changed when the trio moved
@@ -255,64 +308,23 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-# Headline rows whose query BUILD is eager (the two-phase rank's
-# per-partition-counts collect runs at construction): time the whole
-# callable, or the sample would miss the ranking shuffle entirely.
-HEADLINE_INCLUSIVE = {
-    "agg_gini_customer_spend",
-    "agg_lorenz_deciles",
-    # the MMR greedy runs at construction over its bounded collected
-    # pool — sink-only timing would measure a 10-row materialization
-    "sim_mmr_diversified_topk",
-    # the per-edge reachability fixpoint loop runs at construction;
-    # sink-only timing would measure the bounded bridge list
-    "graph_bridge_edges",
-}
-
-
-def run_query(queries, name, spark) -> float:
-    inclusive = name in HEADLINE_INCLUSIVE
-    t0 = time.perf_counter()
-    df = queries[name](spark, SF_DIR)
-    if not inclusive:
-        t0 = time.perf_counter()
-    df.write.mode("overwrite").format("noop").save()
-    secs = time.perf_counter() - t0
-    # a few registered queries persist() a shared intermediate (the
-    # DSIR / LM-scoring doc-term-frequency replans): drop it so the
-    # NEXT sample recomputes from parquet (best-of-2 must never read
-    # Spark-materialized data) and cached blocks don't accumulate
-    # across the headline
-    spark.catalog.clearCache()
-    return secs
-
-
-def run_query_best_of_2(queries, name, spark) -> tuple[float, list[float]]:
-    """Best-of-2 with both samples; each run builds a fresh DataFrame.
-
-    Rebuilding the DataFrame re-runs analysis/optimization/codegen
-    lookup, so run 2 differs from run 1 only in already-JITed JVM code
-    and OS page cache — the two things a steady-state session holds.
-    The queries that persist() a shared intermediate (DSIR, the
-    LM-scoring family) are followed by clearCache() inside run_query,
-    so run 2 cannot read Spark-materialized data there either.
-    """
-    samples = [run_query(queries, name, spark) for _ in range(2)]
-    return min(samples), samples
-
-
-def run_query_inclusive(queries, name, spark) -> float:
-    """Time the WHOLE callable, not just the result materialization.
-
-    The streaming replays execute their pipeline (landing-dir write,
-    stream start, awaitTermination) inside the callable and return an
-    already-materialized memory table — `run_query` would time only a
-    scan of that table (~0.05s) and miss the actual work.
-    """
-    t0 = time.perf_counter()
-    df = queries[name](spark, SF_DIR)
-    df.write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
+def best_of_2(spark, queries, names, times, samples, errors) -> None:
+    """Two ``time_query`` samples per name; the min goes to ``times``,
+    both to ``samples``, a failure to ``errors``."""
+    for name in names:
+        if name not in queries:
+            errors[name] = "unknown query"
+            log(f"bench: skipping unknown query {name}")
+            continue
+        try:
+            pair = [time_query(spark, queries[name], SF_DIR, name)[0] for _ in range(2)]
+        except Exception as exc:  # noqa: BLE001 - record and continue
+            errors[name] = _short_err(exc)
+            log(f"bench: {name} FAILED: {exc}")
+            continue
+        times[name] = round(min(pair), 3)
+        samples[name] = [round(s, 3) for s in pair]
+        log(f"bench: {name} {min(pair):.3f}s (samples {pair[0]:.3f}/{pair[1]:.3f})")
 
 
 def _short_err(exc: BaseException) -> str:
@@ -448,11 +460,12 @@ def bench_buffer(spark, path: str) -> dict[str, float]:
 def bench_nb_trio(spark, queries) -> tuple[dict[str, float], dict[str, list[float]]]:
     """The filter-evaluation trio under its shared-fit contract: reset
     the scored-frame scratch, then run filter -> calibration ->
-    confusion inclusively. The filter row pays the ONE fit + scratch
-    write; the other two must be reduction-only reads (the round-8
-    verdict's sharing win, kept visible round-over-round). Best-of-2
-    per step; the scratch resets before each round so sample 2 re-fits."""
-    from vector_db_core_spark.operators.pipeline import _nb_scored_reset
+    confusion. The filter row pays the ONE fit + scratch write; the
+    other two must be reduction-only reads (the round-8 verdict's
+    sharing win, kept visible round-over-round). Best-of-2 per step;
+    the scratch resets before each round so sample 2 re-fits."""
+    from vector_db_core_spark import scratch
+    from vector_db_core_spark.operators import pipeline
 
     names = (
         "pipeline_nb_language_filter",
@@ -461,12 +474,9 @@ def bench_nb_trio(spark, queries) -> tuple[dict[str, float], dict[str, list[floa
     )
     pairs: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(2):
-        _nb_scored_reset()
-        spark.catalog.clearCache()
+        scratch.reset(pipeline._NB_SCRATCH_KEY)
         for n in names:
-            t0 = time.perf_counter()
-            queries[n](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            pairs[n].append(time.perf_counter() - t0)
+            pairs[n].append(time_query(spark, queries[n], SF_DIR, n)[0])
     times = {f"nb_trio_{n}": round(min(p), 3) for n, p in pairs.items()}
     samples = {f"nb_trio_{n}": [round(s, 3) for s in p] for n, p in pairs.items()}
     return times, samples
@@ -545,86 +555,36 @@ def main() -> None:
 
         queries = entrymod.queries()
 
-        # Session warm-up, untimed: one join+agg+sort of the same shape
-        # as the suite JIT-compiles the whole-stage codegen paths every
-        # headline query shares. A fresh JVM pays ~11s of one-time
-        # compilation on its first complex plan (measured: q3 13.7s
-        # cold vs 2.5s steady); a long-running cluster session pays it
-        # once per lifetime, so the steady-state number is the honest
-        # engine throughput. Deliberately NOT a headline query — every
-        # timed number is then a first-run-in-session timing, uniformly.
         try:
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            cust = spark.read.parquet(os.path.join(SF_DIR, "customer.parquet"))
-            orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
-            (
-                cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
-                .groupBy("c_mktsegment")
-                .agg(F.sum("o_totalprice").alias("s"), F.count("*").alias("n"))
-                .orderBy(F.desc("s"))
-                .collect()
-            )
+            warm_up(spark, SF_DIR)
         except Exception as exc:  # noqa: BLE001 - warm-up is best-effort
             log(f"bench: warm-up failed (continuing): {exc}")
 
-        # Shared co-purchase edge scratch (r10, r9 verdict task 2):
-        # the whole graph family reads one pid-keyed scratch parquet
-        # built at most once per session. Reset + time the TRUE build
-        # here, before any consumer, so every graph row downstream
-        # (headline degree distribution, iterative PageRank/triangles)
-        # times its own work over a scan, never a hidden rebuild.
-        try:
-            from vector_db_core_spark.operators.analytics import (
-                _co_purchase_edges_reset,
-                _co_purchase_edges_table,
-            )
+        # Session-shared scratch tables (scratch.cached_table): the
+        # graph family reads one co-purchase edge parquet and the
+        # MinHash estimator row + threshold curve read one candidate-
+        # pair parquet, each built at most once per session. Reset and
+        # time the TRUE build here, before any consumer, so every
+        # downstream row times its own work over a scan, never a
+        # hidden rebuild.
+        from vector_db_core_spark import scratch
+        from vector_db_core_spark.operators import analytics, llm
 
-            _co_purchase_edges_reset()
-            t0 = time.perf_counter()
-            _co_purchase_edges_table(spark, SF_DIR)
-            secs = time.perf_counter() - t0
-            iterative_times["graph_edge_build"] = round(secs, 3)
-            log(f"bench: graph_edge_build {secs:.3f}s (one per session)")
-        except Exception as exc:  # noqa: BLE001 - record and continue
-            errors["graph_edge_build"] = _short_err(exc)
-            log(f"bench: graph_edge_build FAILED: {exc}")
-
-        # Shared MinHash-estimator scratch (r11, r10 verdict task 3):
-        # the estimator row and the threshold operating curve read one
-        # candidate-pair scratch parquet per session. Reset + time the
-        # TRUE signature build here so both downstream rows time a
-        # scan + reduction, never a hidden rebuild.
-        try:
-            from vector_db_core_spark.operators.llm import (
-                _minhash_est_reset,
-                _minhash_est_table,
-            )
-
-            _minhash_est_reset()
-            t0 = time.perf_counter()
-            _minhash_est_table(spark, SF_DIR)
-            secs = time.perf_counter() - t0
-            iterative_times["minhash_est_build"] = round(secs, 3)
-            log(f"bench: minhash_est_build {secs:.3f}s (one per session)")
-        except Exception as exc:  # noqa: BLE001 - record and continue
-            errors["minhash_est_build"] = _short_err(exc)
-            log(f"bench: minhash_est_build FAILED: {exc}")
-
-        for name in HEADLINE:
-            if name not in queries:
-                errors[name] = "unknown query"
-                log(f"bench: skipping unknown query {name}")
-                continue
+        for name, key, build in (
+            ("graph_edge_build", analytics._CO_EDGE_SCRATCH_KEY, analytics._co_purchase_edges_table),
+            ("minhash_est_build", llm._MINHASH_EST_SCRATCH_KEY, llm._minhash_est_table),
+        ):
             try:
-                secs, pair = run_query_best_of_2(queries, name, spark)
+                scratch.reset(key)
+                secs = time_query(spark, build, SF_DIR, name)[0]
             except Exception as exc:  # noqa: BLE001 - record and continue
                 errors[name] = _short_err(exc)
                 log(f"bench: {name} FAILED: {exc}")
                 continue
-            per_query[name] = round(secs, 3)
-            samples[name] = [round(s, 3) for s in pair]
-            log(f"bench: {name} {secs:.3f}s (samples {pair[0]:.3f}/{pair[1]:.3f})")
+            iterative_times[name] = round(secs, 3)
+            log(f"bench: {name} {secs:.3f}s (one per session)")
+
+        best_of_2(spark, queries, HEADLINE, per_query, samples, errors)
 
         try:
             store_times = bench_store(spark)
@@ -634,89 +594,8 @@ def main() -> None:
             errors["store_workloads"] = _short_err(exc)
             log(f"bench: store workloads FAILED: {exc}")
 
-        # Structured Streaming replays, timed OUTSIDE the headline so
-        # the headline band stays comparable across rounds (a replay
-        # pays landing-dir parquet writes + stream start/stop on top
-        # of the query itself — a different workload class).
-        for name in (
-            "streaming_tumbling_counts_replay",
-            "streaming_session_counts_replay",
-            "streaming_dedup_watermark_replay",
-            "streaming_interval_join_replay",
-            # round-6: the flagship dedup against a live ingest feed,
-            # in both emission forms (post-sink distinct vs in-stream
-            # dropDuplicatesWithinWatermark)
-            "streaming_minhash_dedup_replay",
-            "streaming_minhash_dedup_instream",
-            "streaming_ewma_daily_replay",
-            "streaming_cdc_upsert_replay",
-            # round-11: the standing KMV distinct sketch
-            "streaming_kmv_distinct_replay",
-            # round-12: incrementally-maintained BM25 postings
-            "streaming_bm25_stats_replay",
-        ):
-            if name not in queries:
-                continue
-            # best-of-2 like the headline (round-6): a single-shot
-            # replay sample swings 2.6-17 s on a busy host (stream
-            # start/stop + state-store init dominate and are
-            # cache-sensitive); both samples recorded for audit.
-            try:
-                pair = [
-                    run_query_inclusive(queries, name, spark),
-                    run_query_inclusive(queries, name, spark),
-                ]
-            except Exception as exc:  # noqa: BLE001 - record and continue
-                errors[name] = _short_err(exc)
-                log(f"bench: {name} FAILED: {exc}")
-                continue
-            secs = min(pair)
-            streaming_times[name] = round(secs, 3)
-            samples[name] = [round(s, 3) for s in pair]
-            log(f"bench: {name} {secs:.3f}s (samples {pair[0]:.3f}/{pair[1]:.3f})")
-
-        # Iterative/spectral section (r7 verdict task 4): the
-        # catalog's most expensive queries, tracked round-over-round
-        # OUTSIDE the headline band. Both materialize eagerly during
-        # construction (the checkpointed PageRank loop; the persisted
-        # covariance cells the 8 mat-vec iterations reuse), so they
-        # are timed inclusively like the streaming replays, with a
-        # clearCache between samples so run 2 recomputes from parquet.
-        for name in (
-            "graph_pagerank_exact",
-            "sim_pca_power_iteration_exact",
-            # round-8: the wedge join is the catalog's next-heaviest
-            # plan (1.9M triangles at sf0.1) — tracked like the others
-            "graph_triangle_clustering",
-            # round-9: the DOULION scale twin, beside its exact op
-            "graph_triangle_estimate",
-            # round-10: the k-core peel loop (eager persist+count
-            # rounds over the shared edge scratch)
-            "graph_kcore_peeling",
-            # round-11: min-label propagation to the fixpoint (eager
-            # per-round label-sum collects over the shared scratch)
-            "graph_connected_components",
-            # NOT tracked: graph_jaccard_link_prediction — the
-            # all-pairs baseline (67.8 s at sf0.1, Σ C(d,2) wedge
-            # generation) is quarantined at correctness scale exactly
-            # like dedup_ngram_jaccard_pairs, which is also unbenched;
-            # the headline carries its seeded serving twin
-        ):
-            if name not in queries:
-                continue
-            try:
-                pair = []
-                for _ in range(2):
-                    pair.append(run_query_inclusive(queries, name, spark))
-                    spark.catalog.clearCache()
-            except Exception as exc:  # noqa: BLE001 - record and continue
-                errors[name] = _short_err(exc)
-                log(f"bench: {name} FAILED: {exc}")
-                continue
-            secs = min(pair)
-            iterative_times[name] = round(secs, 3)
-            samples[name] = [round(s, 3) for s in pair]
-            log(f"bench: {name} {secs:.3f}s (samples {pair[0]:.3f}/{pair[1]:.3f})")
+        best_of_2(spark, queries, STREAMING, streaming_times, samples, errors)
+        best_of_2(spark, queries, ITERATIVE, iterative_times, samples, errors)
 
         try:
             trio_times, trio_samples = bench_nb_trio(spark, queries)

@@ -4,6 +4,7 @@ schema-reflection util (M1)."""
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
@@ -584,7 +585,7 @@ def test_graph_family_builds_edges_once_per_session(spark):
     from vector_db_core_spark import scratch
     from vector_db_core_spark.operators import analytics as A
 
-    A._co_purchase_edges_reset()
+    scratch.reset(A._CO_EDGE_SCRATCH_KEY)
     before = A._co_edge_build_count()
     QUERIES["graph_degree_distribution"](spark, SF_ORACLE).collect()
     assert A._co_edge_build_count() == before + 1
@@ -1310,7 +1311,7 @@ def test_minhash_estimator_builds_once_per_session(spark):
     from vector_db_core_spark import scratch
     from vector_db_core_spark.operators import llm as L
 
-    L._minhash_est_reset()
+    scratch.reset(L._MINHASH_EST_SCRATCH_KEY)
     before = scratch.build_count(L._MINHASH_EST_SCRATCH_KEY)
     QUERIES["dedup_minhash_md5_estimate"](spark, SF_ORACLE).collect()
     assert scratch.build_count(L._MINHASH_EST_SCRATCH_KEY) == before + 1
@@ -1812,3 +1813,118 @@ def test_residual_anomalies_zero_variance_emits_nothing(spark, tmp_path):
     duck = con.sql(ORACLE["timeseries_residual_anomalies"])
     assert compare_spark_duck(got, duck) == []
     con.close()
+
+
+def test_theta_forecast_matches_python_recurrence(spark):
+    """Re-run the theta pipeline (OLS sums -> exact-scale theta-2 line
+    -> integer SES -> combination forecast) in pure Python from the
+    raw daily series and require bit-identical output columns."""
+    con = duckdb.connect()
+    daily = con.sql(
+        f"SELECT event_type, CAST(ts AS DATE) AS day,"
+        f" SUM(CAST(round(value * 100) AS BIGINT)) AS cents"
+        f" FROM '{SF_ORACLE}/events.parquet' GROUP BY 1, 2 ORDER BY 1, 2"
+    ).fetchall()
+    series: dict = {}
+    for et, _day, cents in daily:
+        series.setdefault(et, []).append(cents)
+    expect = {}
+    for et, ys in series.items():
+        n = len(ys)
+        sx = n * (n + 1) // 2
+        sxx = sum((i + 1) * (i + 1) for i in range(n))
+        sy = sum(ys)
+        sxy = sum((i + 1) * y for i, y in enumerate(ys))
+        num = n * sxy - sx * sy
+        den = n * sxx - sx * sx
+        s = None
+        for i, y in enumerate(ys):
+            z = 2 * y * n * den - (sy * den - num * sx) - n * num * (i + 1)
+            if s is None:
+                s = z
+            else:
+                v = z + s + 1
+                s = (abs(v) - abs(v) % 2) // 2 * (1 if v >= 0 else -1)
+        lin0 = sy * den - num * sx
+
+        def fc(h):
+            return round((lin0 + n * num * (n + h) + s) / (2.0 * n * den) / 100.0, 6)
+
+        expect[et] = (
+            n,
+            round(num / den / 100.0, 6),
+            round(lin0 / (float(n) * den) / 100.0, 6),
+            round(s / (float(n) * den) / 100.0, 6),
+            fc(1),
+            fc(2),
+            fc(3),
+        )
+    got = QUERIES["timeseries_theta_forecast"](spark, SF_ORACLE).collect()
+    assert len(got) == len(expect)
+    for r in got:
+        e = expect[r.event_type]
+        assert (
+            r.n_days,
+            r.slope_daily,
+            r.intercept,
+            r.ses_theta2_last,
+            r.forecast_1,
+            r.forecast_2,
+            r.forecast_3,
+        ) == e, r.event_type
+
+
+def test_stickiness_bounds_and_identity(spark):
+    """stickiness = avg_dau / active_users in (0, 1]; user_days is an
+    exact upper bound composition: active_users <= user_days <=
+    active_users * n_days; the week rows partition the month row's
+    user_days exactly (each user-day belongs to one week)."""
+    rows = QUERIES["cohort_stickiness_dau_mau"](spark, SF_ORACLE).collect()
+    months = [r for r in rows if r.grain == "month"]
+    weeks = [r for r in rows if r.grain == "week"]
+    assert months and weeks
+    for r in rows:
+        assert 0 < r.stickiness <= 1.0, r
+        assert r.active_users <= r.user_days <= r.active_users * r.n_days, r
+        assert abs(r.avg_dau - r.user_days / r.n_days) < 1e-6, r
+    assert sum(w.user_days for w in weeks) == sum(m.user_days for m in months)
+
+
+def test_session_gap_bands_conserve_sessions(spark):
+    """Band counts must sum to (sessions - users-with-sessions): each
+    user with k sessions contributes exactly k-1 inter-session gaps."""
+    con = duckdb.connect()
+    (n_sessions, n_users) = con.sql(
+        f"""
+        WITH t AS (SELECT user_id, ts,
+                     CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                               > INTERVAL '30 minutes'
+                          OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                          THEN 1 ELSE 0 END AS brk
+                   FROM '{SF_ORACLE}/events.parquet')
+        SELECT CAST(SUM(brk) AS BIGINT), COUNT(DISTINCT user_id)
+        FROM t
+        """
+    ).fetchall()[0]
+    rows = QUERIES["window_session_gaps"](spark, SF_ORACLE).collect()
+    assert sum(r.n_gaps for r in rows) == n_sessions - n_users
+    assert abs(sum(r.share for r in rows) - 1.0) < 1e-4
+
+
+def test_cohens_kappa_identity(spark):
+    """kappa recomputed from the emitted 2x2 must match the emitted
+    kappa; cells must conserve the corpus; agreement must exceed
+    chance or the sign must say otherwise consistently."""
+    con = duckdb.connect()
+    (n_docs,) = con.sql(
+        f"SELECT COUNT(*) FROM '{SF_ORACLE}/documents.parquet'"
+    ).fetchall()[0]
+    (r,) = QUERIES["agg_cohens_kappa"](spark, SF_ORACLE).collect()
+    a, b, c, d, n = r.both_pass, r.a_only, r.b_only, r.neither, r.n
+    assert a + b + c + d == n == n_docs
+    po = (a + d) / n
+    pe = ((a + b) * (a + c) + (c + d) * (b + d)) / (n * n)
+    assert abs(r.po - round(po, 6)) < 1e-9
+    assert abs(r.pe - round(pe, 6)) < 1e-9
+    assert abs(r.cohens_kappa - round((po - pe) / (1 - pe), 6)) < 1e-9
+    assert -1.0 <= r.cohens_kappa <= 1.0

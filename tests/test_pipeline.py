@@ -5,6 +5,7 @@ chunking)."""
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -348,7 +349,7 @@ def test_nb_trio_fits_once_per_session(spark):
     from vector_db_core_spark import scratch
     from vector_db_core_spark.operators import pipeline as P
 
-    P._nb_scored_reset()
+    scratch.reset(P._NB_SCRATCH_KEY)
     before = P._nb_fit_count()
     QUERIES["pipeline_quality_calibration"](spark, SF_ORACLE).collect()
     assert P._nb_fit_count() == before + 1
@@ -486,3 +487,70 @@ def test_lang_confusion_cells_complete_and_english_separable(spark):
     for lang, cells in by_lang.items():
         if lang != "en":
             assert cells.get(True, (0, 0.0))[1] < en_rate, (lang, en_rate)
+
+
+def test_token_budget_packing_invariants(spark):
+    """No sequence may exceed the budget; no document straddles; slots
+    within a (shard, bucket, seq) are dense from 0; oversize docs are
+    reported, never placed; pad is bucket - tokens."""
+    rows = QUERIES["pipeline_token_budget_packing"](spark, SF_ORACLE).collect()
+    from collections import defaultdict
+
+    seqs = defaultdict(list)
+    n_over = 0
+    for r in rows:
+        if r.bucket == -1:
+            n_over += 1
+            assert r.seq_id is None and r.slot is None and r.offset is None
+            assert r.n_tokens > 64
+            continue
+        assert r.n_tokens <= r.bucket <= 64
+        assert r.pad_tokens == r.bucket - r.n_tokens
+        assert r.offset == r.slot * r.bucket
+        assert r.offset + r.bucket <= 64, "placement exceeds the budget"
+        seqs[(r.shard_id, r.bucket, r.seq_id)].append(r.slot)
+    assert n_over > 0, "fixture must exercise the oversize branch"
+    for key, slots in seqs.items():
+        cap = 64 // key[1]
+        assert sorted(slots) == list(range(len(slots))), key
+        assert len(slots) <= cap, key
+
+
+def test_contamination_against_independent_recompute(spark):
+    """Re-derive the contamination table in DuckDB-free Python sets
+    from raw parquet and require exact per-doc agreement, plus the
+    split-rule sanity: every reported doc is in the md5-'f' held-out
+    split and both branches of the flag are exercised."""
+    import hashlib as _h
+
+    con = duckdb.connect()
+    rows = con.sql(
+        f"SELECT doc_id, text FROM '{SF_ORACLE}/documents.parquet'"
+    ).fetchall()
+    spans = {}
+    for doc_id, text in rows:
+        toks = [t for t in text.split() if t]
+        if len(toks) < 8:
+            continue
+        spans[doc_id] = {
+            " ".join(toks[i : i + 8]) for i in range(len(toks) - 7)
+        }
+    is_test = {
+        d: _h.md5(str(d).encode()).hexdigest()[0] == "f" for d in spans
+    }
+    train = set()
+    for d, s in spans.items():
+        if not is_test[d]:
+            train |= s
+    got = QUERIES["pipeline_contamination_ngram_overlap"](
+        spark, SF_ORACLE
+    ).collect()
+    assert {r.doc_id for r in got} == {d for d in spans if is_test[d]}
+    flags = set()
+    for r in got:
+        s = spans[r.doc_id]
+        hits = sum(1 for sp in s if sp in train)
+        assert (r.n_spans, r.n_contaminated) == (len(s), hits), r.doc_id
+        assert r.flagged == (hits * 5 >= len(s)), r.doc_id
+        flags.add(bool(r.flagged))
+    assert flags == {True, False}, "fixture must exercise both flag branches"

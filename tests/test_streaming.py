@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
+from vector_db_core_spark.operators import QUERIES
 from vector_db_core_spark.store import OrdinalStore
 from vector_db_core_spark.streaming import (
     IngestBuffer,
@@ -112,6 +113,9 @@ def test_ingest_buffer_union_view(spark, tmp_path):
     buf.pushx([{"my_number1": 80 + i, "my_string1": f"q{i}", "my_number2": 0} for i in range(70)])
     assert buf.lens()[0] == 0  # drained
     assert store.count() == 150
+    # the flush committed the pending rows under the provisional ids read() showed
+    committed = store.pullx(50, 30).select(*view.columns).collect()
+    assert [r.asDict() for r in committed] == [r.asDict() for r in rows[50:]]
     # close() flushes the remainder (Drop analog)
     buf.push({"my_number1": 150, "my_string1": "last", "my_number2": 0})
     assert buf.close() == 1
@@ -567,3 +571,22 @@ def test_late_data_replay_drops_replayed_file(spark):
         .count()
     )
     assert open_windows >= 1  # something really was withheld
+
+
+def test_streaming_contamination_matches_batch(spark):
+    """The streaming guard must be row-identical to the batch
+    contamination op — the third maintained-state twin beside the
+    BM25 and IVF replays, so replay-equality is the contract."""
+    batch = sorted(
+        tuple(r)
+        for r in QUERIES["pipeline_contamination_ngram_overlap"](
+            spark, SF_ORACLE
+        ).collect()
+    )
+    streamed = sorted(
+        tuple(r)
+        for r in QUERIES["streaming_contamination_guard_replay"](
+            spark, SF_ORACLE
+        ).collect()
+    )
+    assert streamed == batch and len(batch) > 0

@@ -2097,14 +2097,6 @@ def _co_edge_build_count() -> int:
     return scratch.build_count(_CO_EDGE_SCRATCH_KEY)
 
 
-def _co_purchase_edges_reset() -> None:
-    """Drop the scratch bookkeeping so the next consumer rebuilds
-    (bench hook: lets a timed sample pay the real build cost)."""
-    from vector_db_core_spark import scratch
-
-    scratch.reset(_CO_EDGE_SCRATCH_KEY)
-
-
 def _co_purchase_edges(spark: SparkSession, sf_dir: str):
     """Canonical (u < v, distinct) co-purchase edge list — the
     unweighted projection of the session-shared scratch table."""

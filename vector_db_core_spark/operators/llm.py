@@ -4982,13 +4982,6 @@ def _minhash_est_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_est_reset() -> None:
-    """Bench hook: next consumer pays the real signature build."""
-    from vector_db_core_spark import scratch
-
-    scratch.reset(_MINHASH_EST_SCRATCH_KEY)
-
-
 @register("dedup_minhash_md5_estimate", oracle=_MINHASH_MD5_SQL)
 def dedup_minhash_md5_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash ESTIMATION itself under the full hash gate: a 16-seed

@@ -1687,14 +1687,6 @@ def _nb_fit_count() -> int:
     return scratch.build_count(_NB_SCRATCH_KEY)
 
 
-def _nb_scored_reset() -> None:
-    """Drop the scratch bookkeeping so the next consumer re-fits
-    (bench hook: lets a timed sample pay the real fit cost)."""
-    from vector_db_core_spark import scratch
-
-    scratch.reset(_NB_SCRATCH_KEY)
-
-
 @register("pipeline_nb_language_filter", oracle=_NB_LANG_SQL)
 def pipeline_nb_language_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style LANGUAGE FILTER trained in-engine: a multinomial

@@ -18,11 +18,12 @@ reads more than once (the DSIR / LM-scoring doc-term-frequency table,
 the exact-PCA covariance cells, the exact-PageRank final ranks).
 Unpersisting inside the operator would forfeit the reuse the persist
 exists for, so release is the CALLER's job: any long-lived consumer
-iterating the registry (bench.py, tools/oracle_sweep.py,
-tools/scale_ladder.py, the external driver harness, tests via the
-oracle replica) must call ``spark.catalog.clearCache()`` after
-materializing each query, or cached blocks accumulate for the session
-lifetime. All in-repo consumers do; the cached tables are reduction-
+iterating the registry (bench.py and tools/measure.py through
+``measure.time_query``, tools/oracle_sweep.py, external consumers of
+``__spark_entry__``, tests via the oracle replica) must call
+``spark.catalog.clearCache()`` after materializing each query, or
+cached blocks accumulate for the session lifetime. All in-repo
+consumers do; the cached tables are reduction-
 sized (vocab / |labels|·d² / |nodes| rows), so even a consumer that
 skips the call degrades by bounded memory, not correctness.
 """

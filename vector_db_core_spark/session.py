@@ -48,17 +48,20 @@ def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | 
         # pin their own widths.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
         # r15: let the planner pick shuffled-hash join when its size
-        # conditions are met (guide §3.1/§9) instead of always
-        # preferring sort-merge. The iterative loops join a large
-        # cached edge table against a small per-iteration state frame:
-        # SMJ re-SORTS the 2|E| cached edge rows every iteration, SHJ
-        # builds the hash on the small state side and streams the
-        # edges unsorted. Quiet-host alternating A/B (two windows):
-        # pagerank med 9.14 -> 7.57 s / min 10.27 -> 6.65, CC and
-        # kcore flat-to-better, nothing worse. Cluster-safe: the
-        # planner only chooses SHJ when a build side fits its
-        # per-partition threshold, and falls back to SMJ otherwise —
-        # a size-gated preference, not a forced hint.
+        # conditions are met instead of always preferring sort-merge.
+        # The iterative loops join a large cached edge table against a
+        # per-iteration state frame; SMJ re-SORTS the 2|E| cached edge
+        # rows every iteration, SHJ does not. Quiet-host alternating
+        # A/B (two windows): pagerank med 9.14 -> 7.57 s / min
+        # 10.27 -> 6.65, CC and kcore flat-to-better, nothing worse.
+        # The hash is built on the CACHED EDGE side, not the small
+        # state: plans/r15/graph_pagerank_iteration_after_shj.txt shows
+        # `ShuffledHashJoin Inner BuildLeft` over the 2.39M-row edge
+        # cache. An SHJ build side cannot spill, so each task must hold
+        # its edge partition's hash table in memory; the planner's
+        # per-partition size gate works from estimated statistics.
+        # Keeping this conf engine-wide is an open decision that needs
+        # an A/B on every workload it touches.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

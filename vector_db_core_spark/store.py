@@ -111,6 +111,14 @@ def _dense_rowid_frame(tagged: DataFrame, start: int) -> tuple[DataFrame, int]:
     return out, total
 
 
+def with_list_rowid(df: DataFrame, start: int) -> DataFrame:
+    """Number a frame built from a driver-side row list: ONE partition
+    whose rowid is ``start`` + list position. The list is already in
+    order on the driver, so this needs no counting job, and writing it
+    is one job and one file."""
+    return df.coalesce(1).withColumn(ROWID, _rowid(F.lit(start), F.monotonically_increasing_id()))
+
+
 def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> DataFrame:
     """Assign a dense ``start``-based ordinal to every row, shuffle-free.
 
@@ -368,12 +376,7 @@ class OrdinalStore:
             start = self.count()
             if n_rows:
                 written = n_rows
-                (
-                    batch.coalesce(1)
-                    .withColumn(ROWID, _rowid(F.lit(start), F.monotonically_increasing_id()))
-                    .write.mode("append")
-                    .parquet(self.path)
-                )
+                with_list_rowid(batch, start).write.mode("append").parquet(self.path)
             else:
                 # Persist the tagged frame so the counts action and the
                 # write see the SAME partitioning even for

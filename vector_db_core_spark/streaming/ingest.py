@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from vector_db_core_spark.store import ROWID, OrdinalStore
+from vector_db_core_spark.store import OrdinalStore, with_list_rowid
 
 
 def stream_append_to_store(
@@ -156,12 +156,9 @@ class IngestBuffer:
         if not self._pending:
             return base
         start = self.store.count()
-        pend = self.store.spark.createDataFrame(list(self._pending), schema=self.store.schema)
-        # provisional ordinals = arrival order past the committed end,
-        # numbered the way pushx numbers a flushed list: one partition,
-        # start + position
-        pend = pend.coalesce(1).withColumn(
-            ROWID, F.lit(start) + F.monotonically_increasing_id()
+        # provisional ordinals are the ones flush() will commit
+        pend = with_list_rowid(
+            self.store.spark.createDataFrame(list(self._pending), schema=self.store.schema), start
         )
         return base.unionByName(pend.select(base.columns))
 
