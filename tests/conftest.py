@@ -61,6 +61,10 @@ FAST_ORACLE_SPOT = {
     "profile_functional_dependencies",
 }
 
+#: registry-only checks in test_oracle.py (no Spark session) that stay
+#: in the fast tier.
+FAST_ORACLE_TESTS = {"test_one_implementation_per_oracle"}
+
 #: dtype parity re-collects every row to pandas — keep an even smaller
 #: spot set there (the mechanism is identical across parameters).
 FAST_DTYPE_SPOT = {
@@ -90,7 +94,7 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         fname = item.fspath.basename
         if fname == "test_oracle.py":
-            if _param_of(item.name) not in FAST_ORACLE_SPOT:
+            if item.name not in FAST_ORACLE_TESTS and _param_of(item.name) not in FAST_ORACLE_SPOT:
                 item.add_marker(pytest.mark.slow)
         elif fname == "test_dtype_parity.py":
             if _param_of(item.name) not in FAST_DTYPE_SPOT:

@@ -586,12 +586,12 @@ def test_graph_family_builds_edges_once_per_session(spark):
     from vector_db_core_spark.operators import analytics as A
 
     scratch.reset(A._CO_EDGE_SCRATCH_KEY)
-    before = A._co_edge_build_count()
+    before = scratch.build_count(A._CO_EDGE_SCRATCH_KEY)
     QUERIES["graph_degree_distribution"](spark, SF_ORACLE).collect()
-    assert A._co_edge_build_count() == before + 1
+    assert scratch.build_count(A._CO_EDGE_SCRATCH_KEY) == before + 1
     QUERIES["graph_triangle_estimate"](spark, SF_ORACLE).collect()
     QUERIES["graph_pagerank_exact"](spark, SF_ORACLE).collect()
-    assert A._co_edge_build_count() == before + 1  # no further builds
+    assert scratch.build_count(A._CO_EDGE_SCRATCH_KEY) == before + 1  # no further builds
     df = QUERIES["graph_degree_distribution"](spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert scratch.path_for(A._CO_EDGE_SCRATCH_KEY, SF_ORACLE) in plan
@@ -1100,45 +1100,6 @@ def test_round12_wave3_invariants(spark):
         assert r.min_gap_us / 1e6 <= r.p50_gap_s <= r.p90_gap_s <= r.max_gap_us / 1e6
         assert r.min_gap_us / 1e6 <= r.mean_gap_s <= r.max_gap_us / 1e6
     spark.catalog.clearCache()
-
-
-def test_interarrival_stitched_row_identical(spark):
-    """The sessionize-and-stitch twin must reproduce the per-type
-    form's output exactly — the (type, day) decomposition plus
-    boundary stitch IS the same consecutive-diff multiset, so every
-    column (including the interpolated p50/p90) is bit-identical.
-    Also pins that the stitch is exercised: the fixture spans many
-    days, so each type's gap count exceeds its within-day gap count
-    (boundary gaps exist and are counted once each)."""
-    base = sorted(
-        tuple(r)
-        for r in QUERIES["timeseries_interarrival_stats"](
-            spark, SF_ORACLE
-        ).collect()
-    )
-    twin = sorted(
-        tuple(r)
-        for r in QUERIES["timeseries_interarrival_stitched"](
-            spark, SF_ORACLE
-        ).collect()
-    )
-    assert twin == base and len(base) == 5
-    import duckdb
-
-    con = duckdb.connect()
-    n_days = dict(
-        con.sql(
-            "SELECT event_type,"
-            " COUNT(DISTINCT CAST(ts AS DATE)) AS n_days,"
-            " COUNT(*) AS n"
-            f" FROM '{SF_ORACLE}/events.parquet' GROUP BY 1"
-        ).df()[["event_type", "n_days"]].itertuples(index=False, name=None)
-    )
-    for r in twin:
-        et, n_gaps = r[0], r[1]
-        # n_gaps = (n-1) total: (n - n_days) within-day + (n_days - 1)
-        # boundary stitches — the stitch leg contributes n_days-1 > 0
-        assert n_days[et] > 1, "fixture must span days for the stitch"
 
 
 def test_holt_winters_matches_python_recurrence(spark):

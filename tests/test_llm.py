@@ -840,44 +840,6 @@ def test_distinct_ngrams_approx_within_error_bound(spark):
     spark.catalog.clearCache()
 
 
-def test_ivfpq_partitioned_prunes_partitions_and_matches_inline(spark):
-    """The serving-layout variant (r12-verdict task 5): the
-    cell-partitioned codes table's probe must be answered by PARQUET
-    PARTITION PRUNING — the executed plan's codes-table scan carries
-    ``PartitionFilters: [cell IN (a,b)]`` with exactly nprobe=2 cells
-    and a ReadSchema WITHOUT the pruned-away cell column — and the
-    result must be row-identical to the inline ``sim_ivfpq_topk``
-    (same kernel, same LUT, same oracle)."""
-    import os
-    import re
-
-    from tests.conftest import SF_ORACLE
-    from vector_db_core_spark import scratch
-    from vector_db_core_spark.operators import QUERIES
-
-    df = QUERIES["sim_ivfpq_partitioned_topk"](spark, SF_ORACLE)
-    got = sorted(map(tuple, df.collect()))
-    inline = sorted(map(tuple, QUERIES["sim_ivfpq_topk"](spark, SF_ORACLE).collect()))
-    assert got == inline
-    # the scratch table is genuinely partitioned: one dir per cell
-    path = scratch.path_for("ivfpq_codes", SF_ORACLE)
-    assert path is not None
-    cell_dirs = [d for d in os.listdir(path) if d.startswith("cell=")]
-    assert len(cell_dirs) > 2  # pruning has something to prune
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    seg = next(
-        seg for seg in plan.split("\n\n") if "vdbc_ivfpq_codes" in seg
-    )
-    m = re.search(r"PartitionFilters: \[cell#\d+ IN \(([\d,]+)\)\]", seg)
-    assert m, seg
-    assert len(m.group(1).split(",")) == 2  # exactly nprobe partitions
-    spark.catalog.clearCache()
-
-
 def test_rrf_fusion_invariants(spark):
     """RRF structural pins: dense 1..20 fused ranks; every row carries
     at least one leg rank and each present leg rank is in 1..20; the
@@ -932,21 +894,27 @@ def test_hashed_span_dedup_equals_exact_twin(spark):
     assert exact == hashed and len(exact) > 0
 
 
-def test_udtf_matches_builtin_segments(spark):
-    """The Python-UDTF segmentation (the UDTF face of the UDF surface)
-    must be row-identical to the codegen'd split+posexplode twin —
-    including segment indices when empty parts are dropped."""
+def test_split_segments_matches_python_split(spark):
+    """``text_split_segments`` (also registered as
+    ``text_split_segments_udtf``) must equal the Python ``str.split``
+    rule row for row — including segment indices when empty parts are
+    dropped — and fan out to several segments per document."""
     from tests.conftest import SF_ORACLE
     from vector_db_core_spark.operators import QUERIES
+    from vector_db_core_spark.operators.llm import _seg_docs
 
-    builtin = sorted(
+    assert QUERIES["text_split_segments_udtf"] is QUERIES["text_split_segments"]
+    got = sorted(
         map(tuple, QUERIES["text_split_segments"](spark, SF_ORACLE).collect())
     )
-    via_udtf = sorted(
-        map(tuple, QUERIES["text_split_segments_udtf"](spark, SF_ORACLE).collect())
+    want = sorted(
+        (r.doc_id, idx, part)
+        for r in _seg_docs(spark, SF_ORACLE).collect()
+        for idx, part in enumerate(r.text.split(" a "))
+        if part != ""
     )
-    assert builtin == via_udtf
-    assert len(builtin) > 300, "fan-out vacuous — expected multiple segments/doc"
+    assert got == want
+    assert len(got) > 300, "fan-out vacuous — expected multiple segments/doc"
 
 
 def test_gopher_flags_discriminate_on_fixture(spark):

@@ -135,3 +135,35 @@ def test_driver_window_is_first_50_all_new_and_oracled():
         if n not in already_green and n not in DRIVER_WINDOW and n not in post_window
     ]
     assert not missing, missing
+
+
+#: Oracle groups allowed to keep two batch implementations. The
+#: all-pairs n-gram Jaccard is the exact reference the MinHash-LSH
+#: path is checked against (its recall and precision tests and the
+#: sweep's fast oracle), so it stays a second path on purpose.
+REFERENCE_PAIRS = {frozenset({"dedup_ngram_jaccard_pairs", "dedup_minhash_lsh_pairs"})}
+
+
+def test_one_implementation_per_oracle():
+    """Names that share one DuckDB oracle text compute one result, so
+    they must share one implementation: within a group there is at most
+    one batch callable and at most one ``streaming_*`` callable (a
+    second name on the same callable is an alias, not a twin)."""
+    from collections import defaultdict
+
+    from vector_db_core_spark.operators import ORACLE, QUERIES
+
+    groups: dict[str, list[str]] = defaultdict(list)
+    for name, sql in ORACLE.items():
+        groups[sql].append(name)
+    twins = []
+    for names in groups.values():
+        if frozenset(names) in REFERENCE_PAIRS:
+            continue
+        by_fn: dict[int, list[str]] = defaultdict(list)
+        for name in names:
+            by_fn[id(QUERIES[name])].append(name)
+        streaming = [ns for ns in by_fn.values() if all(n.startswith("streaming_") for n in ns)]
+        if len(streaming) > 1 or len(by_fn) - len(streaming) > 1:
+            twins.append(sorted(names))
+    assert not twins, f"oracle groups with more than one implementation: {twins}"

@@ -350,13 +350,13 @@ def test_nb_trio_fits_once_per_session(spark):
     from vector_db_core_spark.operators import pipeline as P
 
     scratch.reset(P._NB_SCRATCH_KEY)
-    before = P._nb_fit_count()
+    before = scratch.build_count(P._NB_SCRATCH_KEY)
     QUERIES["pipeline_quality_calibration"](spark, SF_ORACLE).collect()
-    assert P._nb_fit_count() == before + 1
+    assert scratch.build_count(P._NB_SCRATCH_KEY) == before + 1
     QUERIES["pipeline_lang_confusion"](spark, SF_ORACLE).collect()
     df = QUERIES["pipeline_nb_language_filter"](spark, SF_ORACLE)
     df.collect()
-    assert P._nb_fit_count() == before + 1  # no further fits
+    assert scratch.build_count(P._NB_SCRATCH_KEY) == before + 1  # no further fits
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan  # no explode: reading the scratch
     assert scratch.path_for(P._NB_SCRATCH_KEY, SF_ORACLE) in plan

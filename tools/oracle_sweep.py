@@ -350,7 +350,7 @@ def main() -> int:
             # several operators persist() shared intermediates (DSIR,
             # LM scoring, PageRank, PCA) and a 200+-query sweep in one
             # JVM would otherwise accumulate their cached blocks for
-            # the whole run (the bench.py / scale_ladder.py rule)
+            # the whole run (the bench.py / tools/measure.py rule)
             spark.catalog.clearCache()
         status = ("MATCH" if ok else "MISMATCH") + (" (fast-oracle)" if fast else "")
         if not ok:

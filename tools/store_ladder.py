@@ -5,7 +5,8 @@ Usage: python tools/store_ladder.py [rows ...]   (default: 1M 10M)
 bench.py pins W1 (pushx 1M) / W2 (range-read 1M) at one size; this
 ladder re-times them at 10x to show the dense-rowid protocol
 (`store.py:_dense_rowid_frame` — per-partition counts, driver
-prefix-sum, broadcast offsets, NO shuffle and NO single-task stage)
+prefix-sum, offsets as a literal array (`store.prefix_offsets`), NO
+shuffle and NO single-task stage)
 holds its slope when the batch outgrows any single partition, and
 compares the three full-corpus read disciplines:
 
@@ -52,16 +53,10 @@ def sample_df(spark, rows: int):
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [1_000_000, 10_000_000]
 
-    from pyspark.sql import SparkSession
-
+    from vector_db_core_spark.session import get_spark
     from vector_db_core_spark.store import OrdinalStore
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "64g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="store_ladder")
     spark.sparkContext.setLogLevel("ERROR")
 
     def push_once(rows: int):

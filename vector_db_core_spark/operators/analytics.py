@@ -2090,13 +2090,6 @@ def _co_purchase_edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _co_edge_build_count() -> int:
-    """Pytest pin: builds per process (delegates to the shared store)."""
-    from vector_db_core_spark import scratch
-
-    return scratch.build_count(_CO_EDGE_SCRATCH_KEY)
-
-
 def _co_purchase_edges(spark: SparkSession, sf_dir: str):
     """Canonical (u < v, distinct) co-purchase edge list — the
     unweighted projection of the session-shared scratch table."""

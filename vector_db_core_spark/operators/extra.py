@@ -5214,6 +5214,7 @@ GROUP BY event_type
 """
 
 
+@register("timeseries_interarrival_stitched", oracle=_INTERARRIVAL_SQL)
 @register("timeseries_interarrival_stats", oracle=_INTERARRIVAL_SQL)
 def timeseries_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTER-ARRIVAL-TIME PROFILE per event type — the arrival-process
@@ -5236,11 +5237,15 @@ def timeseries_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Plan/scale: ONE window (the lag) partitioned by event_type —
     at 5 types this is the honest skew caveat: each type's stream
-    sorts within one task, so at 100 TB you'd sessionize per
-    (type, day) first and stitch boundaries (the gaps-and-islands
-    device) or accept the per-type sort; the closing aggregate is
-    map-side-combined to |types| rows. The exact percentile swaps to
-    approx_percentile at scale per the documented twin policy."""
+    sorts within one task. The closing aggregate is map-side-combined
+    to |types| rows. The exact percentile swaps to approx_percentile
+    at scale per the documented twin policy.
+
+    Also registered as ``timeseries_interarrival_stitched``. A
+    (type, day)-partitioned lag with day-boundary stitch gaps gives
+    the same rows, but measured slower at sf0.01 and sf0.1 (more
+    jobs, twice the rows read, 2.5x the shuffle), so this is the one
+    implementation."""
     e = _t(spark, sf_dir, "events").select(
         "event_type", F.unix_micros("ts").alias("us")
     )
@@ -5251,84 +5256,6 @@ def timeseries_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             - F.lag("us").over(W.partitionBy("event_type").orderBy("us"))
         ).alias("gap_us"),
     ).where(F.col("gap_us").isNotNull())
-    return g.groupBy("event_type").agg(
-        F.count("gap_us").cast("bigint").alias("n_gaps"),
-        F.min("gap_us").cast("bigint").alias("min_gap_us"),
-        F.max("gap_us").cast("bigint").alias("max_gap_us"),
-        F.round(
-            F.sum("gap_us").cast("double") / F.count("gap_us") / 1000000.0, 6
-        ).alias("mean_gap_s"),
-        F.round(F.percentile("gap_us", F.lit(0.5)) / 1000000.0, 6).alias(
-            "p50_gap_s"
-        ),
-        F.round(F.percentile("gap_us", F.lit(0.9)) / 1000000.0, 6).alias(
-            "p90_gap_s"
-        ),
-    )
-
-
-@register("timeseries_interarrival_stitched", oracle=_INTERARRIVAL_SQL)
-def timeseries_interarrival_stitched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SESSIONIZE-AND-STITCH twin of ``timeseries_interarrival_stats``
-    — same gap multiset, same output, but the lag window is
-    partitioned by (event_type, DAY) instead of event_type alone, so
-    no single task ever sorts a full type's stream. The measured need:
-    the per-type form's ~sf10 ladder row is 4.5x per 10x data (2M rows
-    sorted per task at 5 types) — the stated skew caveat turning into
-    the observed bottleneck.
-
-    The stitch (the gaps-and-islands device the original's docstring
-    names): day buckets segment each type's sorted stream contiguously
-    (day = us div 86_400_000_000 is monotone in us), so the full
-    consecutive-diff multiset decomposes exactly into (a) within-day
-    consecutive diffs and (b) one boundary gap per adjacent pair of
-    non-empty day buckets — min(us) of the later bucket minus max(us)
-    of the earlier, computed by a lag window over the tiny
-    |types x days| bounds frame.
-
-    Exactness: identical to the original by the decomposition above —
-    the union of (a) and (b) IS the per-type consecutive-diff multiset
-    (timestamp ties yield zero gaps in the same multiset count either
-    way), and the closing aggregate is the original's verbatim, so the
-    shared oracle must hash-match. Pinned row-identical to the
-    per-type form by pytest.
-
-    Plan/scale: the heavy window now has |types| x |days| partitions
-    (~1.8k at sf0.1's one-year span) of ~|stream|/days rows each —
-    the sort parallelizes and its per-task memory is day-sized, not
-    stream-sized; bucket bounds are a map-side-combined groupBy to the
-    same tiny grid; the stitch window sorts |days| rows per type. The
-    one remaining per-type concentration is the exact-percentile
-    closing aggregate (Spark's percentile merges per-type value
-    buffers on one reducer each) — at 100 TB that swaps to
-    approx_percentile per the documented twin policy; everything
-    upstream of it is day-parallel."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-        (F.unix_micros("ts") - F.unix_micros("ts") % 86_400_000_000)
-        .alias("day"),
-    )
-    intra = e.select(
-        "event_type",
-        (
-            F.col("us")
-            - F.lag("us").over(
-                W.partitionBy("event_type", "day").orderBy("us")
-            )
-        ).alias("gap_us"),
-    ).where(F.col("gap_us").isNotNull())
-    bounds = e.groupBy("event_type", "day").agg(
-        F.min("us").alias("lo"), F.max("us").alias("hi")
-    )
-    stitch = bounds.select(
-        "event_type",
-        (
-            F.col("lo")
-            - F.lag("hi").over(W.partitionBy("event_type").orderBy("day"))
-        ).alias("gap_us"),
-    ).where(F.col("gap_us").isNotNull())
-    g = intra.unionByName(stitch)
     return g.groupBy("event_type").agg(
         F.count("gap_us").cast("bigint").alias("n_gaps"),
         F.min("gap_us").cast("bigint").alias("min_gap_us"),

@@ -2613,6 +2613,7 @@ FROM top, n
 """
 
 
+@register("sim_ivfpq_partitioned_topk", oracle=_IVFPQ_SQL)
 @register("sim_ivfpq_topk", oracle=_IVFPQ_SQL)
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ COMPOSED — the standard billion-scale ANN index (Jégou
@@ -2643,9 +2644,13 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     here it runs inline to stay self-contained), so serving cost
     ∝ corpus/cells × nprobe. This is the geometry that turns a
     100 TB scan into a per-query partition read; at real scale the
-    cell becomes the partition key the codes table is written under
-    (partition pruning does the probe filter — the plan-pinned
-    ``sim_ivfpq_partitioned_topk`` variant demonstrates it)."""
+    cell becomes the partition key the codes table is written under,
+    and partition pruning does the probe filter.
+
+    Also registered as ``sim_ivfpq_partitioned_topk``. Serving from a
+    cell-partitioned codes table gives the same rows; measured, it
+    ties this path once the table exists and costs twice as much when
+    the table is rebuilt per run, so this is the one implementation."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -2709,98 +2714,13 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-@register("sim_ivfpq_partitioned_topk", oracle=_IVFPQ_SQL)
-def sim_ivfpq_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ SERVED FROM A CELL-PARTITIONED CODES TABLE — the
-    plan-pinned fact behind ``sim_ivfpq_topk``'s prose claim that "at
-    real scale the cell becomes the partition key" (r12-verdict task
-    5): the codes table (vec_id, codes, cell) is BUILT ONCE per
-    process (``scratch.cached_table`` — an index is maintained, not
-    recomputed per query) and written hive-partitioned BY CELL; the
-    nprobe=2 probe is then a plain ``cell IN (...)`` filter that the
-    parquet scan answers with PARTITION PRUNING — the scan's
-    PartitionFilters carry the two cells and the read touches exactly
-    2 of the 16 cell directories (pytest-pinned on the executed
-    plan), replacing the inline variant's broadcast probe filter.
-    ADC scoring over the pruned slice is pure codegen: the 16x8
-    query-to-centroid LUT embeds as literal arrays and each vector
-    pays 8 ``element_at`` lookups on its stored code word — no raw
-    vector is touched until the top-10 rerank fetch joins back to
-    embeddings for true distances (the serving read path of a real
-    IVF-PQ deployment, Jégou et al. 2011 §V).
-
-    Exactness: identical integers to ``sim_ivfpq_topk`` by
-    construction — codes/cells come from the same
-    ``_pq_block_dists`` int64 kernel, the LUT literals are the same
-    exact query-to-centroid block distances, and the rerank's true
-    distance is the same zip_with/aggregate BIGINT fold — so it
-    shares the inline op's DuckDB oracle VERBATIM (parquet
-    round-trips the integer columns bit-exactly; the scratch-table
-    contract).
-
-    Plan/scale: this IS the 100 TB geometry — one persistent
-    partitioned write amortized across every query, then each query
-    reads corpus/cells x nprobe rows via partition pruning, scores
-    them with an 8-lookup codegen expression (8 bytes per vector,
-    never the embeddings), and fetches raw vectors only for the
-    top-k rerank (a 10-row broadcast join)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from vector_db_core_spark import scratch
-
-    x, cb = _pq_int_inputs(spark, sf_dir)
-    (qrow,) = x.where(F.col("vec_id") == 0).select("xm").collect()
-    qm = np.asarray(qrow.xm, dtype=np.int64)
-    cqd = _pq_block_dists(qm.reshape(1, _PQ_NB, _PQ_SD), cb)[0]  # (nb, k)
-    qfull = cqd.sum(axis=0)
-    probe = sorted(range(_PQ_K), key=lambda c: (qfull[c], c))[:_IVFPQ_NPROBE]
-    bcb = spark.sparkContext.broadcast(cb)
-
-    def build() -> DataFrame:
-        @pandas_udf("struct<cell: int, codes: array<int>>")
-        def _assign(xs):
-            import pandas as pd
-
-            cbv = bcb.value
-            nb, k, sd = cbv.shape
-            xi = np.array(
-                [np.asarray(v, dtype=np.int64) for v in xs], dtype=np.int64
-            )
-            n = xi.shape[0]
-            d2 = _pq_block_dists(xi.reshape(n, nb, sd), cbv)
-            return pd.DataFrame(
-                {
-                    "cell": d2.sum(axis=1).argmin(axis=1).astype("int32"),
-                    "codes": [
-                        c.astype("int32").tolist() for c in d2.argmin(axis=2)
-                    ],
-                }
-            )
-
-        return (
-            x.where(F.col("vec_id") != 0)
-            .select("vec_id", _assign("xm").alias("s"))
-            .select("vec_id", F.col("s.codes").alias("codes"), F.col("s.cell").alias("cell"))
-        )
-
-    codes = scratch.cached_table(
-        spark, "ivfpq_codes", sf_dir, build, partition_by=("cell",)
-    )
-    return _ivfpq_serve_from_codes(codes, x, qm, cqd, probe)
-
-
 def _ivfpq_serve_from_codes(codes, x, qm, cqd, probe) -> DataFrame:
-    """THE IVF-PQ serving read, shared verbatim by the partitioned
-    batch op and the streaming cell-maintenance replay so both
-    provably score through one code path: probe-filter the codes
-    table (partition pruning when the table is cell-partitioned),
-    ADC-score via the embedded 16x8 LUT literals (8 ``element_at``
-    lookups per stored code word — pure codegen, no raw vectors),
-    count the pruned candidates, take the top-k, and rerank-fetch
-    true distances for just those k rows from the embeddings frame
-    ``x``. Emits the ``_IVFPQ_SQL`` shape."""
+    """THE IVF-PQ serving read of the streaming cell-maintenance
+    replay: probe-filter the codes table, ADC-score via the embedded
+    16x8 LUT literals (8 ``element_at`` lookups per stored code word —
+    pure codegen, no raw vectors), count the pruned candidates, take
+    the top-k, and rerank-fetch true distances for just those k rows
+    from the embeddings frame ``x``. Emits the ``_IVFPQ_SQL`` shape."""
     probed = codes.where(
         (F.col("vec_id") != 0)
         & F.col("cell").isin([int(c) for c in probe])
@@ -2819,7 +2739,7 @@ def _ivfpq_serve_from_codes(codes, x, qm, cqd, probe) -> DataFrame:
         adc.cast("bigint").alias("adc_dist"),
     )
     # the pruned slice is corpus/cells x nprobe rows; cache it for its
-    # two consumers (count + top-k) like the inline op's survivor set
+    # two consumers (count + top-k) like sim_ivfpq_topk's survivor set
     scored = scored.persist()
     n_scanned = scored.agg(F.count("*").cast("bigint").alias("n_scanned"))
     top = scored.orderBy("adc_dist", "vec_id").limit(_IVFPQ_TOPK)
@@ -3188,15 +3108,14 @@ def dedup_span_pairs_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------- UDTF surface
-# Segment-splitting rule shared by all three engines: split each
-# document on the literal delimiter token " a " (the synthetic corpus
-# has no sentence punctuation, so a frequent stopword stands in for
-# the boundary — the PLAN shapes are what this pair demonstrates).
-# Literal leftmost non-overlapping split behaves identically in Java
-# regex (Spark), DuckDB string_split, and Python str.split; segment
-# indices count ALL split parts (empties included) and empty parts are
-# filtered afterwards, so the three formulations stay bit-identical.
+# ------------------------------------------------------ segment splitting
+# Segment-splitting rule: split each document on the literal delimiter
+# token " a " (the synthetic corpus has no sentence punctuation, so a
+# frequent stopword stands in for the boundary). Literal leftmost
+# non-overlapping split behaves identically in Java regex (Spark),
+# DuckDB string_split, and Python str.split; segment indices count ALL
+# split parts (empties included) and empty parts are filtered
+# afterwards, so the formulations stay bit-identical.
 
 _SEG_SQL = """
 WITH s AS (
@@ -3212,6 +3131,7 @@ def _seg_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select("doc_id", "text")
 
 
+@register("text_split_segments_udtf", oracle=_SEG_SQL)
 @register("text_split_segments", oracle=_SEG_SQL)
 def text_split_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document segmentation, BUILT-IN path: ``split`` + ``posexplode``
@@ -3220,9 +3140,10 @@ def text_split_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and column pruning still push into the parquet scan below the
     Generate).
 
-    Exists beside ``text_split_segments_udtf`` (same rows, same oracle)
-    to pin when the UDTF escape hatch is and isn't worth it: this path
-    is the default; the UDTF is for fan-out logic that can't be said in
+    Also registered as ``text_split_segments_udtf``. A Python UDTF
+    gives the same rows but sends every row through a Python worker
+    and breaks codegen (measured 2x slower), so this is the one
+    implementation; a UDTF is for fan-out logic that can't be said in
     expressions (stateful parsers, per-row trees).
     """
     return (
@@ -3233,46 +3154,6 @@ def text_split_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("segment") != "")
         .select("doc_id", F.col("segment_idx").cast("int"), "segment")
-    )
-
-
-@register("text_split_segments_udtf", oracle=_SEG_SQL)
-def text_split_segments_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document segmentation via a Python UDTF — the table-function face
-    of the UDF surface (SURVEY §2.2 names UDF/UDAF/UDTF; the scalar and
-    aggregate faces are demonstrated elsewhere), registered with the
-    SAME DuckDB oracle as the built-in twin, so the hash gate proves
-    the two paths agree bit-for-bit.
-
-    Plan note: a Python UDTF runs rows through a Python worker (a
-    BatchEvalPython-style exchange, one process round-trip per batch)
-    and BREAKS whole-stage codegen at that point, while the built-in
-    twin's Generate stays inside codegen — so the UDTF is the slow
-    path, justified only when the fan-out logic genuinely can't be
-    expressed with split/explode/transform (recursive-descent parsing,
-    per-row stateful tokenizers). Same boundary SURVEY §4 set for all
-    Python escape hatches; the equality pytest
-    (tests/test_llm.py::test_udtf_matches_builtin_segments) pins the
-    two paths row-identical so the demo can't drift.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="segment_idx INT, segment STRING")
-    class SplitSegments:
-        def eval(self, text: str):  # noqa: ANN001 - UDTF protocol
-            if text is None:
-                return
-            for idx, part in enumerate(text.split(" a ")):
-                if part != "":
-                    yield (idx, part)
-
-    spark.udtf.register("split_segments_udtf", SplitSegments)
-    _seg_docs(spark, sf_dir).createOrReplaceTempView("_udtf_seg_docs")
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.segment_idx, s.segment
-        FROM _udtf_seg_docs d, LATERAL split_segments_udtf(d.text) s
-        """
     )
 
 

@@ -1680,13 +1680,6 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nb_fit_count() -> int:
-    """Pytest pin: fits per process (delegates to the shared store)."""
-    from vector_db_core_spark import scratch
-
-    return scratch.build_count(_NB_SCRATCH_KEY)
-
-
 @register("pipeline_nb_language_filter", oracle=_NB_LANG_SQL)
 def pipeline_nb_language_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style LANGUAGE FILTER trained in-engine: a multinomial

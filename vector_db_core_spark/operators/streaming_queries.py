@@ -504,17 +504,16 @@ _MINHASH_STREAM_ORACLE = r"""
 def _minhash_stream_hits(
     spark: SparkSession, sf_dir: str, tag: str
 ) -> tuple[DataFrame, DataFrame, str]:
-    """Shared construction for the two streaming MinHash dedup
-    replays: arriving documents (``doc_id % 10 == 0``, landed as 4
+    """Candidate construction for ``streaming_minhash_dedup_replay``:
+    arriving documents (``doc_id % 10 == 0``, landed as 4
     files, one per trigger) are MinHash-signed per row, band-keyed,
     stream-static-joined against the standing corpus's materialized
     band table, and LSH hits Jaccard-verified — all inside
     micro-batches. Returns ``(hits, corpus_static, root)``; the caller
     runs ``hits`` to a sink and unpersists ``corpus_static``. ``hits``
     still carries band MULTIPLICITY (a pair colliding in several
-    bands appears once per collision, same verified jaccard) — how
-    each registered query collapses that is exactly what
-    distinguishes them.
+    bands appears once per collision, same verified jaccard); the
+    caller collapses it.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -602,6 +601,7 @@ def _minhash_stream_hits(
     return hits, corpus_static, root
 
 
+@register("streaming_minhash_dedup_instream", oracle=_MINHASH_STREAM_ORACLE)
 @register("streaming_minhash_dedup_replay", oracle=_MINHASH_STREAM_ORACLE)
 def streaming_minhash_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS-ingest near-dedup as a real Structured Streaming
@@ -626,9 +626,10 @@ def streaming_minhash_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFram
       * band multiplicity (a pair colliding in several bands) is
         collapsed AFTER the memory sink by a batch ``distinct()`` —
         verified jaccard is identical on every collision of a pair, so
-        this is pure dedup of equal rows; the PRODUCTION form that
-        collapses it in-stream is registered beside this one as
-        ``streaming_minhash_dedup_instream``.
+        this is pure dedup of equal rows. Also registered as
+        ``streaming_minhash_dedup_instream``: collapsing in-stream
+        with ``dropDuplicatesWithinWatermark`` gives the same rows but
+        adds a state store and measured slower at sf0.01 and sf0.1.
 
     Registered with the full hash oracle: stream replay of a finite
     landing dir under ``availableNow`` is deterministic, and hash-set
@@ -640,47 +641,6 @@ def streaming_minhash_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFram
     _run_to_memory(hits, "stream_replay_minhash_dedup", root, "append")
     corpus_static.unpersist()
     return spark.table("stream_replay_minhash_dedup").distinct()
-
-
-@register("streaming_minhash_dedup_instream", oracle=_MINHASH_STREAM_ORACLE)
-def streaming_minhash_dedup_instream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION emission form of the streaming MinHash dedup:
-    identical candidate pipeline to ``streaming_minhash_dedup_replay``
-    (same landing zone, same 16x4 banding, same stream-static joins,
-    same verify, same oracle), but band multiplicity collapses
-    INSIDE the stream via ``dropDuplicatesWithinWatermark`` on the
-    pair key — no post-sink batch ``distinct()``; what the sink
-    receives IS the deduplicated pair feed a downstream consumer
-    would see. The returned table is the sink contents verbatim, so
-    the hash oracle itself proves the in-stream dedup did its job
-    (collisions in >1 band are real on this fixture — pinned
-    non-vacuous in tests/test_streaming.py).
-
-    State/scale notes:
-      * a pair's duplicate hits can only co-occur within ONE trigger
-        here (each arriving doc lives in exactly one landing file), so
-        ANY watermark horizon bounds correctly; production picks the
-        horizon that covers its re-delivery window, and the state
-        store holds only pair keys inside it — O(recent hits), evicted
-        by the watermark, vs the unbounded state a plain
-        ``dropDuplicates`` would accumulate;
-      * event time is the arrival timestamp a landing zone stamps on
-        ingest (deterministic here — derived from doc_id — so the
-        replay stays hash-checkable);
-      * everything upstream stays stateless; the dedup is the only
-        stateful operator, keyed exactly on what it guarantees:
-        (batch_doc_id, corpus_doc_id).
-    """
-    hits, corpus_static, root = _minhash_stream_hits(spark, sf_dir, "mhdedup_is")
-    deduped = (
-        hits.withColumn("ingest_ts", F.timestamp_micros(F.col("batch_doc_id")))
-        .withWatermark("ingest_ts", "10 seconds")
-        .dropDuplicatesWithinWatermark(["batch_doc_id", "corpus_doc_id"])
-        .select("batch_doc_id", "corpus_doc_id", "jaccard")
-    )
-    _run_to_memory(deduped, "stream_replay_minhash_dedup_instream", root, "append")
-    corpus_static.unpersist()
-    return spark.table("stream_replay_minhash_dedup_instream")
 
 
 _EWMA_STREAM_SQL = """
@@ -1088,7 +1048,7 @@ def streaming_ivf_cells_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENGINE maintains the index as update-mode state keyed
     (vec_id, cell, codes) — the upsert an ANN index performs per
     arriving vector — and the probe query is served from the drained
-    index through the IDENTICAL batch serving path
+    index through the codes-table serving read
     (``_ivfpq_serve_from_codes``), so it carries the batch op's full
     DuckDB oracle verbatim and a row-identity pytest against
     ``sim_ivfpq_topk``.

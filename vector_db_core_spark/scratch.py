@@ -89,14 +89,9 @@ def cached_table(
     key: str,
     sf_dir: str,
     builder: Callable[[], "DataFrame"],
-    partition_by: tuple[str, ...] = (),
 ) -> "DataFrame":
     """Return the scratch-materialized result of ``builder()``,
-    building at most once per (process, ``key``, ``sf_dir``).
-    ``partition_by`` writes the scratch table hive-partitioned on
-    those columns — the serving layout whose reads PRUNE partitions
-    (the IVF-PQ codes table's cell key); partition columns come back
-    LAST in the read schema, so consumers select by name."""
+    building at most once per (process, ``key``, ``sf_dir``)."""
     lock = _key_lock(key)
     with lock:
         with _CACHE_LOCK:
@@ -110,10 +105,7 @@ def cached_table(
                     f"_{os.getpid()}",
                 )
             )
-            w = builder().write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
+            builder().write.mode("overwrite").parquet(path)
             with _CACHE_LOCK:
                 _BUILD_COUNTS[(key, sf_dir)] = (
                     _BUILD_COUNTS.get((key, sf_dir), 0) + 1

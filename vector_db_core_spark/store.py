@@ -132,9 +132,9 @@ def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> D
     The input must be deterministically partitioned between the count
     action and downstream use (true for file scans and cached frames).
     Callers with non-deterministic sources must persist first —
-    ``OrdinalStore.pushx`` does exactly that, and additionally verifies
-    the written count against the collected counts so any drift fails
-    loudly instead of silently corrupting the ordinal invariant.
+    ``OrdinalStore.pushx`` does exactly that: the counts and the write
+    read the same persisted partitions, and that persist is its only
+    guard (it does not re-check the written count).
     """
     tagged = df.withColumn("_mid", F.monotonically_increasing_id())
     out, _ = _dense_rowid_frame(tagged, start)
