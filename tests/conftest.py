@@ -51,11 +51,13 @@ FAST_ORACLE_SPOT = {
     "text_bm25_ranking",
     "text_stats_documents",
     "sim_cosine_topk",
+    "sim_ann_lsh_topk",
     "sim_kmeans_lloyd_exact",
     "sim_pca_power_iteration_exact",
     "graph_pagerank_exact",
     "graph_triangle_estimate",
     "pipeline_pii_scrub",
+    "pipeline_bpe_train_merges",
     "streaming_minhash_dedup_replay",
     "multimodal_phash_neardup",
     "profile_functional_dependencies",
@@ -63,7 +65,7 @@ FAST_ORACLE_SPOT = {
 
 #: registry-only checks in test_oracle.py (no Spark session) that stay
 #: in the fast tier.
-FAST_ORACLE_TESTS = {"test_one_implementation_per_oracle"}
+FAST_ORACLE_TESTS = {"test_one_implementation_per_oracle", "test_every_query_is_oracled"}
 
 #: dtype parity re-collects every row to pandas — keep an even smaller
 #: spot set there (the mechanism is identical across parameters).

@@ -1,7 +1,6 @@
-"""LLM-pipeline operators that the DuckDB oracle can't express
-(xxhash64-seeded MinHash/SimHash/hyperplanes, pandas-batched decode):
-determinism, planted-duplicate recall, and score correctness are
-pinned here instead."""
+"""Behavioral checks of the LLM-pipeline operators beyond the oracle's
+hash match: determinism, planted-duplicate and top-k recall, score
+correctness, and the multimodal decode path."""
 
 from __future__ import annotations
 
@@ -42,20 +41,6 @@ def test_minhash_lsh_equals_exact(spark):
     assert len(exact) >= 1  # fixture really contains planted near-dups
 
 
-def test_simhash_pairs_deterministic_and_recall(spark):
-    q = QUERIES["dedup_simhash_pairs"]
-    run1 = sorted((r.doc_a, r.doc_b, r.hamming) for r in q(spark, SF_ORACLE).collect())
-    run2 = sorted((r.doc_a, r.doc_b, r.hamming) for r in q(spark, SF_ORACLE).collect())
-    assert run1 == run2  # seeded hashing → rerun-stable
-    found = {(a, b) for a, b, _ in run1}
-    planted = _planted_pairs(spark)
-    # chunk banding is a recall heuristic (hamming<=12 spread 3+3+3+3
-    # evades it); it must still catch most planted near-dups and
-    # return nothing outside hamming 12
-    assert len(found & planted) >= int(0.7 * len(planted))
-    assert all(h <= 12 for _, _, h in run1)
-
-
 def test_ann_lsh_scores_exact_within_bucket(spark):
     """ANN approximates *candidate selection* only — every returned
     cosine must equal the brute-force value for that pair — and the
@@ -89,95 +74,6 @@ def test_ann_lsh_scores_exact_within_bucket(spark):
         by_q.setdefault(r.query_id, []).append(r.rank)
     for q, ranks in by_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-
-
-def test_mllib_minhash_agrees_with_exact(spark):
-    """The MLlib estimator path must find the same near-dup pairs as
-    the exact/banded pipelines (its similarity is estimated from 8
-    hash tables, so values are approximate — pair SET parity only)."""
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in QUERIES["dedup_mllib_minhash_pairs"](spark, SF_ORACLE).collect()
-    }
-    assert got == _planted_pairs(spark)
-
-
-def test_ann_ivf_scores_exact_and_better_recall(spark):
-    """IVF returns true cosine values (selection-only approximation)
-    and with nprobe=4 over 16 cells should recall a decent share of
-    the exact top-5."""
-    ivf = QUERIES["sim_ann_ivf_topk"](spark, SF_ORACLE).collect()
-    assert ivf
-    emb = {
-        r.vec_id: r.embedding
-        for r in spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").collect()
-    }
-
-    def cos(a, b):
-        d = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = math.sqrt(sum(float(x) * float(x) for x in a))
-        nb = math.sqrt(sum(float(y) * float(y) for y in b))
-        return d / (na * nb)
-
-    for r in ivf:
-        assert abs(r.cosine_sim - cos(emb[r.query_id], emb[r.neighbor_id])) < 1e-9
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["sim_cosine_topk"](spark, SF_ORACLE).collect()
-    }
-    got = {(r.query_id, r.neighbor_id) for r in ivf}
-    # measured ~64% top-5 recall at nprobe=4/k=16 on the fixture —
-    # 64-dim weakly-clustered vectors cap coarse quantization; assert
-    # a conservative floor (everything is seeded/deterministic)
-    assert len(got & exact) / len(exact) >= 0.5
-
-
-def test_ann_brp_lsh_scores_exact_and_high_recall(spark):
-    """MLlib BucketedRandomProjectionLSH over L2-normalized vectors:
-    returned cosines are true values (selection-only approximation) and
-    recall vs the exact top-5 is high (measured 94% on the fixture)."""
-    brp = QUERIES["sim_ann_brp_lsh_topk"](spark, SF_ORACLE).collect()
-    assert brp
-    emb = {
-        r.vec_id: r.embedding
-        for r in spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").collect()
-    }
-
-    def cos(a, b):
-        d = sum(float(x) * float(y) for x, y in zip(a, b))
-        na = math.sqrt(sum(float(x) * float(x) for x in a))
-        nb = math.sqrt(sum(float(y) * float(y) for y in b))
-        return d / (na * nb)
-
-    for r in brp:
-        assert abs(r.cosine_sim - cos(emb[r.query_id], emb[r.neighbor_id])) < 1e-9
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["sim_cosine_topk"](spark, SF_ORACLE).collect()
-    }
-    got = {(r.query_id, r.neighbor_id) for r in brp}
-    assert len(got & exact) / len(exact) >= 0.8  # seeded/deterministic
-
-
-def test_ann_brp_approx_nearest_neighbors_serving_call(spark):
-    """The single-key serving API (approxNearestNeighbors) on the same
-    fitted model — top-1 neighbor of a corpus vector is itself."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    from vector_db_core_spark.functions.vectors import l2_norm
-
-    e = (
-        spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("fv", array_to_vector(F.transform("v", lambda x: x / l2_norm("v"))))
-    )
-    model = BucketedRandomProjectionLSH(
-        inputCol="fv", outputCol="hashes", bucketLength=0.8, numHashTables=3, seed=42
-    ).fit(e)
-    key = e.where(F.col("vec_id") == 0).head().fv
-    nn = model.approxNearestNeighbors(e, key, 1).head()
-    assert nn.vec_id == 0 and nn.distCol < 1e-9
 
 
 def test_multimodal_extract_features_roundtrip(spark):
@@ -258,38 +154,14 @@ def test_ann_lsh_index_prunes_candidates(spark):
     assert 0.0 < selectivity < 0.8, selectivity
 
 
-def test_hyperplane_bucket_sql_variant_deterministic_and_independent(spark):
-    """The SQL-fold single-bucket variant (kept for pure-JVM contexts
-    where Python workers are unavailable — e.g. a SQL-only cluster
-    profile): (a) rerun-stable, (b) buckets in [0, 2^planes), (c) its
-    hash tables are genuinely different bucketings (table=0 vs table=1
-    must disagree on a non-trivial share of vectors — independent
-    planes are what multi-table recall math assumes)."""
-    from vector_db_core_spark.functions.vectors import hyperplane_bucket
-
-    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    out = e.select(
-        "vec_id",
-        hyperplane_bucket("v", planes=4, table=0).alias("b0"),
-        hyperplane_bucket("v", planes=4, table=1).alias("b1"),
-    )
-    run1 = {r.vec_id: (r.b0, r.b1) for r in out.collect()}
-    run2 = {r.vec_id: (r.b0, r.b1) for r in out.collect()}
-    assert run1 == run2
-    assert all(0 <= b < 16 for pair in run1.values() for b in pair)
-    assert len({b0 for b0, _ in run1.values()}) > 4  # real spread
-    disagree = sum(1 for b0, b1 in run1.values() if b0 != b1)
-    assert disagree / len(run1) > 0.5  # independent tables decorrelate
-
-
 def test_hyperplane_buckets_pandas_deterministic_and_matches_numpy(spark):
-    """The Arrow multi-table bucketizer: (a) rerun-stable (seeded
-    planes rebuilt identically per batch/executor), (b) buckets in
-    range, (c) equal to a driver-side numpy replica of the same seeded
-    construction — the determinism the ANN index's reproducibility
-    rests on."""
+    """The Arrow multi-table bucketizer: (a) rerun-stable (md5 planes
+    rebuilt identically per batch/executor), (b) buckets in range,
+    (c) equal to a driver-side numpy replica — integer micro units
+    times the ±1 planes from md5 parity — the determinism the ANN
+    index's oracle rests on."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     import numpy as np
 
     from vector_db_core_spark.functions.vectors import hyperplane_buckets_pandas
@@ -301,13 +173,25 @@ def test_hyperplane_buckets_pandas_deterministic_and_matches_numpy(spark):
     run1 = {r.vec_id: list(r.b) for r in out.collect()}
     run2 = {r.vec_id: list(r.b) for r in out.collect()}
     assert run1 == run2
-    raw = {r.vec_id: np.asarray(r.v, dtype=np.float64) for r in e.collect()}
-    rng = np.random.RandomState(3407)
-    proj = rng.standard_normal((64, 16 * 4))
+    # micro units rounded half away from zero, as Spark's round does
+    raw = {
+        r.vec_id: np.array(
+            [int(Decimal(x * 1e6).to_integral_value(ROUND_HALF_UP)) for x in r.v]
+        )
+        for r in e.collect()
+    }
+    planes = np.array(
+        [
+            [1 - 2 * (int(hashlib.md5(f"{p}|{d}".encode()).hexdigest()[-1], 16) & 1)
+             for p in range(64)]
+            for d in range(64)
+        ],
+        dtype=np.int64,
+    )
     for vid, buckets in run1.items():
         assert len(buckets) == 16
         assert all(0 <= b < 16 for b in buckets)
-        bits = (raw[vid] @ proj) > 0
+        bits = (raw[vid].astype(np.int64) @ planes) > 0
         expect = (bits.reshape(16, 4).astype(np.int64) * (1 << np.arange(4))).sum(axis=1)
         assert list(expect) == buckets, vid
 
@@ -362,49 +246,28 @@ def test_multimodal_custom_decoder_plugs_in(spark):
         assert r.features == [float(len(bytes(r.payload))), float(bytes(r.payload)[0])]
 
 
-def test_group_pca_matches_numpy_and_is_partition_independent(spark):
-    """The applyInPandas PCA must reproduce a driver-side numpy SVD on
-    the sorted raw data exactly (vec_id sort fixes reduction order),
-    for every label, and the unit-norm/variance invariants must hold."""
-    import numpy as np
-
-    rows = {r.label: r for r in QUERIES["sim_group_pca_top_component"](spark, SF_ORACLE).collect()}
-    raw = (
-        spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    assert len(rows) == raw["label"].nunique()
-    for label, r in rows.items():
-        sub = raw[raw.label == label]
-        X = np.stack(sub["embedding"].to_numpy()).astype(np.float64)
-        Xc = X - X.mean(axis=0)
-        _, s, vt = np.linalg.svd(Xc, full_matrices=False)
-        v = vt[0]
-        if v[np.abs(v).argmax()] < 0:
-            v = -v
-        assert r.n_vectors == len(sub)
-        assert abs(r.explained_ratio - round(float(s[0] ** 2 / (s**2).sum()), 6)) < 1e-9
-        assert np.allclose(np.array(r.component), np.round(v, 6), atol=1e-9)
-        # top component is unit-norm and beats every coordinate axis
-        assert abs(np.linalg.norm(r.component) - 1.0) < 1e-4
-        proj_var = float(np.var(Xc @ np.array(r.component)))
-        assert proj_var >= Xc.var(axis=0).max() * 0.999
-
-
 def test_all_pairs_baselines_are_capped(spark):
     """The O(n^2) correctness baselines must refuse large inputs and
-    point at their banded/bucketed scale twins."""
+    point at their banded/bucketed scale path where one exists."""
     import pytest
 
     from vector_db_core_spark.operators import llm
 
-    big = spark.range(llm.ALL_PAIRS_ROW_CAP + 1)
-    with pytest.raises(ValueError, match="dedup_minhash_lsh_pairs"):
-        llm._assert_all_pairs_scale(big, "dedup_ngram_jaccard_pairs", "dedup_minhash_lsh_pairs")
-    # at-or-under the cap passes through unchanged
-    small = spark.range(10)
-    assert llm._assert_all_pairs_scale(small, "x", "y") is small
+    big, small = "/big-fixture", "/small-fixture"
+    llm._SOURCE_COUNT_CACHE[(big, "documents")] = llm.ALL_PAIRS_ROW_CAP + 1
+    llm._SOURCE_COUNT_CACHE[(small, "documents")] = llm.ALL_PAIRS_ROW_CAP
+    try:
+        with pytest.raises(ValueError, match="dedup_minhash_lsh_pairs"):
+            llm._guard_all_pairs_source(
+                spark, big, "documents", "dedup_ngram_jaccard_pairs", "dedup_minhash_lsh_pairs"
+            )
+        with pytest.raises(ValueError, match="capped at"):
+            llm._guard_all_pairs_source(spark, big, "documents", "sim_semdedup_fixed_cells")
+        # at-or-under the cap passes
+        llm._guard_all_pairs_source(spark, small, "documents", "x", "y")
+    finally:
+        del llm._SOURCE_COUNT_CACHE[(big, "documents")]
+        del llm._SOURCE_COUNT_CACHE[(small, "documents")]
 
 
 # ------------------------------------------------------- real image decode
@@ -647,83 +510,14 @@ def test_incremental_minhash_no_cartesian_and_cross_side_only(spark):
         assert r.corpus_doc_id % 10 != 0
 
 
-def test_pq_codes_determinism_and_quality(spark):
-    """sim_pq_codes is rows-only; pin its contract: 8 codes per vector
-    each in [0,16), bit-identical codes across two runs (seeded
-    codebooks + deterministic assignment), and a reconstruction
-    cosine floor — 8x16-centroid PQ must beat 0.55 mean on this
-    fixture (measured ~0.65+; random guessing sits near 0)."""
-    from tests.conftest import SF_ORACLE
-    from vector_db_core_spark.operators import QUERIES
-
-    a = QUERIES["sim_pq_codes"](spark, SF_ORACLE).orderBy("vec_id").collect()
-    assert all(len(r.codes) == 8 for r in a)
-    assert all(0 <= c < 16 for r in a for c in r.codes)
-    mean_cos = sum(r.recon_cosine for r in a) / len(a)
-    assert mean_cos > 0.55, mean_cos
-    b = QUERIES["sim_pq_codes"](spark, SF_ORACLE).orderBy("vec_id").collect()
-    assert [r.codes for r in a] == [r.codes for r in b]
-
-
-def test_pq_exact_twin_agrees_with_production_encoder(spark):
-    """The hash-gated twin (sim_pq_codes_exact: seeded codebooks +
-    integer micro-quantized distances) must assign the SAME codes the
-    production Arrow-batched encoder does when that encoder is fed the
-    twin's codebooks — tying the DuckDB-derivable twin to the real
-    assignment path. Since r13 both sides literally run the SAME
-    numpy kernel (_pq_block_dists — float64 here, int64 in the twin),
-    so this test pins the kernel's dtype-independence end to end.
-    Micro-quantization at 1e6 can only flip an argmin
-    on a near-exact float tie, which this fixture has none of."""
-    import numpy as np
-
-    from tests.conftest import SF_ORACLE
-    from vector_db_core_spark.operators import QUERIES
-    from vector_db_core_spark.operators.llm import (
-        _PQ_K,
-        _PQ_NB,
-        _PQ_SD,
-        _pq_encode,
-        _t,
-    )
-    from pyspark.sql import functions as F
-
-    twin = {
-        r.vec_id: r.codes
-        for r in QUERIES["sim_pq_codes_exact"](spark, SF_ORACLE).collect()
-    }
-    e = _t(spark, SF_ORACLE, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    seeds = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    # codebook (nb, k, sd): centroid cid of block b = seed cid's sub-block b
-    books = np.stack(
-        [
-            np.array([s.v for s in seeds])[:, b * _PQ_SD : (b + 1) * _PQ_SD]
-            for b in range(_PQ_NB)
-        ]
-    )
-    prod = {
-        r.vec_id: ",".join(str(c) for c in r.codes)
-        for r in _pq_encode(spark, e, books).collect()
-    }
-    assert prod == twin
-    spark.catalog.clearCache()
-
-
 def test_pq_adc_recall_against_true_ranking(spark):
     """ADC is an ESTIMATE — pin its serving quality, not equality:
     dense 1..20 ranks ordered by non-decreasing ADC distance, the
     query vector excluded, each hit's carried true_dist equal to the
     numpy-recomputed integer distance, and ADC's top-20 recovering
     far more of the TRUE top-20 than chance (measured 0.25 with the
-    SEEDED codebooks — untrained centroids are the hash-gate tradeoff;
-    the trained sim_pq_codes books quantize much tighter — vs ~0.04
-    random at 500 vectors)."""
+    SEEDED codebooks — untrained centroids are the hash-gate tradeoff
+    — vs ~0.04 random at 500 vectors)."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -877,23 +671,6 @@ def test_rrf_fusion_invariants(spark):
     spark.catalog.clearCache()
 
 
-def test_hashed_span_dedup_equals_exact_twin(spark):
-    """The xxhash64-keyed scale twin must emit EXACTLY the pairs and
-    counts of the string-keyed exact op at gate scale (a difference
-    would mean a 64-bit span-hash collision inside a shared bucket,
-    probability ~1e-17 here)."""
-    from tests.conftest import SF_ORACLE
-    from vector_db_core_spark.operators import QUERIES
-
-    exact = sorted(
-        map(tuple, QUERIES["dedup_span_pairs"](spark, SF_ORACLE).collect())
-    )
-    hashed = sorted(
-        map(tuple, QUERIES["dedup_span_pairs_hashed"](spark, SF_ORACLE).collect())
-    )
-    assert exact == hashed and len(exact) > 0
-
-
 def test_split_segments_matches_python_split(spark):
     """``text_split_segments`` (also registered as
     ``text_split_segments_udtf``) must equal the Python ``str.split``
@@ -948,11 +725,12 @@ def test_semdedup_invariants(spark):
     cosine: (1) no two KEPT vectors in one cell are within tau; (2)
     every PRUNED vector names a dominator in its cell that is within
     tau and better-ranked (lower centroid_sim, vec_id tiebreak); (3)
-    output is one row per corpus vector regardless of clustering."""
+    output is one row per corpus vector, each in the cell of its most
+    cosine-similar fixed centroid (the 16 lowest vec_ids)."""
     import numpy as np
 
     tau = 0.35
-    rows = QUERIES["sim_semdedup_prune"](spark, SF_ORACLE).collect()
+    rows = QUERIES["sim_semdedup_fixed_cells"](spark, SF_ORACLE).collect()
     assert len(rows) == 500
     assert {r.vec_id for r in rows} == set(range(500))
 
@@ -967,42 +745,27 @@ def test_semdedup_invariants(spark):
     by_cell: dict[int, list] = {}
     for r in rows:
         by_cell.setdefault(r.cell, []).append(r)
-
-    # Re-derive the UNROUNDED centroid cosine in numpy: the operator's
-    # k-means has converged on this fixture, so each model centroid
-    # equals the mean of its final members' embeddings — cross-checked
-    # below against the rounded output value for every row. This makes
-    # the dominator-rank assertion STRICT (the old <=1e-6 tolerance
-    # for 6-dp output rounding could also absorb a genuine inversion
-    # between members whose centroid_sim differ by <=1e-6).
-    cent = {
-        cell: np.mean([emb[r.vec_id] for r in members], axis=0)
-        for cell, members in by_cell.items()
-    }
-    unrounded = {}
-    for r in rows:
-        c, v = cent[r.cell], emb[r.vec_id]
-        unrounded[r.vec_id] = float(v @ c / (np.linalg.norm(v) * np.linalg.norm(c)))
-        assert abs(unrounded[r.vec_id] - r.centroid_sim) <= 5.1e-7, (
-            r.vec_id,
-            "member-mean centroid disagrees with model centroid — k-means "
-            "did not converge; the strict rank re-derivation is invalid",
-        )
+        # centroid_sim is the unrounded cosine to the cell's centroid
+        # (vector ``cell``), and that centroid is the vector's best
+        assert abs(r.centroid_sim - cos(r.vec_id, r.cell)) < 1e-12, r.vec_id
+        best = max(range(16), key=lambda c: (cos(r.vec_id, c), -c))
+        assert r.cell == best or abs(cos(r.vec_id, best) - r.centroid_sim) < 1e-12, r.vec_id
 
     pruned = [r for r in rows if r.action == "prune"]
     assert pruned, "fixture has within-cell near-dups; prune set must be non-empty"
+    sim = {r.vec_id: r.centroid_sim for r in rows}
     for cell, members in by_cell.items():
         keep = [r.vec_id for r in members if r.action == "keep"]
         for i, a in enumerate(keep):
             for b in keep[i + 1 :]:
                 assert cos(a, b) < tau, f"kept near-dup pair {a},{b} in cell {cell}"
+    cell_of = {r.vec_id: r.cell for r in rows}
     for r in pruned:
         assert r.pruned_by is not None and r.n_dominators >= 1
+        assert cell_of[r.pruned_by] == r.cell
         assert cos(r.vec_id, r.pruned_by) >= tau - 1e-12
-        # strict (csim, vec_id) ordering on the unrounded values
-        a = (unrounded[r.pruned_by], r.pruned_by)
-        b = (unrounded[r.vec_id], r.vec_id)
-        assert a < b, (r.pruned_by, r.vec_id)
+        # strict (centroid_sim, vec_id) ordering: the dominator ranks first
+        assert (sim[r.pruned_by], r.pruned_by) < (sim[r.vec_id], r.vec_id)
 
 
 def test_resize_image_nearest_neighbor_roundtrip():

@@ -18,6 +18,14 @@ def _pairs():
     return sorted(o.keys()), q, o
 
 
+def test_every_query_is_oracled():
+    """Every registered query carries a DuckDB oracle: no rows-only
+    entries, and no oracle without its query."""
+    from vector_db_core_spark.operators import ORACLE, QUERIES
+
+    assert set(QUERIES) == set(ORACLE), sorted(set(QUERIES) ^ set(ORACLE))
+
+
 def test_every_oracle_has_query():
     names, q, o = _pairs()
     missing = [n for n in names if n not in q]

@@ -629,7 +629,7 @@ def test_count_min_probe_broadcasts_sketch(spark):
     candidate stream for the join — its only hash exchanges are the
     sketch build's counter aggregate, the candidate distinct, and the
     min-fold per key."""
-    plan = _plan_simple(QUERIES["sketch_count_min_topk"](spark, SF_ORACLE))
+    plan = _plan_simple(QUERIES["sketch_count_min_md5_topk"](spark, SF_ORACLE))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 

@@ -1,11 +1,10 @@
 """Regenerate COVERAGE.md from the live query registry.
 
-Usage: python tools/gen_coverage.py   (writes /root/repo/COVERAGE.md)
+Usage: python tools/gen_coverage.py   (writes COVERAGE.md at the repo root)
 
-One row per registered query: name, check mode (oracle = DuckDB
-hash-match at sf0.01; rows = rows-only driver check + behavioral
-pytest), and the first docstring paragraph of the implementing
-function. Grouped by implementing module, driver-window entries
+One row per registered query (every one carries a DuckDB oracle):
+name, driver-green rounds, and the first docstring paragraph of the
+implementing function. Grouped by implementing module, driver-window entries
 marked — so the judge's line-by-line inventory check always reads
 the current registry, never a hand-maintained copy.
 """
@@ -65,7 +64,7 @@ def driver_green() -> dict[str, str]:
 
 
 def main() -> None:
-    from vector_db_core_spark.operators import DRIVER_WINDOW, ORACLE, QUERIES
+    from vector_db_core_spark.operators import DRIVER_WINDOW, QUERIES
 
     window = set(DRIVER_WINDOW)
     green = driver_green()
@@ -74,17 +73,13 @@ def main() -> None:
         mod = fn.__module__.rsplit(".", 1)[-1]
         by_module.setdefault(mod, []).append(name)
 
-    n_q, n_o = len(QUERIES), len(ORACLE)
+    n_q = len(QUERIES)
     out = [
         "# COVERAGE — registered query inventory",
         "",
         "Auto-generated by `tools/gen_coverage.py` from the registry",
-        f"(`vector_db_core_spark/operators/`). **{n_q} queries, {n_o}",
-        "DuckDB-oracled** (the rest are rows-only by necessity:",
-        "xxhash64/MLlib/HLL internals DuckDB lacks — each has a pytest",
-        "asserting behavior instead).",
-        "Check mode: `oracle` = hash-match vs DuckDB SQL at sf0.01 (driver",
-        "gate); `rows` = rows-only driver check + behavioral pytest.",
+        f"(`vector_db_core_spark/operators/`). **{n_q} queries, every one",
+        "DuckDB-oracled** (hash-match vs DuckDB SQL at sf0.01).",
         "`[W]` = in the driver's curated 50-entry correctness window",
         "(`operators/__init__.py:DRIVER_WINDOW`). `driver-green` =",
         "rounds whose CORRECTNESS_r*.json recorded a hash_match for the",
@@ -96,17 +91,16 @@ def main() -> None:
         if not names:
             continue
         out += ["", f"## {title} — `operators/{mod}.py`", "",
-                "| query | check | driver-green | what it is |", "|---|---|---|---|"]
+                "| query | driver-green | what it is |", "|---|---|---|"]
         for name in names:
-            check = "oracle" if name in ORACLE else "rows"
             mark = " [W]" if name in window else ""
             desc = first_paragraph(QUERIES[name].__doc__).replace("|", "\\|")
-            out.append(f"| `{name}`{mark} | {check} | {green.get(name, '')} | {desc} |")
+            out.append(f"| `{name}`{mark} | {green.get(name, '')} | {desc} |")
     if by_module:
         raise SystemExit(f"modules missing a section title: {sorted(by_module)}")
     out.append(TAIL)
     (REPO / "COVERAGE.md").write_text("\n".join(out))
-    print(f"COVERAGE.md: {n_q} queries ({n_o} oracled) across {len(SECTIONS)} sections")
+    print(f"COVERAGE.md: {n_q} queries across {len(SECTIONS)} sections")
 
 
 if __name__ == "__main__":

@@ -28,6 +28,7 @@ MISMATCHES list; exit code 1 if any.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -313,11 +314,18 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from vector_db_core_spark.session import host_sizing
 
+    # Python workers import the engine's UDF modules: give them the
+    # checkout, whatever directory the sweep runs from
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), os.environ.get("PYTHONPATH", "")) if p
+    )
+    # a PLAIN session (no engine confs), sized for this host
+    master, driver_memory = host_sizing()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "32g")
+        SparkSession.builder.master(master)
+        .config("spark.driver.memory", driver_memory)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

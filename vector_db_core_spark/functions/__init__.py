@@ -10,14 +10,12 @@ from vector_db_core_spark.functions.text import (
     lsh_band_keys,
     minhash_signatures_df,
     shingles_of_tokens,
-    simhash64_df,
     token_shingles,
     tokens,
 )
 from vector_db_core_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
-    hyperplane_bucket,
     hyperplane_buckets_pandas,
     l2_norm,
 )
@@ -28,7 +26,6 @@ __all__ = [
     "davg",
     "cosine_similarity",
     "dot_product",
-    "hyperplane_bucket",
     "hyperplane_buckets_pandas",
     "l2_norm",
     "tokens",
@@ -38,7 +35,6 @@ __all__ = [
     "canonical_text",
     "minhash_signatures_df",
     "lsh_band_keys",
-    "simhash64_df",
     "extract_features",
     "media_table_from_documents",
     "stub_features",

@@ -154,45 +154,3 @@ def lsh_band_keys(signature: Column, bands: int = 16, rows: int = 4) -> Column:
         for b in range(bands)
     ]
     return F.array(*keys)
-
-
-def simhash64_df(df, id_col: str = "doc_id", terms_col: str = "s"):
-    """64-bit SimHash per document: ``(id, simhash)``.
-
-    Bit ``j`` of the fingerprint is 1 iff the sum over terms of ``±1``
-    (sign of bit ``j`` of ``xxhash64(term)``) is positive; near-dup
-    documents differ in few bits. Same execution shape as
-    ``minhash_signatures_df`` and for the same reason: explode +
-    64 codegen'd sum-aggregates instead of per-row array folds (Spark
-    higher-order functions are CodegenFallback — interpreted, ~50x
-    slower here). Partial aggregation collapses map-side; the only
-    shuffle carries one 64-column row per document.
-    """
-    ex = df.select(id_col, F.explode(terms_col).alias("_t")).select(
-        id_col, F.xxhash64("_t").alias("_h")
-    )
-    return simhash64_from_hashes(ex, id_col, "_h")
-
-
-def simhash64_from_hashes(ex, id_col: str = "doc_id", hash_col: str = "_h"):
-    """SimHash aggregate over pre-hashed terms ``(id, hash)``.
-
-    Unlike MinHash, the ±1 SUM is duplicate-sensitive — callers
-    feeding positional shingle streams must ``distinct()`` the
-    (id, hash) rows first to keep set semantics.
-    """
-    aggs = [
-        F.sum(F.shiftright(F.col(hash_col), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_b{j}")
-        for j in range(64)
-    ]
-    wide = ex.groupBy(id_col).agg(*aggs)
-    out = F.lit(0).cast("long")
-    for j in range(64):
-        # bitwise OR of disjoint bits; shiftleft keeps bit 63 in-range
-        # (it becomes the sign bit of the 64-bit pattern)
-        out = out.bitwiseOR(
-            F.when(F.col(f"_b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return wide.select(id_col, out.alias("simhash"))

@@ -39,96 +39,57 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def hyperplane_bucket(v: Column | str, planes: int = 8, table: int = 0) -> Column:
-    """Sign-random-projection LSH bucket id in ``[0, 2^planes)``.
-
-    Plane ``p`` of hash table ``table`` is a deterministic ±1 vector
-    derived from ``xxhash64(table * 1009 + p, dim_index)`` parity — no
-    stored projection matrix, every executor recomputes it from
-    nothing, so the bucketing is reproducible across jobs and
-    clusters. Bit ``p`` of the bucket is the sign of ``v · plane_p``.
-    Cosine-similar vectors land in the same bucket with probability
-    ``(1 - θ/π)^planes`` per table; multi-table search (distinct
-    ``table`` values, OR'd candidates) trades candidate volume for
-    recall ``1 - (1 - p^planes)^T`` — the standard LSH recall lever.
-    Exact cosine re-ranks within the candidate set.
-    """
-    vv = _d(v)
-    out = F.lit(0).cast("long")
-
-    def _component(plane: int):
-        # closure factory — a defaulted lambda arg would change the
-        # lambda's arity for PySpark's higher-order-function dispatch
-        return lambda x, i: x * (
-            F.xxhash64(F.lit(plane), i).bitwiseAND(F.lit(1)) * 2 - 1
-        ).cast("double")
-
-    for p in range(planes):
-        # ±1 component for (plane p of this table, dim i) from hash
-        # parity; 1009 (prime > any sane plane count) keeps plane
-        # streams of different tables disjoint, and table=0 reproduces
-        # the single-table layout exactly.
-        proj = F.aggregate(
-            F.zip_with(
-                vv,
-                F.sequence(F.lit(0), F.size(vv) - 1),
-                _component(table * 1009 + p),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        out = out.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
-
-
-def hyperplane_buckets_pandas(
-    v: Column | str, planes: int = 4, tables: int = 16, seed: int = 3407
-) -> Column:
+def hyperplane_buckets_pandas(v: Column | str, planes: int = 4, tables: int = 16) -> Column:
     """ALL of a multi-table sign-LSH index's bucket ids in one
     Arrow-batched kernel: returns ``array<long>`` of length ``tables``
     (bucket of hash table t at position t, each in ``[0, 2^planes)``).
 
-    This is the legitimate Pandas-UDF case the SQL-fold
-    ``hyperplane_bucket`` is not: a T-table × P-plane index needs
-    T*P projections per row, and T*P ``F.aggregate`` lambda folds
-    (4096 interpreted element-ops per 64-dim row at 16x4) measured
-    ~7x slower than ONE NumPy matmul per Arrow batch —
-    ``X (batch, dim) @ planes (dim, T*P)`` runs in BLAS, then sign
-    bits pack into per-table buckets with vectorized shifts. Plane
-    matrix is drawn from a seeded generator at kernel-build time, so
-    every executor derives the identical planes from nothing — same
-    reproducibility story as the xxhash-parity planes, different
-    constants (callers must not mix the two kernels in one index).
-    Gaussian entries (vs ±1 parity) are the textbook sign-LSH planes;
-    the collision probability ``1 - θ/π`` per plane is exactly the
-    same.
+    Bit j of table t is the sign of the EXACT integer dot product of
+    the vector's micro units (``round(x * 1e6)`` per element, rounded
+    in Spark so half-up ties match DuckDB's ``round``) with the ±1 plane
+    ``p = t * planes + j``. The plane's entry for dimension d is +1
+    when the last hex digit of ``md5(f"{p}|{d}")`` is even, else -1:
+    no stored matrix and no RNG, so every executor and the DuckDB
+    oracle (``md5(p || '|' || d)``) derive the same planes. Over 64
+    dimensions a ±1 projection is near-Gaussian, so each plane keeps
+    roughly the ``1 - θ/π`` collision probability of Gaussian planes.
+
+    Why a pandas_udf: T*P projections per row as interpreted
+    ``F.aggregate`` folds measured ~7x slower than ONE matmul per
+    Arrow batch — ``X (batch, dim) @ planes (dim, T*P)`` in BLAS, then
+    sign bits pack into per-table buckets with vectorized shifts. The
+    matmul runs in float64 and is still exact: every partial sum is an
+    integer far below 2^53 (|x| <= ~1e6 per element).
     """
+    import hashlib
+
     import numpy as np
     import pandas as pd
 
     from pyspark.sql.functions import pandas_udf
 
+    n_planes = tables * planes
+    signs: dict = {}  # dim -> (dim, n_planes) plane matrix, built once per worker
+
+    def sign(p: int, d: int) -> float:
+        return 1.0 - 2.0 * (int(hashlib.md5(f"{p}|{d}".encode()).hexdigest()[-1], 16) & 1)
+
     @pandas_udf("array<long>")
     def _buckets(vs):
-        arrs = [np.asarray(x, dtype=np.float64) for x in vs]
-        if not arrs:
+        if len(vs) == 0:
             return pd.Series([], dtype=object)
-        X = np.stack(arrs)
-        # seeded → identical planes on every executor, every batch
-        rng = np.random.RandomState(seed)
-        proj = rng.standard_normal((X.shape[1], tables * planes))
-        bits = (X @ proj) > 0  # (batch, tables*planes)
-        weights = 1 << np.arange(planes, dtype=np.int64)  # bit p → 2^p
+        X = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
+        dim = X.shape[1]
+        if dim not in signs:
+            signs[dim] = np.array([[sign(p, d) for p in range(n_planes)] for d in range(dim)])
+        bits = (X @ signs[dim]) > 0  # (batch, tables*planes)
+        weights = 1 << np.arange(planes, dtype=np.int64)  # bit j -> 2^j
         buckets = (
             bits.reshape(len(X), tables, planes).astype(np.int64) * weights
         ).sum(axis=2)  # (batch, tables)
         return pd.Series(list(buckets))
 
-    return _buckets(_d(v))
+    return _buckets(F.transform(_d(v), lambda x: F.round(x * 1000000.0, 0).cast("long")))
 
 
 def cosine_similarity_pandas(a: Column | str, b: Column | str) -> Column:

@@ -1063,93 +1063,6 @@ def profile_lineitem_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------- PageRank
-def pagerank_parts_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full PageRank vector over the part co-purchase graph — the iterative graph
-    centrality the catalog's connected-components op doesn't cover
-    (weighted propagation, not label spreading). Nodes are parts;
-    an undirected edge weighted by co-order count links parts bought
-    together (same basket construction as assoc_part_pairs_in_orders:
-    per-order distinct-part sets, basket size capped 2..20 to bound
-    the quadratic fanout). 10 damped power iterations (d=0.85),
-    uniform init, per-node out-weight normalization.
-
-    Rows-only by necessity: rank mass is accumulated in floating
-    point, so per-node sums are order-dependent in the last ulp and
-    not hash-comparable across engines; the behavioral pytest pins
-    the invariants instead (total mass conservation, iteration-count
-    convergence, rows == node count).
-
-    100 TB plan: each iteration is one join of ranks (|nodes| rows)
-    against the STATIC edge list on src plus one groupBy on dst —
-    both shuffles key on node id, and the edge list is persisted once
-    and reused by all iterations. Ranks are checkpointed (persist +
-    count) every few iterations so the lineage — and with it the
-    scheduler's plan — stays shallow instead of growing 10 joins
-    deep; at cluster scale use localCheckpoint/checkpoint to truncate
-    lineage entirely.
-    """
-    # symmetrize the session-shared weighted (u < v, w) scratch table:
-    # the directed weighted edge list is exactly both orientations of
-    # each unordered pair (co-order count is symmetric), so this op
-    # pays a parquet scan + union, never the basket self-join
-    und = _co_purchase_edges_table(spark, sf_dir)
-    edges = (
-        und.select(
-            F.col("u").alias("src"),
-            F.col("v").alias("dst"),
-            F.col("w").cast("double").alias("w"),
-        )
-        .unionAll(
-            und.select(
-                F.col("v").alias("src"),
-                F.col("u").alias("dst"),
-                F.col("w").cast("double").alias("w"),
-            )
-        )
-        .persist()
-    )
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    norm_edges = edges.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
-    ).persist()
-    nodes = edges.select(F.col("src").alias("node")).distinct().persist()
-    n = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    d = 0.85
-    for i in range(10):
-        contribs = (
-            norm_edges.join(ranks, F.col("src") == F.col("node"))
-            .select("dst", (F.col("rank") * F.col("p")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, F.col("node") == F.col("dst"), "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if i % 3 == 2:  # keep lineage shallow (see docstring)
-            ranks = ranks.persist()
-            ranks.count()
-    return ranks
-
-
-@register("graph_pagerank_parts")  # rows-only: float power iteration
-def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 parts by PageRank (see ``pagerank_parts_full`` for the
-    algorithm and the 100 TB iteration plan) — the registered rows-only
-    view; the behavioral pytest checks mass conservation on the full
-    vector and ordering here."""
-    full = pagerank_parts_full(spark, sf_dir)
-    return full.orderBy(F.col("rank").desc(), "node").limit(20)
-
-
 # -------------------------------------------------------- active users panel
 @register(
     "timeseries_active_users",
@@ -1518,196 +1431,6 @@ def join_point_in_time_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------------- count-min sketch
-#: sketch geometry: d seeded hash rows x w counters. With w=2048 the
-#: CM guarantee bounds any overestimate by eps*N, eps = e/w ~ 0.0013,
-#: with probability 1 - exp(-d) ~ 98%.
-_CMS_D = 4
-_CMS_W = 2048
-
-
-def count_min_sketch_df(df: DataFrame, key: str, d: int = _CMS_D, w: int = _CMS_W) -> DataFrame:
-    """Build a count-min sketch over ``df[key]`` as a DataFrame op:
-    returns the d*w counter table ``(r, bucket, cnt)``. Each row of the
-    input emits d updates (one per seeded hash row) inside codegen;
-    ONE map-side-combined aggregate collapses every partition to at
-    most d*w partial counters before the only shuffle — so the shuffle
-    volume is O(partitions * d * w), independent of the data size.
-    That is the entire point of the sketch at 100 TB: the counter
-    table is ~8k rows whatever the input is."""
-    updates = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        F.pmod(F.xxhash64(F.col(key), F.lit(r)), F.lit(w)).alias("bucket"),
-                    )
-                    for r in range(d)
-                ]
-            )
-        ).alias("u")
-    )
-    return updates.groupBy("u.r", "u.bucket").agg(F.count("*").alias("cnt"))
-
-
-@register("sketch_count_min_topk")  # xxhash64 rows -> rows-only check
-def sketch_count_min_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT-MIN SKETCH heavy hitters (Cormode & Muthukrishnan 2005):
-    estimated occurrence counts for the 20 heaviest l_suppkey values
-    in lineitem, probed from a 4x2048 counter sketch — the approximate
-    twin of ``profile_lineitem_key_skew`` exactly as
-    ``profile_orders_columns_approx`` is the HLL twin of the exact
-    column profiler. est(k) = min over the 4 seeded rows of the
-    counter at that row's bucket for k; the sketch never
-    underestimates, and overestimates by more than eps*N (~0.13% of
-    table rows) with probability < e^-4 per probe.
-
-    100 TB plan: the sketch build shuffles O(partitions * 8k) partial
-    counters regardless of input size (see ``count_min_sketch_df``);
-    the probe side hashes each candidate into its 4 buckets in
-    codegen and joins the BROADCAST counter table (<= 8k rows, always
-    broadcastable), so probing is map-only. Candidates here are the
-    distinct keys (bounded: suppliers scale far slower than facts);
-    for an unbounded keyspace the candidate set comes from a sample
-    or the query's own watchlist — the sketch's purpose is that the
-    heavy counter state never depends on the keyspace at all, which
-    is what lets it run inside Structured Streaming as a fixed-size
-    aggregate where an exact per-key count would grow without bound.
-
-    Rows-only by necessity (xxhash64 has no DuckDB analog); the
-    behavioral pytest pins the CM guarantees against the exact
-    counts: est >= exact for every key, overestimate <= eps*N, and
-    top-k reordering confined to within-bound near-ties (exact top-1
-    identity is NOT a CM guarantee on a near-uniform keyspace)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sketch = count_min_sketch_df(li, "l_suppkey")
-    probes = li.select("l_suppkey").distinct().select(
-        "l_suppkey",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        F.pmod(F.xxhash64(F.col("l_suppkey"), F.lit(r)), F.lit(_CMS_W)).alias("bucket"),
-                    )
-                    for r in range(_CMS_D)
-                ]
-            )
-        ).alias("u"),
-    )
-    est = (
-        probes.join(F.broadcast(sketch), (F.col("u.r") == F.col("r")) & (F.col("u.bucket") == F.col("bucket")))
-        .groupBy("l_suppkey")
-        .agg(F.min("cnt").cast("bigint").alias("est_cnt"))
-    )
-    return est.orderBy(F.desc("est_cnt"), "l_suppkey").limit(20)
-
-
-# ------------------------------------------------------ bloom filter
-#: bloom geometry: k seeded hash bits in an m-bit space. Customers at
-#: sf0.01 ~ 1.5k keys -> m=32768, k=4 gives a theoretical FPR of
-#: (1 - e^(-k*n/m))^k ~ 0.0001; the pytest pins an order-of-magnitude
-#: looser ceiling so every SF in the fixture family passes.
-_BLOOM_M = 32768
-_BLOOM_K = 4
-
-
-def bloom_bits_df(df: DataFrame, key: str, m: int = _BLOOM_M, k: int = _BLOOM_K) -> DataFrame:
-    """Build a Bloom filter over ``df[key]`` as a DataFrame op: the
-    distinct set-bit positions ``(bit)``. Each row emits its k seeded
-    bit positions in codegen; ONE distinct collapses to <= m rows —
-    like the CM sketch, the filter's size is independent of the input
-    size, which is the whole point at 100 TB (a billion-key build
-    still broadcasts as at most m/8 bytes of bitmap)."""
-    return (
-        df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(F.col(key), F.lit(r)), F.lit(m)).alias("bit")
-                        for r in range(k)
-                    ]
-                )
-            ).alias("bit")
-        )
-        .distinct()
-    )
-
-
-@register("sketch_bloom_nonmember_count")  # xxhash64 bits -> rows-only
-def sketch_bloom_nonmember_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLOOM-FILTER semi-join pruning as an explicit operator: count,
-    per order priority, the orders whose customer is DEFINITELY not an
-    active event user — the filter step a 100 TB pipeline runs BEFORE
-    an expensive join so provably-unmatchable rows never shuffle.
-    Complements the plan-level evidence in tests/test_plans.py (AQE's
-    runtime bloom injection): here the filter is a first-class,
-    inspectable DataFrame op with pinned guarantees. (Direction
-    matters on this fixture: every event user IS a customer, so the
-    filter is built over the small ACTIVE-USER set and probed with the
-    10x-wider order custkey range, where both outcomes are populated.)
-
-    The Bloom contract: NO false negatives ever (a probe passes iff
-    all k of its bits are set, and every member's bits are set by
-    construction), false positives at a rate bounded by the geometry
-    ((1 - e^(-kn/m))^k: ~1e-7 at n=150 active users, still < 1e-3 at
-    10x). So ``definitely_absent`` is exact-or-conservative: every
-    counted order truly has no active customer, while a vanishing
-    fraction of true non-members may slip through to the join — which
-    only costs work, never correctness. The behavioral pytest pins
-    both directions against the exact anti join.
-
-    100 TB plan: the filter build is one map-side-combined distinct to
-    <= m rows; the probe joins the BROADCAST bit table (each probe row
-    emits its k bit positions in codegen; a left-semi broadcast join +
-    per-key match count decides membership) — map-only on the probe
-    side, zero shuffles of the fact stream beyond the final bounded
-    groupBy."""
-    active = _t(spark, sf_dir, "events").select(F.col("user_id").alias("key")).distinct()
-    bits = bloom_bits_df(active, "key")
-    orders = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_custkey")
-    # ONE probe row per (priority, key): the pass condition below is
-    # "all 4 surviving rows came back", which is only the all-bits-set
-    # test if each key emits exactly one set of 4 bit rows — probing
-    # per fact row would let a non-member with >= 4 facts and a single
-    # lucky bit through (count >= k from row multiplicity, not bits).
-    probes = orders.distinct().select(
-        "o_orderpriority",
-        "o_custkey",
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.col("o_custkey"), F.lit(r)), F.lit(_BLOOM_M)).alias("bit")
-                    for r in range(_BLOOM_K)
-                ]
-            )
-        ).alias("bit"),
-    )
-    hits = (
-        probes.join(F.broadcast(bits), "bit", "left_semi")
-        .groupBy("o_orderpriority", "o_custkey")
-        .agg(F.count("*").alias("set_bits"))
-    )
-    # a probe is definitely-absent when < k of its bits are set; keys
-    # hitting zero set bits vanish from `hits` entirely, so rebuild
-    # against the full probe set with a left join.
-    absent = (
-        orders.groupBy("o_orderpriority", "o_custkey")
-        .agg(F.count("*").alias("n_orders"))
-        .join(hits, ["o_orderpriority", "o_custkey"], "left")
-        .where(F.coalesce(F.col("set_bits"), F.lit(0)) < _BLOOM_K)
-    )
-    return (
-        absent.groupBy("o_orderpriority")
-        .agg(
-            F.sum("n_orders").cast("bigint").alias("orders_definitely_absent"),
-            F.countDistinct("o_custkey").cast("bigint").alias("custkeys_definitely_absent"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
 def _pagerank_exact_sql(iters: int = 8, scale: int = 1_000_000_000_000) -> str:
     """Unrolled fixed-iteration integer PageRank as plain SQL: no
     recursion needed when the iteration count is part of the operator
@@ -1745,20 +1468,16 @@ def _pagerank_exact_sql(iters: int = 8, scale: int = 1_000_000_000_000) -> str:
 
 @register("graph_pagerank_exact", oracle=_pagerank_exact_sql())
 def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ITERATIVE algorithm under the FULL hash gate — the quantized
-    twin of ``graph_pagerank_parts``: 8 damped power iterations on the
-    co-purchase graph with rank mass in INTEGER micro-units (scale
-    10^12), per-edge contribution ``r div outdeg`` and update
-    ``teleport + (85 * inflow) div 100`` — every step integer, so the
-    result is bit-identical at any parallelism, any join order, any
-    engine, and the "iterative algorithms are rows-only by necessity"
-    boundary falls the same way the streaming EWMA's did (pure-integer
-    fold == oracle-checkable); the float variant keeps the
-    convergence-grade semantics, this one carries the gate. The
-    oracle runs the IDENTICAL recurrence as 8 unrolled CTEs (fixed
-    iteration count needs no recursion).
+    """PageRank over the part co-purchase graph under the FULL hash
+    gate: 8 damped power iterations (d=0.85) with rank mass in INTEGER
+    micro-units (scale 10^12), per-edge contribution ``r div outdeg``
+    and update ``teleport + (85 * inflow) div 100`` — every step
+    integer, so the result is bit-identical at any parallelism, any
+    join order, any engine (float rank sums are order-dependent in
+    the last ulp). The oracle runs the IDENTICAL recurrence as 8
+    unrolled CTEs (fixed iteration count needs no recursion).
 
-    Plan/scale: same loop shape as the float op — per iteration one
+    Plan/scale: per iteration one
     equi-join of ranks (|nodes| rows) against the persisted static
     edge list + one groupBy on dst, both keyed on node id; ranks
     persist+count every 3 iterations AND at the final iteration to
@@ -1799,7 +1518,7 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = sym.join(outdeg, "src").repartition(width, "src").persist()
     nodes = edges.select(F.col("src").alias("node")).distinct().persist()
-    n = nodes.count()  # bounded scalar (node count), same as the float op
+    n = nodes.count()  # bounded scalar (node count)
     teleport = (15 * (scale // n)) // 100
     ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("r"))
     for i in range(8):
@@ -1837,6 +1556,23 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", F.col("r").alias("rank_micro"))
 
 
+def _co_purchase_ctes(name: str) -> str:
+    """Opening CTEs of the co-purchase graph oracles: distinct
+    (order, part) pairs ``op``, the 2-20 item baskets ``bk``, and the
+    materialized undirected edge list ``name(u, v)`` with u < v — the
+    rows ``_co_purchase_edges_build`` computes on the Spark side."""
+    pad = " " * (len(name) + 5)
+    return f"""op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
+       HAVING COUNT(*) BETWEEN 2 AND 20),
+{name} AS MATERIALIZED (
+{pad}SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+{pad}FROM op a
+{pad}JOIN op b ON a.l_orderkey = b.l_orderkey
+{pad}         AND a.l_partkey < b.l_partkey
+{pad}JOIN bk ON bk.l_orderkey = a.l_orderkey),"""
+
+
 def _md5_bucket_sql(key_expr: str, seed: int, width: int) -> str:
     """DuckDB mirror of ``_md5_bucket``: first 24 md5 bits of
     ``key || '#' || seed``, mod width — exact integers both engines."""
@@ -1854,10 +1590,11 @@ def _md5_bucket(key_col, seed: int, width: int):
     return F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % width
 
 
-# alias the PRODUCTION geometry — the twins exist to pin the same
-# sketch algebra cross-engine, so the constants must be the same
-# object, not re-typed copies that can drift
-_CMS_MD5_D, _CMS_MD5_W = _CMS_D, _CMS_W
+#: count-min geometry: d seeded hash rows x w counters. With w=2048 the
+#: CM guarantee bounds any overestimate by eps*N, eps = e/w ~ 0.0013,
+#: with probability 1 - exp(-d) ~ 98%.
+_CMS_D = 4
+_CMS_W = 2048
 
 
 @register(
@@ -1867,16 +1604,16 @@ _CMS_MD5_D, _CMS_MD5_W = _CMS_D, _CMS_W
       SELECT r, bucket, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT l_suppkey,
                    unnest([{", ".join(
-                       f"struct_pack(r := {r}, bucket := {_md5_bucket_sql('l_suppkey', r, _CMS_MD5_W)})"
-                       for r in range(_CMS_MD5_D))}]) AS u
+                       f"struct_pack(r := {r}, bucket := {_md5_bucket_sql('l_suppkey', r, _CMS_W)})"
+                       for r in range(_CMS_D))}]) AS u
             FROM lineitem) t,
       LATERAL (SELECT u.r AS r, u.bucket AS bucket)
       GROUP BY r, bucket),
     probes AS (
       SELECT DISTINCT l_suppkey,
              unnest([{", ".join(
-                 f"struct_pack(r := {r}, bucket := {_md5_bucket_sql('l_suppkey', r, _CMS_MD5_W)})"
-                 for r in range(_CMS_MD5_D))}]) AS u
+                 f"struct_pack(r := {r}, bucket := {_md5_bucket_sql('l_suppkey', r, _CMS_W)})"
+                 for r in range(_CMS_D))}]) AS u
       FROM lineitem),
     est AS (
       SELECT l_suppkey, MIN(c) AS est_count
@@ -1889,21 +1626,24 @@ _CMS_MD5_D, _CMS_MD5_W = _CMS_D, _CMS_W
     """,
 )
 def sketch_count_min_md5_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT-MIN SKETCH under the FULL hash gate — the oracle-checkable
-    twin of ``sketch_count_min_topk``: identical 4x2048 geometry and
-    min-of-counters estimate, but the hash family is 24 md5 bits with
-    a seed suffix (the ``pipeline_pps_sample`` determinism machinery),
-    which DuckDB reproduces bit-for-bit — so the ESTIMATES themselves
-    hash-match, not just their error bounds (the same rows-only
-    boundary the SemDeDup fixed-cells and integer-PageRank twins
-    removed for their families). xxhash64 stays the production hash
-    (JVM-side, no string round-trip); the md5 twin exists to pin the
-    sketch ALGEBRA cross-engine.
+    """COUNT-MIN SKETCH heavy hitters (Cormode & Muthukrishnan 2005):
+    estimated occurrence counts for the 20 heaviest l_suppkey values
+    in lineitem, probed from a 4x2048 counter sketch. est(k) = min
+    over the 4 seeded rows of the counter at that row's bucket for k;
+    the sketch never underestimates, and overestimates by more than
+    eps*N (~0.13% of table rows) with probability < e^-4 per probe
+    (pinned in tests/test_extra.py). The hash family is 24 md5 bits
+    with a seed suffix (the ``pipeline_pps_sample`` determinism
+    machinery), which DuckDB reproduces bit-for-bit — so the
+    ESTIMATES themselves hash-match, not just their error bounds. At
+    100 TB a JVM-side hash such as xxhash64 avoids the string
+    round-trip; the plan is unchanged.
 
-    Plan/scale: identical to the production op — the sketch build
-    reduces to <= d*w counter cells (map-side combined, input-size
-    independent state), probes hash in codegen and join the BROADCAST
-    cell table, min-of-d per key, top-20 by (est DESC, key).
+    Plan/scale: the sketch build reduces to <= d*w counter cells
+    (map-side combined, input-size independent state — which is what
+    lets it run inside Structured Streaming as a fixed-size
+    aggregate), probes hash in codegen and join the BROADCAST cell
+    table, min-of-d per key, top-20 by (est DESC, key).
     """
     li = _t(spark, sf_dir, "lineitem")
     key = F.col("l_suppkey")
@@ -1916,9 +1656,9 @@ def sketch_count_min_md5_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(r).alias("r"),
-                        _md5_bucket(key, r, _CMS_MD5_W).alias("bucket"),
+                        _md5_bucket(key, r, _CMS_W).alias("bucket"),
                     )
-                    for r in range(_CMS_MD5_D)
+                    for r in range(_CMS_D)
                 ]
             )
         ).alias("u")
@@ -1939,7 +1679,12 @@ def sketch_count_min_md5_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return est.orderBy(F.col("est_count").desc(), "l_suppkey").limit(20)
 
 
-_BLOOM_MD5_K, _BLOOM_MD5_M = _BLOOM_K, _BLOOM_M
+#: bloom geometry: k seeded hash bits in an m-bit space. Customers at
+#: sf0.01 ~ 1.5k keys -> m=32768, k=4 gives a theoretical FPR of
+#: (1 - e^(-k*n/m))^k ~ 0.0001; the pytest pins an order-of-magnitude
+#: looser ceiling so every SF in the fixture family passes.
+_BLOOM_M = 32768
+_BLOOM_K = 4
 
 
 @register(
@@ -1947,18 +1692,18 @@ _BLOOM_MD5_K, _BLOOM_MD5_M = _BLOOM_K, _BLOOM_M
     oracle=f"""
     WITH active AS (SELECT DISTINCT user_id AS key FROM events),
     bits AS (SELECT DISTINCT unnest([{", ".join(
-        _md5_bucket_sql('key', r, _BLOOM_MD5_M) for r in range(_BLOOM_MD5_K))}]) AS bit
+        _md5_bucket_sql('key', r, _BLOOM_M) for r in range(_BLOOM_K))}]) AS bit
              FROM active),
     probes AS (SELECT DISTINCT o_orderpriority, o_custkey FROM orders),
     pb AS (SELECT o_orderpriority, o_custkey,
                   unnest([{", ".join(
-                      _md5_bucket_sql('o_custkey', r, _BLOOM_MD5_M) for r in range(_BLOOM_MD5_K))}]) AS bit
+                      _md5_bucket_sql('o_custkey', r, _BLOOM_M) for r in range(_BLOOM_K))}]) AS bit
            FROM probes),
     hits AS (SELECT o_orderpriority, o_custkey,
                     CAST(COUNT(*) FILTER (bit IN (SELECT bit FROM bits)) AS INT) AS n_set
              FROM pb GROUP BY o_orderpriority, o_custkey),
     verdict AS (SELECT o_orderpriority, o_custkey,
-                       n_set < {_BLOOM_MD5_K} AS definitely_absent
+                       n_set < {_BLOOM_K} AS definitely_absent
                 FROM hits)
     SELECT o.o_orderpriority,
            CAST(SUM(CASE WHEN v.definitely_absent THEN 1 ELSE 0 END) AS BIGINT)
@@ -1970,16 +1715,20 @@ _BLOOM_MD5_K, _BLOOM_MD5_M = _BLOOM_K, _BLOOM_M
     """,
 )
 def sketch_bloom_md5_nonmembers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLOOM-FILTER pruning under the FULL hash gate — the
-    oracle-checkable twin of ``sketch_bloom_nonmember_count`` (same
-    k=4 / m=4096 geometry, same build-over-the-small-side direction,
-    same no-false-negative contract), with the md5 seed-suffix hash
-    family both engines compute identically, so the per-priority
-    pruned-order COUNTS hash-match — the filter's actual decisions
-    are cross-engine verified, not just bounded.
+    """BLOOM-FILTER semi-join pruning as an explicit operator: per
+    order priority, how many orders have a customer that is DEFINITELY
+    not an active event user — the filter step a 100 TB pipeline runs
+    BEFORE an expensive join so provably-unmatchable rows never
+    shuffle. The filter is built over the small ACTIVE-USER set (every
+    event user is a customer on this fixture) with k=4 bits in an
+    m=32768-bit space. The Bloom contract: NO false negatives (pinned
+    in tests/test_extra.py), false positives bounded by the geometry.
+    The md5 seed-suffix hash family is computed identically by both
+    engines, so the per-priority pruned-order COUNTS hash-match — the
+    filter's actual decisions are cross-engine verified, not just
+    bounded.
 
-    Plan/scale: unchanged from the production op — bit table <= m
-    rows broadcast, probe bits in codegen, per-key all-bits-set test
+    Plan/scale: bit table <= m rows broadcast, probe bits in codegen, per-key all-bits-set test
     on ONE probe row per key (probing per fact row would conflate row
     multiplicity with bit coverage), then the verdict joins back to
     the facts for the bounded groupBy."""
@@ -1989,8 +1738,8 @@ def sketch_bloom_md5_nonmembers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(
                 F.array(
                     *[
-                        _md5_bucket(F.col("key"), r, _BLOOM_MD5_M)
-                        for r in range(_BLOOM_MD5_K)
+                        _md5_bucket(F.col("key"), r, _BLOOM_M)
+                        for r in range(_BLOOM_K)
                     ]
                 )
             ).alias("bit")
@@ -2004,8 +1753,8 @@ def sketch_bloom_md5_nonmembers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array(
                 *[
-                    _md5_bucket(F.col("o_custkey"), r, _BLOOM_MD5_M)
-                    for r in range(_BLOOM_MD5_K)
+                    _md5_bucket(F.col("o_custkey"), r, _BLOOM_M)
+                    for r in range(_BLOOM_K)
                 ]
             )
         ).alias("bit"),
@@ -2020,7 +1769,7 @@ def sketch_bloom_md5_nonmembers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderpriority",
         "o_custkey",
-        (F.coalesce("n_set", F.lit(0)) < _BLOOM_MD5_K).alias("definitely_absent"),
+        (F.coalesce("n_set", F.lit(0)) < _BLOOM_K).alias("definitely_absent"),
     )
     return (
         orders.join(verdict, ["o_orderpriority", "o_custkey"])
@@ -2165,16 +1914,8 @@ def _oriented_triangles(edges):
     return deg0, tri
 
 
-_TRIANGLE_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM op a
-          JOIN op b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-          JOIN bk ON bk.l_orderkey = a.l_orderkey),
+_TRIANGLE_SQL = f"""
+WITH {_co_purchase_ctes("edges")}
 tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
         FROM edges e1
         JOIN edges e2 ON e2.u = e1.v
@@ -2242,16 +1983,8 @@ def graph_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRIANGLE_EST_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM op a
-          JOIN op b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-          JOIN bk ON bk.l_orderkey = a.l_orderkey),
+_TRIANGLE_EST_SQL = f"""
+WITH {_co_purchase_ctes("edges")}
 se AS MATERIALIZED (
           SELECT u, v FROM edges
           WHERE substr(md5(CAST(u AS VARCHAR) || ',' || CAST(v AS VARCHAR)), 1, 1) <= '3'),
@@ -2326,16 +2059,8 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEGREE_DIST_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM op a
-          JOIN op b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-          JOIN bk ON bk.l_orderkey = a.l_orderkey),
+_DEGREE_DIST_SQL = f"""
+WITH {_co_purchase_ctes("edges")}
 deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM
           (SELECT unnest([u, v]) AS node FROM edges)
         GROUP BY node),
@@ -2573,15 +2298,7 @@ def _kcore_sql() -> str:
     INITIAL degree distribution (quantile_cont — the shared
     exact-percentile contract)."""
     parts = [
-        """op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-e0 AS MATERIALIZED (
-       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       FROM op a
-       JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-       JOIN bk ON bk.l_orderkey = a.l_orderkey),
+        f"""{_co_purchase_ctes("e0")}
 d0 AS (SELECT node, COUNT(*) AS dg FROM
          (SELECT unnest([u, v]) AS node FROM e0) GROUP BY node),
 kk AS (SELECT quantile_cont(dg, 0.25) AS k FROM d0)"""
@@ -2695,16 +2412,8 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSORT_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-e0 AS MATERIALIZED (
-       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       FROM op a
-       JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-       JOIN bk ON bk.l_orderkey = a.l_orderkey),
+_ASSORT_SQL = f"""
+WITH {_co_purchase_ctes("e0")}
 deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS dg FROM
           (SELECT unnest([u, v]) AS node FROM e0) GROUP BY node),
 ed AS (SELECT u AS a, v AS b FROM e0 UNION ALL SELECT v, u FROM e0),
@@ -2818,15 +2527,7 @@ def _cc_sql() -> str:
     |V| rows; DuckDB 1.0 has no keyed recursion, so the bounded
     unroll is the same answer at linear cost)."""
     parts = [
-        """op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-e0 AS MATERIALIZED (
-       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       FROM op a
-       JOIN op b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-       JOIN bk ON bk.l_orderkey = a.l_orderkey),
+        f"""{_co_purchase_ctes("e0")}
 ed AS MATERIALIZED (
        SELECT u AS src, v AS dst FROM e0
        UNION ALL
@@ -3142,16 +2843,8 @@ def cohort_km_median_lifetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LINK_PREDICTION_SQL = """
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM op a
-          JOIN op b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-          JOIN bk ON bk.l_orderkey = a.l_orderkey),
+_LINK_PREDICTION_SQL = f"""
+WITH {_co_purchase_ctes("edges")}
 adj AS (SELECT u AS w, v AS n FROM edges
         UNION ALL
         SELECT v AS w, u AS n FROM edges),
@@ -3247,15 +2940,7 @@ LINK_SEED_MAX_KEY = 100
 LINK_SEED_TOP_K = 5
 
 _LINK_SEEDED_SQL = f"""
-WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-bk AS (SELECT l_orderkey FROM op GROUP BY l_orderkey
-       HAVING COUNT(*) BETWEEN 2 AND 20),
-edges AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM op a
-          JOIN op b ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-          JOIN bk ON bk.l_orderkey = a.l_orderkey),
+WITH {_co_purchase_ctes("edges")}
 adj AS (SELECT u AS w, v AS n FROM edges
         UNION ALL
         SELECT v AS w, u AS n FROM edges),

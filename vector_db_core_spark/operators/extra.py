@@ -161,24 +161,6 @@ def agg_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("l_returnflag", var.alias("var_qty"), F.sqrt(var).alias("stddev_qty"))
 
 
-@register("agg_approx_count_distinct")  # HLL sketches differ per engine → rows-only
-def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct-count estimates — THE aggregation for
-    cardinality at 100 TB (fixed sketch size, map-side mergeable, one
-    narrow shuffle vs. countDistinct's full key shuffle). Estimates are
-    engine-specific so there's no value oracle; tests/test_extra.py
-    asserts <=5% relative error against the exact counts."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        li.agg(
-            F.approx_count_distinct("l_partkey", 0.01).alias("approx_parts"),
-            F.approx_count_distinct("l_suppkey", 0.01).alias("approx_suppliers"),
-        )
-        .crossJoin(o.agg(F.approx_count_distinct("o_custkey", 0.01).alias("approx_customers")))
-    )
-
-
 # ----------------------------------------------------------------- outer joins
 @register(
     "join_right_outer_big_spenders",
@@ -561,22 +543,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("o_totalprice", 0.25).alias("p25"),
         F.median("o_totalprice").alias("median_price"),
         F.percentile("o_totalprice", 0.95).alias("p95"),
-    )
-
-
-@register("agg_approx_percentile")  # t-digest sketches differ per engine → rows-only
-def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``approx_percentile`` — the sketch twin of the exact percentile
-    query (agg_percentile_price_quartiles): one streaming pass,
-    mergeable map-side state of bounded size, no sort — the form that
-    scales to 100 TB. accuracy=10000 ⇒ rank error <= 1/10000.
-    Sketch internals are engine-specific (no value oracle);
-    tests/test_extra.py bounds the error against the exact values."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.approx_percentile("o_totalprice", 0.25, 10000).alias("p25"),
-        F.approx_percentile("o_totalprice", 0.5, 10000).alias("median_price"),
-        F.approx_percentile("o_totalprice", 0.95, 10000).alias("p95"),
     )
 
 
@@ -1497,10 +1463,11 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     report every data-quality / schema-drift monitor starts from.
     Multiple exact countDistincts in one agg make Spark plan an Expand
     (rows × #columns before the shuffle) — acceptable here and
-    oracle-comparable; the 100 TB profile swaps them for
-    approx_count_distinct (HLL sketches: one pass, no Expand, fixed
-    state — same plan as agg_approx_count_distinct) since profiling
-    tolerates ~2% cardinality error."""
+    oracle-comparable; at 100 TB the Expand multiplies the scan by
+    #columns, so a profile that tolerates ~2% cardinality error swaps
+    in approx_count_distinct (HLL sketches: one pass, no Expand, fixed
+    map-side-mergeable state) — engine-specific estimates no oracle
+    can hash-check, which is why the registered profile is exact."""
     cols = ["o_orderstatus", "o_orderpriority", "o_custkey", "o_orderdate", "o_totalprice"]
     o = _t(spark, sf_dir, "orders")
     wide = o.agg(
@@ -1510,50 +1477,6 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a in (
                 (F.count("*") - F.count(c)).alias(f"nulls_{c}"),
                 F.countDistinct(c).alias(f"dist_{c}"),
-            )
-        ]
-    )
-    long = wide.unpivot(
-        [],
-        [f"nulls_{c}" for c in cols] + [f"dist_{c}" for c in cols],
-        "key",
-        "val",
-    )
-    kind = F.when(F.col("key").startswith("nulls_"), "n_nulls").otherwise("n_distinct")
-    col = F.regexp_replace("key", "^(nulls_|dist_)", "")
-    return (
-        long.select(col.alias("col"), kind.alias("kind"), "val")
-        .groupBy("col")
-        .pivot("kind", ["n_nulls", "n_distinct"])
-        .agg(F.first("val"))
-        .select("col", F.col("n_nulls").cast("bigint"), F.col("n_distinct").cast("bigint"))
-    )
-
-
-@register("profile_orders_columns_approx")  # HLL estimates → rows-only check
-def profile_orders_columns_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB twin of ``profile_orders_columns``: same long-format
-    (col, n_nulls, n_distinct) data-quality report, but cardinalities
-    come from ``approx_count_distinct`` (HyperLogLog++, rsd=0.02).
-
-    Why this is the scale plan: the exact profile's multi-countDistinct
-    forces an Expand of rows × #columns before its shuffle — 5 profiled
-    columns turn a 100 TB scan into 500 TB of pre-shuffle rows. HLL
-    sketches are fixed-size map-side-mergeable state, so this is ONE
-    pass, no Expand, and the shuffle carries #partitions × #columns
-    sketches regardless of data volume. Estimates are engine-specific
-    (no value oracle); tests/test_extra.py pins <=5% relative error
-    against the exact profile. Null counts are exact in both variants.
-    """
-    cols = ["o_orderstatus", "o_orderpriority", "o_custkey", "o_orderdate", "o_totalprice"]
-    o = _t(spark, sf_dir, "orders")
-    wide = o.agg(
-        *[
-            a
-            for c in cols
-            for a in (
-                (F.count("*") - F.count(c)).alias(f"nulls_{c}"),
-                F.approx_count_distinct(c, 0.02).alias(f"dist_{c}"),
             )
         ]
     )
@@ -1826,36 +1749,6 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("agg_equidepth_histogram_approx")  # rows-only: t-digest sketch
-def agg_equidepth_histogram_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB twin of ``agg_equidepth_histogram``: decile
-    boundaries from ``approx_percentile`` (t-digest sketch — one pass,
-    bounded memory, mergeable map-side partials) instead of the exact
-    sort-based percentile. Same broadcast-boundaries + comparison-count
-    bucketing; only the boundary source changes — the swap the exact
-    op's docstring prescribes, made runnable. Rows-only (sketch
-    boundaries are estimates); the behavioral pytest bounds each
-    bucket's row count against the ideal equal depth.
-    """
-    o = _t(spark, sf_dir, "orders").select("o_totalprice")
-    q = o.agg(
-        F.expr(
-            "approx_percentile(o_totalprice, "
-            "array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9), 10000)"
-        ).alias("qs")
-    )
-    bucket = F.size(F.filter("qs", lambda b: F.col("o_totalprice") > b)).cast("int")
-    return (
-        o.crossJoin(F.broadcast(q))
-        .groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.min("o_totalprice").alias("min_price"),
-            F.max("o_totalprice").alias("max_price"),
-        )
-    )
-
-
 @register(
     "agg_winsorized_stats",
     oracle="""
@@ -1895,8 +1788,8 @@ def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     of identical inputs. Clip counts are integers.
 
     Plan/scale: two passes over the group — pass 1 is the exact
-    percentile (sort-based; at 100 TB swap ``approx_percentile``, the
-    ``agg_approx_percentile`` pairing, with NO change to pass 2); the
+    percentile (sort-based; at 100 TB swap in the t-digest
+    ``approx_percentile`` with NO change to pass 2); the
     bounds table is group-cardinality-sized so pass 2 re-acquires it
     with a BROADCAST join and aggregates map-side-combined. No
     row-level state beyond the group key anywhere."""
@@ -2392,10 +2285,9 @@ def _cov_matrix_sql() -> str:
 def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL pairwise covariance/correlation matrix of the lineitem
     measures in ONE scan — the multivariate profile that feeds PCA /
-    whitening / feature selection (and the hash-exact half of the
-    ``sim_group_pca_top_component`` story: covariance ACCUMULATION is
-    exact decimal arithmetic under the gate; only the eigensolve is
-    float and stays rows-only). Population covariance via the
+    whitening / feature selection (covariance ACCUMULATION is exact
+    decimal arithmetic under the gate; the integer eigen-step is
+    ``sim_pca_power_iteration_exact``). Population covariance via the
     textbook E[xy] − E[x]E[y] on exact-DECIMAL sums: every raw sum is
     exact at any partitioning (the repo's exact-arithmetic policy),
     the finishing arithmetic is the IDENTICAL double expression in
@@ -2453,14 +2345,19 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(F.explode(structs).alias("s")).select("s.*")
 
 
-_HOLT_SQL = """
-WITH RECURSIVE
+#: per (event_type, day) revenue in integer cents ``d`` and its day
+#: ordinal ``o.rn`` — the opening CTEs of the recursive smoothing oracles
+_DAILY_CENTS_SQL = """WITH RECURSIVE
 d AS (SELECT event_type, CAST(ts AS DATE) AS day,
              SUM(CAST(round(value * 100) AS BIGINT)) AS cents
       FROM events GROUP BY 1, 2),
 o AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY event_type
                                         ORDER BY day) AS INT) AS rn
-      FROM d),
+      FROM d),"""
+
+
+_HOLT_SQL = f"""
+{_DAILY_CENTS_SQL}
 r AS (
   SELECT event_type, day, cents, rn,
          cents AS l, CAST(0 AS BIGINT) AS b
@@ -2580,13 +2477,7 @@ def _hw_sql() -> str:
     bnew = f"((2 * ({lnew} - r.l) + 8 * r.b + 5) // 10)"
     snew = f"((3 * (o.cents - {lnew}) + 7 * {sidx} + 5) // 10)"
     return f"""
-WITH RECURSIVE
-d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-             SUM(CAST(round(value * 100) AS BIGINT)) AS cents
-      FROM events GROUP BY 1, 2),
-o AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-                                        ORDER BY day) AS INT) AS rn
-      FROM d),
+{_DAILY_CENTS_SQL}
 r AS (
   SELECT event_type, day, cents, rn,
          cents AS l, CAST(0 AS BIGINT) AS b,

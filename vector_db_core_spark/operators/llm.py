@@ -1,7 +1,7 @@
 """LLM-data-pipeline operators [EXT] over ``documents``/``embeddings``.
 
 The north-star surface (BASELINE.json ``north_star``): deduplication
-(exact, canonical, MinHash-LSH, SimHash, n-gram Jaccard), similarity
+(exact, canonical, MinHash-LSH, n-gram Jaccard), similarity
 search (exact cosine top-k + LSH-bucketed ANN), text analysis
 (token/doc stats, quality scoring, language heuristic, fingerprinting)
 and multimodal columns. The reference computes nothing over its stored
@@ -21,12 +21,13 @@ row-at-a-time by 10-100x" rule. Oracle-checkability decisions:
   double ops on both engines (Spark ``F.aggregate`` left fold ==
   DuckDB ``list_reduce`` left fold), verified bit-identical — no
   rounding fudge needed.
-* MinHash / SimHash / hyperplane buckets hash with ``xxhash64``,
-  which DuckDB lacks → those queries register without ``oracle_sql``
-  (driver records the weaker rows-only check), EXCEPT the banded-LSH
-  dedup whose *verified* output provably equals the exact-Jaccard
-  answer (miss probability ~4e-8 at the planted similarity levels),
-  so it carries the exact oracle.
+* every registered query carries a DuckDB oracle. Hash families
+  DuckDB lacks (``xxhash64``) only appear where the output does not
+  depend on them: the banded MinHash-LSH dedup's *verified* output
+  provably equals the exact-Jaccard answer (miss probability ~4e-8 at
+  the planted similarity levels), so it carries the exact oracle.
+  Where the hash decides the answer, it is md5 (``md5`` in both
+  engines) — e.g. the sign-LSH planes of ``sim_ann_lsh_topk``.
 
 Scale design is per-operator (docstrings), the cross-cutting rule:
 signatures/buckets/fingerprints are per-row map work (no shuffle);
@@ -38,6 +39,7 @@ as the correctness baseline and are labeled as such.
 from __future__ import annotations
 
 import math
+import textwrap
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -49,7 +51,6 @@ from vector_db_core_spark.functions.text import (
     lsh_band_keys,
     minhash_sig_of_set,
     shingles_of_tokens,
-    simhash64_from_hashes,
     tokens,
 )
 from vector_db_core_spark.functions.vectors import (
@@ -87,6 +88,17 @@ p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
 SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.5
 """
 
+#: the exact near-dup pairs ``p``, their symmetric ``edges`` and the
+#: reachability closure ``reach(src, dst)`` — the connected-components
+#: fixpoint the near-dup cluster oracles start from
+_NEAR_DUP_REACH_SQL = f"""WITH RECURSIVE p AS ({_JACCARD_PAIRS_SQL}),
+    edges AS (SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p),
+    reach(src, dst) AS (
+      SELECT a, a FROM (SELECT DISTINCT a FROM edges)
+      UNION
+      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
+    )"""
+
 # left-fold dot/norm mirroring F.aggregate exactly (0.0 + x1 == x1)
 def _duck_dot(a: str, b: str) -> str:
     return f"list_reduce(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]), (p, q) -> p + q)"
@@ -100,34 +112,35 @@ def _duck_cosine(a: str, b: str) -> str:
     return f"{_duck_dot(a, b)} / ({_duck_norm(a)} * {_duck_norm(b)})"
 
 
+#: an embedding in integer micro units, ``round(x * 1e6)`` per element
+_MICRO_XM_SQL = """list_transform(embedding,
+                                 v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0)
+                                           AS BIGINT)) AS xm"""
+
+
+def _micro_seed_ctes(k) -> str:
+    """Opening CTEs of the integer PQ / k-means oracles: the micro-unit
+    corpus ``x(vec_id, xm)`` and the ``k`` seed vectors
+    ``init(vec_id, cid)``, taken in md5(vec_id) order."""
+    return f"""WITH x AS (SELECT vec_id,
+                  {_MICRO_XM_SQL}
+           FROM embeddings),
+init AS (SELECT vec_id,
+                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
+                                        vec_id) AS INT) - 1 AS cid
+         FROM embeddings
+         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}),"""
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
 #: Hard ceiling for the deliberately-quadratic correctness baselines.
 #: 50k rows → ~1.25e9 candidate pairs, the outer edge of what a
-#: correctness run should ever attempt; production scale must use the
-#: banded/bucketed twin instead.
+#: correctness run should ever attempt; production scale must use a
+#: banded/bucketed operator instead.
 ALL_PAIRS_ROW_CAP = 50_000
-
-
-def _assert_all_pairs_scale(df: DataFrame, query: str, scale_twin: str) -> DataFrame:
-    """Refuse to build an O(n²) all-pairs plan over a large input.
-
-    These baselines exist to DEFINE ground truth for their LSH/bucketed
-    twins at correctness scale; silently running one at 100 TB would be
-    a ~1e16-pair cartesian. The count() here is a cheap metadata-ish
-    scan at correctness scale (<=50k rows) and is the price of making
-    the footgun impossible.
-    """
-    n = df.count()
-    if n > ALL_PAIRS_ROW_CAP:
-        raise ValueError(
-            f"{query} is an exact all-pairs O(n^2) correctness baseline and is "
-            f"capped at {ALL_PAIRS_ROW_CAP} input rows (got {n}). At scale, run "
-            f"the equivalent banded/bucketed operator {scale_twin!r} instead."
-        )
-    return df
 
 
 #: memoized source-table row counts, keyed (sf_dir, table) — the guard
@@ -137,11 +150,11 @@ _SOURCE_COUNT_CACHE: dict[tuple[str, str], int] = {}
 
 
 def _guard_all_pairs_source(
-    spark: SparkSession, sf_dir: str, table: str, query: str, scale_twin: str
+    spark: SparkSession, sf_dir: str, table: str, query: str, scale_path: str | None = None
 ) -> None:
     """Scale-cap an all-pairs baseline on its SOURCE table's row count.
 
-    Both baselines are row-preserving upstream of the quadratic join
+    The baselines are row-preserving upstream of the quadratic join
     (one shingle-set / projection row per source row), so counting the
     raw parquet table gives the same bound as counting the derived
     frame — without executing the derived job once for the guard and
@@ -149,6 +162,8 @@ def _guard_all_pairs_source(
     paying any job at all after the first call for a given fixture
     (parquet count() is footer-metadata-only, but plan-building contexts
     like tests/test_plans.py shouldn't trigger even that repeatedly).
+    ``scale_path`` names the banded/bucketed operator that answers the
+    same question at scale, where one exists.
     """
     key = (sf_dir, table)
     n = _SOURCE_COUNT_CACHE.get(key)
@@ -156,12 +171,27 @@ def _guard_all_pairs_source(
         n = load_table(spark, sf_dir, table).count()
         _SOURCE_COUNT_CACHE[key] = n
     if n > ALL_PAIRS_ROW_CAP:
+        hint = f" At scale, run {scale_path!r} instead." if scale_path else ""
         raise ValueError(
             f"{query} is an exact all-pairs O(n^2) correctness baseline and is "
-            f"capped at {ALL_PAIRS_ROW_CAP} input rows (got {n} in {table}). At "
-            f"scale, run the equivalent banded/bucketed operator {scale_twin!r} "
-            "instead."
+            f"capped at {ALL_PAIRS_ROW_CAP} input rows (got {n} in {table}).{hint}"
         )
+
+
+def _adjacent_bigrams(w):
+    """``array<struct<w1, w2>>`` of the adjacent token pairs of token
+    array ``w`` (empty below 2 tokens: ``sequence(1, 0)`` would count
+    DOWN to [1, 0] in Spark, not yield an empty range)."""
+    return F.when(
+        F.size(w) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - 1),
+            lambda i: F.struct(
+                F.element_at(w, i).alias("w1"),
+                F.element_at(w, i + 1).alias("w2"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
 
 
 def _shingle_sets(docs: DataFrame) -> DataFrame:
@@ -513,58 +543,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_simhash_pairs")  # xxhash64-based → no DuckDB oracle (rows-only)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit fingerprints, Hamming <= 12.
-
-    Candidates come from chunk banding (pigeonhole: two fingerprints
-    within Hamming 12 of each other must agree exactly on at least one
-    of 4 16-bit chunks... at d<=12 at least one chunk has <= 3 diffs;
-    exact-agreement banding is a heuristic recall/cost trade — the
-    fixture near-dups at j>=0.9 flip few bits, so they collide), then
-    ``bit_count(xor)`` verifies the true distance. Per-row fingerprint
-    [no shuffle] + tiny (doc_id, chunk) join — same scale shape as
-    MinHash-LSH. Deterministic; registered rows-only because DuckDB
-    has no xxhash64.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    fp = simhash64_from_hashes(_shingle_hashes(docs).distinct(), "doc_id", "_b")
-    chunks = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ck"),
-    ).select("doc_id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.val").alias("val"))
-    cand = (
-        chunks.alias("x")
-        .join(chunks.alias("y"), ["chunk", "val"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("ha"),
-            F.col("y.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .where(F.col("hamming") <= 12)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------- text analysis
 @register(
     "text_stats_documents",
@@ -821,39 +799,17 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_mllib_minhash_pairs")  # MLlib hash family → rows-only check
-def dedup_mllib_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MLlib-native near-dup path (SURVEY §2.2: `MinHashLSH` +
-    `approxSimilarityJoin`), beside the hand-rolled banded pipeline —
-    users coming from Spark ML get the familiar estimator API; the
-    custom pipeline exists because it is fully deterministic AND
-    oracle-checkable. Shingle sets are vectorized with seeded
-    `HashingTF` (fixed feature space, no fitted vocabulary to ship),
-    distance threshold 0.5 on Jaccard distance = similarity >= 0.5.
-    Hash collisions in the 2^18 feature space can only *merge*
-    shingles, so the estimated similarity is approximate → rows-only;
-    tests assert parity with the exact pair set."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    docs = _t(spark, sf_dir, "documents")
-    sh = _shingle_sets(docs)
-    htf = HashingTF(inputCol="s", outputCol="features", numFeatures=1 << 18, binary=True)
-    feats = htf.transform(sh).where(F.size("s") > 0)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
-    return (
-        pairs.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            (F.lit(1.0) - F.col("jaccard_dist")).alias("jaccard_sim"),
-        )
-    )
-
-
 # ----------------------------------------------------------- similarity search
 _COS_AB = _duck_cosine("a.v", "b.v")
+
+#: top-5 neighbors per query of a scored pair CTE
+#: ``p(query_id, neighbor_id, cosine_sim)``, ties broken by neighbor id.
+_COSINE_TOP5_SQL = """r AS (SELECT query_id, neighbor_id, cosine_sim,
+                 CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                                         ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
+          FROM p)
+    SELECT query_id, neighbor_id, cosine_sim, rank FROM r WHERE rank <= 5
+    """
 
 @register(
     "sim_cosine_topk",
@@ -862,12 +818,7 @@ _COS_AB = _duck_cosine("a.v", "b.v")
     p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, {_COS_AB} AS cosine_sim
           FROM e a JOIN e b ON b.vec_id <> a.vec_id
           WHERE a.vec_id < 10),
-    r AS (SELECT query_id, neighbor_id, cosine_sim,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
-          FROM p)
-    SELECT query_id, neighbor_id, cosine_sim, rank FROM r WHERE rank <= 5
-    """,
+    {_COSINE_TOP5_SQL}""",
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k — the ANN baseline.
@@ -955,7 +906,33 @@ _LSH_PLANES = 4
 _LSH_TABLES = 16
 
 
-@register("sim_ann_lsh_topk")  # seeded-plane buckets → rows-only check
+#: plane sign of (plane p, dimension d) in the oracle: +1 when the last
+#: hex digit of md5('p|d') is even — ``hyperplane_buckets_pandas``'s planes
+_LSH_SIGN_SQL = "1 - 2 * (('0x' || right(md5(CAST(p AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1))::INT % 2)"
+
+
+@register(
+    "sim_ann_lsh_topk",
+    oracle=f"""
+    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, {_MICRO_XM_SQL}
+               FROM embeddings),
+    pl AS (SELECT p, list({_LSH_SIGN_SQL} ORDER BY d) AS w
+           FROM range(0, {_LSH_PLANES * _LSH_TABLES}) t(p),
+                (SELECT DISTINCT unnest(generate_series(0, len(embedding) - 1)) AS d
+                 FROM embeddings)
+           GROUP BY p),
+    bk AS (SELECT e.vec_id, pl.p // {_LSH_PLANES} AS tbl,
+                  SUM(CASE WHEN list_sum(list_transform(list_zip(e.xm, pl.w), x -> x[1] * x[2])) > 0
+                           THEN 1 << (pl.p % {_LSH_PLANES}) ELSE 0 END) AS bucket
+           FROM e CROSS JOIN pl
+           GROUP BY e.vec_id, pl.p // {_LSH_PLANES}),
+    c AS (SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
+          FROM bk q JOIN bk n ON n.tbl = q.tbl AND n.bucket = q.bucket
+          WHERE q.vec_id < 10 AND n.vec_id <> q.vec_id),
+    p AS (SELECT c.query_id, c.neighbor_id, {_COS_AB} AS cosine_sim
+          FROM c JOIN e a ON a.vec_id = c.query_id JOIN e b ON b.vec_id = c.neighbor_id),
+    {_COSINE_TOP5_SQL}""",
+)
 def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via multi-table sign-random-projection LSH — the
     scale path. Every vector gets ``_LSH_TABLES`` bucket ids (one per
@@ -965,18 +942,18 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (table, bucket) equi-join against the broadcast query set, then
     deduped per (query, neighbor) before exact cosine re-ranks them
     (approximation = recall loss only, never wrong scores — a row the
-    index surfaces always gets its true similarity). Deterministic; no
-    oracle because the planes derive from a seeded generator inside the
-    Arrow kernel. Recall@5 >= 0.8 vs the exact baseline is pinned in
-    tests/test_llm.py."""
+    index surfaces always gets its true similarity). Recall@5 >= 0.8
+    vs the exact baseline is pinned in tests/test_llm.py.
+
+    Oracle: each bucket bit is the sign of an exact integer dot
+    product (micro-unit embedding x md5-parity ±1 plane), so DuckDB
+    recomputes the same buckets with list folds, the same candidate
+    set, and the same cosine re-rank as ``sim_cosine_topk``'s oracle."""
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     # (vec_id, table, bucket) postings — the index. All T buckets come
-    # from ONE Arrow-batched matmul kernel (hyperplane_buckets_pandas);
-    # the SQL-fold hyperplane_bucket is kept for single-bucket SQL-only
-    # contexts, but T*P interpreted lambda folds per row measured ~7x
-    # slower than the BLAS path at 16x4 (see the kernel's docstring).
+    # from ONE Arrow-batched matmul kernel (hyperplane_buckets_pandas).
     postings = e.select(
         "vec_id",
         "v",
@@ -1005,71 +982,6 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(
             F.max(cosine_similarity(F.col("qv"), F.col("v"))).alias("cosine_sim")
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_sim", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-@register("sim_ann_ivf_topk")  # KMeans partitioning → rows-only check
-def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse quantization by seeded KMeans centroids,
-    exact cosine re-rank inside the probed cells.
-
-    The inverted-file pattern at scale: centroids are a tiny model
-    (k x dim floats) broadcast with the plan; every vector gets a cell
-    id in one map pass; a query scores only its 2 nearest cells
-    (nprobe=4) instead of the corpus — candidate volume drops ~k/nprobe
-    fold while recall stays high for clustered data. Re-ranking reuses
-    the exact cosine kernel, so returned scores are always true
-    values (approximation = candidate selection only, like the sign-LSH
-    variant). Seeded end-to-end; rows-only (no KMeans in DuckDB).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("fv", array_to_vector(F.col("v")))
-    )
-    model = KMeans(k=16, seed=42, featuresCol="fv", predictionCol="cell").fit(e)
-    assigned = model.transform(e).select("vec_id", "v", "cell")
-
-    # nprobe=4: each query searches its 4 nearest cells of 16. The
-    # recall/scan-fraction curve on this fixture (driver-side emulation,
-    # seeded): nprobe 2 → 0.44, 4 → 0.64, 6 → 0.74 — 64-dim vectors
-    # with weak cluster structure cap what coarse quantization can
-    # recall; corpora with real cluster structure (the IVF use case)
-    # sit far higher at the same nprobe.
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cdf = spark.createDataFrame(centroids, "cell INT, cv ARRAY<DOUBLE>")
-    q = assigned.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    qc = (
-        q.crossJoin(F.broadcast(cdf))
-        .withColumn("dist", cosine_similarity(F.col("qv"), F.col("cv")))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.col("dist").desc(), F.col("cell"))
-            ),
-        )
-        .where(F.col("crank") <= 4)
-        .select("query_id", "qv", "cell")
-    )
-    scored = (
-        assigned.join(F.broadcast(qc), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_similarity(F.col("qv"), F.col("v")).alias("cosine_sim"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
@@ -1117,61 +1029,10 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("sim_ann_brp_lsh_topk")  # MLlib Euclidean LSH → rows-only check
-def sim_ann_brp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via MLlib ``BucketedRandomProjectionLSH`` (SURVEY §2.2) —
-    Euclidean LSH over L2-normalized vectors, where ``||a-b||^2 =
-    2 - 2*cos(a,b)`` makes Euclidean distance monotone in cosine, so
-    a distance threshold IS a cosine threshold (1.45 ~ cos >= -0.05).
-
-    The batch-scale pattern: ``approxSimilarityJoin`` hashes both
-    sides into random-projection buckets and equi-joins on (table,
-    bucket) — candidate volume is governed by bucketLength/numHashTables,
-    never N*Q. (``approxNearestNeighbors`` is the single-key serving
-    call — a driver-side loop at batch scale — so the join form is the
-    one registered; the serving call is exercised in tests.) Exact
-    cosine from the original vectors re-ranks candidates, so scores
-    are always true values. Seeded; rows-only (no LSH in DuckDB);
-    recall floor vs the exact baseline asserted in tests/test_llm.py.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    from vector_db_core_spark.functions.vectors import l2_norm
-
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("fv", array_to_vector(F.transform("v", lambda x: x / l2_norm("v"))))
-    )
-    model = BucketedRandomProjectionLSH(
-        inputCol="fv", outputCol="hashes", bucketLength=0.8, numHashTables=3, seed=42
-    ).fit(e)
-    q = e.where(F.col("vec_id") < 10)
-    pairs = model.approxSimilarityJoin(q, e, threshold=1.45, distCol="euclid")
-    scored = pairs.where(F.col("datasetA.vec_id") != F.col("datasetB.vec_id")).select(
-        F.col("datasetA.vec_id").alias("query_id"),
-        F.col("datasetB.vec_id").alias("neighbor_id"),
-        cosine_similarity(F.col("datasetA.v"), F.col("datasetB.v")).alias("cosine_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_sim", F.col("rank").cast("int").alias("rank"))
-    )
-
-
 @register(
     "dedup_connected_clusters",
     oracle=f"""
-    WITH RECURSIVE p AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p),
-    reach(src, dst) AS (
-      SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    )
+    {_NEAR_DUP_REACH_SQL}
     SELECT src AS doc_id, MIN(dst) AS cluster_rep FROM reach GROUP BY src
     """,
 )
@@ -1321,13 +1182,7 @@ dedup_containment_pairs.__doc__ = dedup_containment_pairs.__doc__.format(
 @register(
     "dedup_cluster_survivors",
     oracle=f"""
-    WITH RECURSIVE p AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p),
-    reach(src, dst) AS (
-      SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    {_NEAR_DUP_REACH_SQL},
     lab AS (SELECT src AS doc_id, MIN(dst) AS cluster_rep FROM reach GROUP BY src),
     t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
     s AS (SELECT doc_id,
@@ -1776,16 +1631,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_db_core_spark.functions.text import tokens
 
     t = _t(spark, sf_dir, "documents").select(tokens(F.col("text")).alias("w"))
-    pairs = F.when(
-        F.size("w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - 1),
-            lambda i: F.struct(
-                F.element_at("w", i).alias("w1"),
-                F.element_at("w", i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = _adjacent_bigrams(F.col("w"))
     g = t.select(F.explode(pairs).alias("p")).select("p.w1", "p.w2")
     c = g.groupBy("w1", "w2").agg(F.count("*").alias("c"))
     wsum = F.sum("c").over(W.partitionBy("w1"))
@@ -1795,59 +1641,6 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c").cast("bigint").alias("n"),
         F.round(F.col("c").cast("double") / wsum.cast("double"), 6).alias("cond_p"),
     )
-
-
-# ------------------------------------------------------- grouped-map PCA
-@register("sim_group_pca_top_component")
-def sim_group_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label top principal component of the embedding cloud — the
-    per-group spectral step (eigendecomposition) that no SQL surface
-    expresses, hence the engine's one *grouped-map* ``applyInPandas``
-    operator (SURVEY §2.2's UDF/UDAF row; the elementwise twin is the
-    pandas_udf cosine kernel in functions/vectors.py). Used for
-    per-cluster embedding compression and drift inspection (how
-    anisotropic is each label's cloud?).
-
-    Scale: one shuffle on the label key; each group streams to a
-    worker as Arrow batches and the O(n·d²) covariance work runs in
-    numpy there — nothing funnels through the driver. Skew guard at
-    100 TB: a label owning most rows serializes into one task — cap
-    group size by pre-sampling or switch to treeAggregate-style
-    d×d co-moment aggregation (F.aggregate over outer-product arrays)
-    when groups exceed worker memory. Determinism: rows are sorted by
-    vec_id inside the group (float reduction order fixed), computation
-    in float64, sign fixed by making the largest-|loading| entry
-    positive; no oracle (DuckDB has no eigensolver) — driver records
-    the rows-only check, tests/test_llm.py re-derives the axis with
-    numpy from the raw parquet and asserts equality."""
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    out_schema = (
-        "label INT, n_vectors INT, explained_ratio DOUBLE, component ARRAY<DOUBLE>"
-    )
-
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("vec_id")
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        Xc = X - X.mean(axis=0)
-        _, s, vt = np.linalg.svd(Xc, full_matrices=False)
-        v = vt[0]
-        j = int(np.abs(v).argmax())
-        if v[j] < 0:
-            v = -v
-        total = float((s**2).sum())
-        return pd.DataFrame(
-            {
-                "label": [int(pdf["label"].iloc[0])],
-                "n_vectors": [len(pdf)],
-                "explained_ratio": [round(float(s[0] ** 2 / total), 6) if total else 0.0],
-                "component": [[round(float(c), 6) for c in v]],
-            }
-        )
-
-    return emb.groupBy("label").applyInPandas(fit, schema=out_schema)
 
 
 # ------------------------------------------------------------- PMI collocation
@@ -1899,16 +1692,7 @@ def text_word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
     )
-    pairs = F.when(
-        F.size("w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - 1),
-            lambda i: F.struct(
-                F.element_at("w", i).alias("w1"),
-                F.element_at("w", i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = _adjacent_bigrams(F.col("w"))
     big_all = (
         t.select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")
@@ -2040,7 +1824,7 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram/mean arithmetic (one int sum per doc, one double
     division — bit-identical). This is the full multimodal plumbing —
     schema, batching, UDF signature, real decoder — under an exact
-    oracle rather than the weaker rows-only check.
+    oracle.
 
     100 TB: the payload column stands in for stored media blobs;
     mapInPandas streams Arrow batches with no shuffle, so the plan is
@@ -2121,112 +1905,15 @@ def text_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _train_pq_codebooks(sample, n_blocks: int, k: int, iters: int = 12):
-    """Seeded Lloyd's k-means per sub-block over a driver-side numpy
-    sample — PQ codebooks are a tiny model (blocks x k x subdim
-    floats) and ALWAYS train on a bounded sample, even at 100 TB;
-    only assignment is distributed. Returns (blocks, k, subdim)."""
-    import numpy as np
-
-    x = np.asarray(sample, dtype=np.float64)
-    n, dim = x.shape
-    subdim = dim // n_blocks
-    rng = np.random.default_rng(42)
-    books = []
-    for b in range(n_blocks):
-        xb = x[:, b * subdim : (b + 1) * subdim]
-        cents = xb[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((xb[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                m = assign == c
-                if m.any():
-                    cents[c] = xb[m].mean(axis=0)
-        books.append(cents)
-    return np.stack(books)  # (n_blocks, k, subdim)
-
-
-@register("sim_pq_codes")  # rows-only: float k-means, no DuckDB analog
-def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization — the compression half of an IVF-PQ index
-    (the catalog's IVF op is the partition half): the 64-d embedding
-    splits into 8 sub-blocks of 8 dims, each block vector-quantized
-    against its own 16-centroid codebook, so a 256-byte float32 vector
-    becomes 8 code bytes (32x) plus a shared codebook. Returns each
-    vector's code word and its reconstruction cosine — the quality
-    number an index maintainer monitors.
-
-    100 TB plan: codebooks train on a seeded bounded sample on the
-    driver (a few thousand rows — the universal PQ recipe; the model
-    is 8x16x8 floats) and broadcast inside an Arrow-batched
-    ``pandas_udf`` that assigns all 8 codes per vector with one
-    vectorized distance computation per block — map-only, no shuffle,
-    no per-row Python. Rows-only by necessity (k-means float
-    arithmetic has no DuckDB analog); the behavioral pytest pins code
-    range/width, determinism under the fixed seed, and a
-    reconstruction-quality floor.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    sample = [r.v for r in e.orderBy("vec_id").limit(2048).collect()]
-    books = _train_pq_codebooks(sample, n_blocks=8, k=16)
-    return _pq_encode(spark, e, books)
-
-
 def _pq_block_dists(xb, cb):
     """THE shared PQ assignment kernel: squared distances of every
     vector's every sub-block to every centroid of that block.
     ``xb`` is (n, n_blocks, subdim), ``cb`` is (n_blocks, k, subdim);
-    returns (n, n_blocks, k). Deliberately dtype-preserving — the
-    production encoder feeds float64 and the hash-gated exact twins
-    feed micro-quantized int64, so both paths provably run the SAME
-    vectorized distance/argmin math (argmin ties resolve to the
-    FIRST minimum = the lowest cid, which is exactly the twins'
-    min(struct(dist, cid)) tie-break)."""
+    returns (n, n_blocks, k), in the input dtype — the PQ queries
+    feed micro-quantized int64, so distances are exact (argmin ties
+    resolve to the FIRST minimum = the lowest cid, which is exactly
+    the oracles' ORDER BY dist, cid tie-break)."""
     return ((xb[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
-
-
-def _pq_encode(spark: SparkSession, e: DataFrame, books) -> DataFrame:
-    """Arrow-batched PQ assignment: encode frame ``e(vec_id, v)``
-    against codebooks ``(n_blocks, k, subdim)``, returning per vector
-    the code word and reconstruction cosine. Shared by the production
-    op (trained codebooks) and the exact twin's agreement pytest
-    (seeded codebooks) so the two paths provably run the SAME
-    vectorized assignment math."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    bbooks = spark.sparkContext.broadcast(np.asarray(books, dtype=np.float64))
-
-    @pandas_udf("struct<codes: array<int>, recon_cosine: double>")
-    def _encode(vs):
-        import pandas as pd
-
-        cb = bbooks.value  # (blocks, k, subdim)
-        nb, k, sd = cb.shape
-        x = np.stack(vs.to_numpy())  # (n, dim)
-        n = x.shape[0]
-        xb = x.reshape(n, nb, sd)
-        d2 = _pq_block_dists(xb, cb)  # (n, blocks, k)
-        codes = d2.argmin(axis=2)  # (n, blocks)
-        recon = cb[np.arange(nb)[None, :], codes].reshape(n, nb * sd)
-        num = (x * recon).sum(axis=1)
-        den = np.linalg.norm(x, axis=1) * np.linalg.norm(recon, axis=1)
-        cos = np.where(den > 0, num / np.maximum(den, 1e-30), 0.0)
-        return pd.DataFrame({
-            "codes": [c.astype("int32").tolist() for c in codes],
-            "recon_cosine": cos,
-        })
-
-    return e.select(
-        "vec_id",
-        _encode("v").alias("pq"),
-    ).select("vec_id", F.col("pq.codes").alias("codes"), F.col("pq.recon_cosine").alias("recon_cosine"))
 
 
 #: The exact PQ twin's geometry: 8 sub-blocks of 8 dims over the 64-d
@@ -2269,16 +1956,7 @@ def _pq_int_inputs(spark: SparkSession, sf_dir: str):
     return x, cb
 
 _PQ_EXACT_SQL = f"""
-WITH x AS (SELECT vec_id,
-                  list_transform(embedding,
-                                 v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0)
-                                           AS BIGINT)) AS xm
-           FROM embeddings),
-init AS (SELECT vec_id,
-                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                        vec_id) AS INT) - 1 AS cid
-         FROM embeddings
-         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_PQ_K}),
+{_micro_seed_ctes(_PQ_K)}
 c AS (SELECT i.cid, x.xm AS cm FROM init i JOIN x ON x.vec_id = i.vec_id),
 nxs AS (SELECT vec_id, CAST(list_sum(list_transform(xm, v -> v * v)) AS BIGINT)
                AS nx
@@ -2319,10 +1997,9 @@ FROM f JOIN nxs ON nxs.vec_id = f.vec_id
 
 @register("sim_pq_codes_exact", oracle=_PQ_EXACT_SQL)
 def sim_pq_codes_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCT QUANTIZATION under the FULL hash gate — the integer
-    twin that closes the catalog's last rows-only family member
-    without a hash-gated relative (``sim_pq_codes`` trains float
-    k-means codebooks, which no DuckDB SQL can replay): the SAME
+    """PRODUCT QUANTIZATION under the FULL hash gate — the compression
+    half of an IVF-PQ index, in integer form (trained float k-means
+    codebooks are something no DuckDB SQL can replay): the standard
     encode geometry (8 sub-blocks x 8 dims, 16 codes per block,
     Jégou et al. 2011's PQ) but with FIXED SEEDED codebooks — the 16
     vectors in deterministic md5(vec_id) order (the
@@ -2333,17 +2010,14 @@ def sim_pq_codes_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-derivable. Per vector: the 8-code word (comma-joined
     string — identical tie-break: min squared distance, then lowest
     cid), exact BIGINT quantization error, and the reconstruction
-    cosine an index maintainer monitors. A pytest feeds these same
-    seeded codebooks (unquantized) through the production op's
-    Arrow-batched encoder and pins code-for-code agreement, tying the
-    twin to the real assignment path.
+    cosine an index maintainer monitors.
 
     Exactness: coordinates micro-quantize at 1e6 IN SPARK (the shared
     kmeans pin: round-then-cast half-up, stated identically in both
     engines) before any numpy touches them; block distances / dot
     products / norms are exact int64 arithmetic (max ~6.4e13, far
-    under overflow) inside the SAME ``_pq_block_dists`` kernel the
-    production encoder runs — numpy argmin resolves ties to the
+    under overflow) inside the shared ``_pq_block_dists`` kernel —
+    numpy argmin resolves ties to the
     first minimum == the lowest cid == the oracle's row_number ORDER
     BY dist, cid; the cosine stays a fixed SPARK double expression
     over the kernel's three exact integers (IEEE sqrt/division are
@@ -2415,16 +2089,7 @@ def sim_pq_codes_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_ADC_TOPK = 20
 
 _PQ_ADC_SQL = f"""
-WITH x AS (SELECT vec_id,
-                  list_transform(embedding,
-                                 v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0)
-                                           AS BIGINT)) AS xm
-           FROM embeddings),
-init AS (SELECT vec_id,
-                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                        vec_id) AS INT) - 1 AS cid
-         FROM embeddings
-         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_PQ_K}),
+{_micro_seed_ctes(_PQ_K)}
 c AS (SELECT i.cid, x.xm AS cm FROM init i JOIN x ON x.vec_id = i.vec_id),
 q AS (SELECT xm AS qm FROM x WHERE vec_id = 0),
 d AS (SELECT x.vec_id, g.b, c.cid,
@@ -2475,7 +2140,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits the ADC top-20 with each hit's TRUE integer distance beside
     the ADC estimate — the recall-debugging view an index maintainer
     reads (ADC error = quantization error of the hit). Composed with
-    ``sim_ann_ivf_topk``'s cell partitioning this is IVF-PQ, the
+    coarse cell partitioning this is IVF-PQ (``sim_ivfpq_topk``), the
     standard billion-scale ANN index.
 
     Exactness: per-block code assignment rides the PQ twin's exact
@@ -2548,16 +2213,7 @@ _IVFPQ_NPROBE = 2
 _IVFPQ_TOPK = 10
 
 _IVFPQ_SQL = f"""
-WITH x AS (SELECT vec_id,
-                  list_transform(embedding,
-                                 v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0)
-                                           AS BIGINT)) AS xm
-           FROM embeddings),
-init AS (SELECT vec_id,
-                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                        vec_id) AS INT) - 1 AS cid
-         FROM embeddings
-         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_PQ_K}),
+{_micro_seed_ctes(_PQ_K)}
 c AS (SELECT i.cid, x.xm AS cm FROM init i JOIN x ON x.vec_id = i.vec_id),
 q AS (SELECT xm AS qm FROM x WHERE vec_id = 0),
 cd AS (SELECT x.vec_id, c.cid,
@@ -2772,15 +2428,18 @@ def _ivfpq_serve_from_codes(codes, x, qm, cqd, probe) -> DataFrame:
 _SPAN_W = 8
 _SPAN_MAX_DOCS = 20
 
-_SPAN_PAIRS_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+#: every document's distinct ``_SPAN_W``-token spans, ``sp(doc_id, span)``
+_DOC_SPANS_SQL = f"""t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 sp AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
              generate_series(1, len(toks) - {_SPAN_W - 1}),
              i -> array_to_string(toks[i:i+{_SPAN_W - 1}], ' ')))) AS span
   FROM t WHERE len(toks) >= {_SPAN_W}
-),
+),"""
+
+_SPAN_PAIRS_SQL = f"""
+WITH {_DOC_SPANS_SQL}
 keep AS (SELECT span FROM sp GROUP BY span
          HAVING COUNT(*) BETWEEN 2 AND {_SPAN_MAX_DOCS}),
 p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -3051,63 +2710,6 @@ def sim_tfidf_rerank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_span_pairs_hashed")  # xxhash64 span keys -> rows-only
-def dedup_span_pairs_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB twin of ``dedup_span_pairs``: identical plan, but the
-    group/shuffle key is ``xxhash64(span)`` instead of the ~50-char
-    span string — the swap the exact op's docstring prescribes,
-    shrinking the widest shuffle ~6x (8 bytes vs the span text). A
-    64-bit collision would need two DIFFERENT spans with equal hashes
-    sharing a bucket (~1e-6 at 10^8 distinct spans, birthday bound),
-    and its only effect is one spurious candidate pair — the standard
-    trade every production span-dedup makes. Rows-only by necessity
-    (xxhash64 has no DuckDB analog); the pytest pins output EQUALITY
-    with the string-keyed exact twin at gate scale, which is the
-    stronger statement: same pairs, same counts, cheaper shuffle."""
-    t = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", tokens(F.col("text")).alias("toks"))
-        .where(F.size("toks") >= _SPAN_W)
-    )
-    spans = t.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - (_SPAN_W - 1)),
-                    lambda i: F.xxhash64(F.concat_ws(" ", F.slice(F.col("toks"), i, _SPAN_W))),
-                )
-            )
-        ).alias("span_h"),
-    )
-    # same window count-gate as the string-keyed twin (see
-    # dedup_span_pairs): one exchange of 8-byte keys, generation runs
-    # once, and the object aggregate only ever sees spans that will
-    # emit pairs
-    n_docs = F.count("*").over(W.partitionBy("span_h"))
-    groups = (
-        spans.withColumn("n_docs", n_docs)
-        .where(F.col("n_docs").between(2, _SPAN_MAX_DOCS))
-        .groupBy("span_h")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
-    )
-    pair_arrays = F.flatten(
-        F.transform(
-            "ds",
-            lambda x, i: F.transform(
-                F.slice("ds", i + 2, F.size("ds")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        groups.select(F.explode(pair_arrays).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("bigint").alias("shared_spans"))
-    )
-
-
 # ------------------------------------------------------ segment splitting
 # Segment-splitting rule: split each document on the literal delimiter
 # token " a " (the synthetic corpus has no sentence punctuation, so a
@@ -3201,16 +2803,7 @@ def text_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens(F.col("text")).alias("w"))
-    pairs = F.when(
-        F.size("w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - 1),
-            lambda i: F.struct(
-                F.element_at("w", i).alias("w1"),
-                F.element_at("w", i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = _adjacent_bigrams(F.col("w"))
     g = t.select("doc_id", F.explode(pairs).alias("p")).select("doc_id", "p.w1", "p.w2")
     lm = (
         g.groupBy("w1", "w2")
@@ -3332,90 +2925,6 @@ def text_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("sim_semdedup_prune")  # seeded KMeans cells → rows-only check
-def sim_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    deduplication of an embedding corpus — cluster with k-means, then
-    inside each cluster prune every vector that has a semantically
-    near-identical neighbor (cosine >= tau), keeping the most diverse
-    representative. The published recipe for trimming semantically
-    redundant web data before LLM training (the paper's LAION/C4 runs
-    drop 20-50% of examples at minimal quality cost).
-
-    Faithful choices: within-cluster-only comparison (cross-cluster
-    near-dups are the accepted approximation that makes the op
-    sub-quadratic — the paper's own design); the kept representative
-    is the member with the LOWEST cosine to its centroid (the paper
-    keeps low-centroid-similarity examples to bias the survivors
-    toward diversity). One deliberate deviation, documented: the
-    paper prunes greedily-sequentially inside a cluster; we use the
-    one-round DOMINANCE rule — a vector is pruned iff some
-    better-ranked vector in its cell is within tau of it (rank =
-    centroid-cosine ascending, vec_id tiebreak). Dominance needs one
-    self-join instead of a sequential scan, is order- and
-    partitioning-independent, and yields the same two invariants the
-    paper's greedy gives (pinned in tests/test_llm.py): no two KEPT
-    vectors in a cell are within tau, and every PRUNED vector names a
-    better-ranked dominator within tau.
-
-    Plan/scale: seeded KMeans (k=16 here; k scales ~n/target_cell_size
-    at 100 TB, the paper uses 50k cells for LAION) broadcasts a tiny
-    centroid model; cell assignment is one map pass; the quadratic
-    work is confined to within-cell self-joins where the cell size is
-    the knob — exactly the IVF trick ``sim_ann_ivf_topk`` uses.
-    Rows-only (KMeans has no DuckDB twin): output is one row per
-    corpus vector with action in {{'keep','prune'}}, so the row count
-    is input-stable regardless of clustering.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    tau = 0.35  # fixture near-dup regime (cosine 0.35+, like sim_embedding_near_pairs)
-    e = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("fv", array_to_vector(F.col("v")))
-    )
-    model = KMeans(k=16, seed=42, featuresCol="fv", predictionCol="cell").fit(e)
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cdf = spark.createDataFrame(centroids, "cell INT, cv ARRAY<DOUBLE>")
-    ranked = (
-        model.transform(e)
-        .select("vec_id", "v", "cell")
-        .join(F.broadcast(cdf), "cell")
-        .select("vec_id", "v", "cell", cosine_similarity(F.col("v"), F.col("cv")).alias("csim"))
-        .withColumn(
-            "rank",
-            F.row_number().over(W.partitionBy("cell").orderBy(F.col("csim").asc(), "vec_id")),
-        )
-    )
-    a, b = ranked.alias("a"), ranked.alias("b")
-    dominated = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.rank") < F.col("b.rank"))
-            & (cosine_similarity(F.col("a.v"), F.col("b.v")) >= tau),
-        )
-        .groupBy(F.col("b.vec_id").alias("vec_id"))
-        .agg(
-            F.count("*").cast("int").alias("n_dominators"),
-            F.min_by(F.col("a.vec_id"), F.col("a.rank")).alias("pruned_by"),
-        )
-    )
-    return (
-        ranked.join(dominated, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.round("csim", 6).alias("centroid_sim"),
-            F.coalesce("n_dominators", F.lit(0)).alias("n_dominators"),
-            "pruned_by",
-            F.when(F.col("n_dominators").isNull(), "keep").otherwise("prune").alias("action"),
-        )
-    )
-
-
 _SEMDEDUP_FIXED_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 c AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 16),
@@ -3444,36 +2953,42 @@ FROM r LEFT JOIN d ON r.vec_id = d.vec_id
 
 @register("sim_semdedup_fixed_cells", oracle=_SEMDEDUP_FIXED_ORACLE)
 def sim_semdedup_fixed_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup's PRUNE DECISION under the hash gate: identical
-    pipeline to ``sim_semdedup_prune`` (assign → rank by centroid
-    cosine asc → one-round dominance at tau) but with DETERMINISTIC
-    SQL-expressible cells — the 16 lowest-vec_id vectors serve as
-    fixed centroids and every vector joins the centroid it is most
-    cosine-similar to (ties → lowest cell id). k-means itself has no
-    DuckDB twin, so the rows-only variant pins its invariants in
-    pytest; THIS twin swaps only the clustering step and hash-matches
-    everything downstream of it — the ranking, the dominance
-    self-join, the dominator attribution, and the keep/prune verdict
-    — against a DuckDB window-SQL re-derivation (the r5 verdict's
-    task 5). centroid_sim is emitted UNROUNDED: both engines compute
-    the identical left-fold dot/norm (``_duck_dot`` mirrors
-    ``F.aggregate``'s seed-first order), the same bit-reproducibility
-    contract ``sim_cosine_topk`` relies on.
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    deduplication of an embedding corpus — partition into cells, then
+    inside each cell prune every vector that has a semantically
+    near-identical neighbor (cosine >= tau), keeping the most diverse
+    representative (the member with the LOWEST cosine to its
+    centroid, as the paper does).
+
+    The cells are DETERMINISTIC and SQL-expressible instead of
+    k-means: the 16 lowest-vec_id vectors serve as fixed centroids and
+    every vector joins the centroid it is most cosine-similar to (ties
+    → lowest cell id). One deliberate deviation from the paper's
+    greedy-sequential prune: the one-round DOMINANCE rule — a vector
+    is pruned iff some better-ranked vector in its cell (rank =
+    centroid-cosine ascending, vec_id tiebreak) is within tau of it.
+    Dominance needs one self-join instead of a sequential scan, is
+    order- and partitioning-independent, and keeps the paper's two
+    invariants (pinned in tests/test_llm.py): no two KEPT vectors in a
+    cell are within tau, and every PRUNED vector names a better-ranked
+    dominator within tau. The ranking, the dominance self-join, the
+    dominator attribution and the keep/prune verdict all hash-match a
+    DuckDB window-SQL re-derivation. centroid_sim is emitted
+    UNROUNDED: both engines compute the identical left-fold dot/norm
+    (``_duck_dot`` mirrors ``F.aggregate``'s seed-first order), the
+    same bit-reproducibility contract ``sim_cosine_topk`` relies on.
 
     Plan/scale: the centroid table is 16 rows (broadcast); assignment
     is one map-side cross join + per-vector argmax window; quadratic
-    work is confined within cells exactly like the k-means variant,
-    and the all-pairs cap guards the correctness-scale contract.
-    Production keeps ``sim_semdedup_prune`` where k grows with n —
-    fixed k=16 here exists to make the decision SQL-checkable.
+    work is confined within cells, so the cell count is the scale
+    knob (the paper uses 50k cells for LAION; k grows with n), and
+    the all-pairs cap guards the correctness-scale contract at fixed
+    k=16.
     """
     tau = 0.35
-    e = _assert_all_pairs_scale(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ),
-        "sim_semdedup_fixed_cells",
-        "sim_semdedup_prune",
+    _guard_all_pairs_source(spark, sf_dir, "embeddings", "sim_semdedup_fixed_cells")
+    e = _t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cent = e.where(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("cv")
@@ -3715,16 +3230,7 @@ def text_top_bigram_char_fraction(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     docs = _t(spark, sf_dir, "documents")
     t = docs.select("doc_id", "n_chars", tokens(F.col("text")).alias("w"))
-    pairs = F.when(
-        F.size("w") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("w") - 1),
-            lambda i: F.struct(
-                F.element_at("w", i).alias("w1"),
-                F.element_at("w", i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = _adjacent_bigrams(F.col("w"))
     g = t.select("doc_id", "n_chars", F.explode(pairs).alias("p")).select(
         "doc_id", "n_chars", "p.w1", "p.w2"
     )
@@ -3839,14 +3345,7 @@ def text_top_ngram_char_fractions(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "text_span_novelty",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sp AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-                 generate_series(1, len(toks) - {_SPAN_W - 1}),
-                 i -> array_to_string(toks[i:i+{_SPAN_W - 1}], ' ')))) AS span
-      FROM t WHERE len(toks) >= {_SPAN_W}
-    ),
+    WITH {textwrap.indent(_DOC_SPANS_SQL, "    ").lstrip()}
     df AS (SELECT span, CAST(COUNT(*) AS INT) AS span_df FROM sp GROUP BY span)
     SELECT sp.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_spans,
@@ -3880,10 +3379,9 @@ def text_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-generated the corpus TWICE (two Generate subtrees over
     documents.parquet in the executed plan; the span generation is
     the query's dominant cost). Two shuffles total (span, doc_id); no
-    pair join anywhere. At 100 TB the span string key swaps for
-    ``xxhash64(span)`` exactly as ``dedup_span_pairs_hashed``
-    prescribes (string keys here keep the integer counts DuckDB-exact
-    under the hash gate). Counts are integers; dup_fraction is one
+    pair join anywhere. At 100 TB the span string key can swap for
+    ``xxhash64(span)`` to shrink the widest shuffle (string keys here
+    keep the integer counts DuckDB-exact under the hash gate). Counts are integers; dup_fraction is one
     int/int double division — exact."""
     t = (
         _t(spark, sf_dir, "documents")
@@ -4652,8 +4150,8 @@ def _pca_power_sql(iters: int = 8) -> str:
 
 @register("sim_pca_power_iteration_exact", oracle=_pca_power_sql())
 def sim_pca_power_iteration_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPECTRAL decomposition under the FULL hash gate — the integer
-    twin of ``sim_group_pca_top_component``: per label, 8 power
+    """SPECTRAL decomposition under the FULL hash gate — per-label
+    top principal component of the embedding cloud: per label, 8 power
     iterations toward the covariance top eigenvector, every step pure
     integer (micro-quantized embeddings; centered co-moments
     accumulated exactly; per-step renormalization by truncating
@@ -4662,14 +4160,12 @@ def sim_pca_power_iteration_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     loading VECTOR hash-matches DuckDB, the same boundary-removal as
     the integer PageRank / EWMA / sketch twins. Sign fixed by making
     the largest-|loading| dimension positive (ties to the lowest
-    dim). The float ``applyInPandas`` eigensolve stays the production
-    path (exact eigenvalues, one Arrow pass); this twin pins the
-    ALGEBRA cross-engine, and the pytest pins its direction against a
-    numpy float power iteration from the same start.
+    dim). The pytest pins its direction against a numpy float power
+    iteration from the same start.
 
     Plan/scale: the covariance build is the only corpus-sized work,
-    and it runs with ZERO row fan-out — the treeAggregate-style
-    ``F.aggregate`` over outer-product arrays the float op documents.
+    and it runs with ZERO row fan-out — a treeAggregate-style
+    ``F.aggregate`` over outer-product arrays.
     The centered micro-vector stays a d-length ARRAY column (mean
     vector broadcast back as an array, ``zip_with`` subtraction);
     vectors fold into d²-cell co-moment partials in two bounded
@@ -4974,16 +4470,7 @@ def _kmeans_exact_sql(iters: int = 2, k: int = 4) -> str:
     argmin ties to the lowest centroid id, integer-division centroid
     updates — the same recurrence the Spark loop runs."""
     head = f"""
-WITH x AS (SELECT vec_id,
-                  list_transform(embedding,
-                                 v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0)
-                                           AS BIGINT)) AS xm
-           FROM embeddings),
-init AS (SELECT vec_id,
-                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                        vec_id) AS INT) - 1 AS cid
-         FROM embeddings
-         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {k}),
+{_micro_seed_ctes(k)}
 c0 AS (SELECT i.cid, x.xm AS cm FROM init i JOIN x ON x.vec_id = i.vec_id)"""
     steps = []
     for t in range(1, iters + 1):
@@ -5019,14 +4506,13 @@ WHERE f.rn = 1
 
 @register("sim_kmeans_lloyd_exact", oracle=_kmeans_exact_sql())
 def sim_kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-MEANS (Lloyd) under the FULL hash gate — the integer twin of
-    the MLlib/float clustering the SemDeDup cells use, closing the
-    last rows-only-by-necessity algorithm family: 2 Lloyd iterations
-    with micro-quantized coordinates, squared distances and centroid
-    updates all in BIGINT (sum div count — truncation identical both
-    engines), argmin ties to the lowest centroid id, k=4 seeds chosen
-    by the deterministic md5 order of vec_id (the seeded-hash-family
-    device again). Per vector the final cluster and exact integer
+    """K-MEANS (Lloyd) under the FULL hash gate — float k-means
+    (MLlib's) has no DuckDB replay, so this is the integer form: 2
+    Lloyd iterations with micro-quantized coordinates, squared
+    distances and centroid updates all in BIGINT (sum div count —
+    truncation identical both engines), argmin ties to the lowest
+    centroid id, k=4 seeds chosen by the deterministic md5 order of
+    vec_id (the seeded-hash-family device again). Per vector the final cluster and exact integer
     distance hash-match DuckDB's unrolled-CTE replica of the same
     recurrence. Empty clusters drop identically on both engines
     (no-row groups vanish from the centroid table).
@@ -7143,14 +6629,7 @@ def multimodal_exif_orientation_norm(
 
 _BRIDGE_SQL = f"""
 WITH RECURSIVE
-t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-sp AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-             generate_series(1, len(toks) - {_SPAN_W - 1}),
-             i -> array_to_string(toks[i:i+{_SPAN_W - 1}], ' ')))) AS span
-  FROM t WHERE len(toks) >= {_SPAN_W}
-),
+{_DOC_SPANS_SQL}
 keep AS (SELECT span FROM sp GROUP BY span
          HAVING COUNT(*) BETWEEN 2 AND {_SPAN_MAX_DOCS}),
 e AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v

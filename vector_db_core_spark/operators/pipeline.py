@@ -905,7 +905,50 @@ def _merge_adjacent(syms_col, left: str, right: str):
     )
 
 
-@register("pipeline_bpe_train_merges")  # iterative argmax loop -> rows-only
+#: BPE training as one recursive CTE. The state is ONE row per round:
+#: the whole word-count table as a list of (w, n), every word a string
+#: of delimited symbols — TAB opens a symbol, LF closes it. Words are
+#: maximal non-whitespace runs, so no symbol contains either byte, a
+#: symbol boundary is unambiguous, and a merge is one left-to-right
+#: non-overlapping ``replace`` of "<TAB>l<LF><TAB>r<LF>" — exactly the
+#: greedy merge, l == r runs included ("a a a" -> "aa a").
+_BPE_TRAIN_SQL = r"""
+WITH RECURSIVE
+wc AS (SELECT word, COUNT(*) AS n
+       FROM (SELECT unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS word
+             FROM documents)
+       GROUP BY word),
+m(rnd, words, l, r, cnt) AS (
+  SELECT 0,
+         list({'w': chr(9) || array_to_string(string_split(word, ''), chr(10) || chr(9)) || chr(10),
+               'n': n}),
+         CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT)
+  FROM wc
+  UNION ALL
+  SELECT m.rnd + 1,
+         list_transform(m.words,
+                        x -> {'w': replace(x.w,
+                                           chr(9) || top.l || chr(10) || chr(9) || top.r || chr(10),
+                                           chr(9) || top.l || top.r || chr(10)),
+                              'n': x.n}),
+         top.l, top.r, top.cnt
+  FROM m, LATERAL (
+    SELECT p.l, p.r, SUM(n) AS cnt
+    FROM (SELECT unnest(list_transform(generate_series(1, len(syms) - 1),
+                                       i -> {'l': syms[i], 'r': syms[i + 1]})) AS p, n
+          FROM (SELECT string_split(x.w[2:-2], chr(10) || chr(9)) AS syms, x.n AS n
+                FROM (SELECT unnest(m.words) AS x)))
+    GROUP BY p.l, p.r
+    ORDER BY cnt DESC, p.l, p.r
+    LIMIT 1) top
+  WHERE m.rnd < 8)
+SELECT CAST(rnd AS INT) AS round, l AS "left", r AS "right", l || r AS merged,
+       CAST(cnt AS BIGINT) AS pair_count
+FROM m WHERE rnd >= 1
+"""
+
+
+@register("pipeline_bpe_train_merges", oracle=_BPE_TRAIN_SQL)
 def pipeline_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ITERATIVE BPE training — 8 full merge rounds, not just the
     single pair-count step (``pipeline_bpe_merge_pairs`` is round
@@ -925,11 +968,10 @@ def pipeline_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, exactly like the IVF/PQ centroid pattern. The 100 TB input
     is touched exactly once, by the word-count aggregate.
 
-    Rows-only by necessity (an 8-deep argmax-dependent loop has no
-    single-statement DuckDB equivalent); the behavioral pytest
-    replays the same algorithm in plain Python over the same word
-    counts and requires the identical merge sequence, and checks
-    determinism across invocations."""
+    The oracle (``_BPE_TRAIN_SQL``) replays the 8 rounds as a
+    recursive CTE with a LATERAL argmax per round; the behavioral
+    pytest also replays the algorithm in plain Python over the same
+    word counts."""
     toks = _docs(spark, sf_dir).select(
         F.explode(
             F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
@@ -983,16 +1025,10 @@ def pipeline_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_safe_oracle() -> str:
-    from vector_db_core_spark.operators.llm import _JACCARD_PAIRS_SQL
+    from vector_db_core_spark.operators.llm import _NEAR_DUP_REACH_SQL
 
     return f"""
-    WITH RECURSIVE p AS ({_JACCARD_PAIRS_SQL}),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p),
-    reach(src, dst) AS (
-      SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    {_NEAR_DUP_REACH_SQL},
     lab AS (SELECT src AS doc_id, MIN(dst) AS cluster_rep FROM reach GROUP BY src),
     rep AS (SELECT d.doc_id, COALESCE(l.cluster_rep, d.doc_id) AS rep
             FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id)

@@ -1,8 +1,9 @@
 """Query registry — the bridge to the driver contract.
 
 Every operator in the engine registers a named query callable
-``(spark, sf_dir) -> DataFrame`` and (when SQL-expressible) the
-equivalent ANSI SQL the DuckDB oracle runs on the same parquet tables.
+``(spark, sf_dir) -> DataFrame`` together with the equivalent ANSI SQL
+the DuckDB oracle runs on the same parquet tables, so every registered
+query hash-checks (``set(QUERIES) == set(ORACLE)``).
 ``__spark_entry__.queries()`` / ``oracle_sql()`` read these dicts.
 
 Oracle-matching rules used throughout (see functions/exact.py):
@@ -40,15 +41,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query (and optional DuckDB oracle SQL) to the registry."""
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: add a query and its DuckDB oracle SQL to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco

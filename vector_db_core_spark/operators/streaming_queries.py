@@ -1,13 +1,13 @@
 """Structured-Streaming queries surfaced to the driver's correctness gate.
 
-Round-2 state: the whole streaming surface (watermark windows, stateful
-dedup, interval joins, store sink) was pytest-only. These entries put
-streaming rows in the DRIVER's window too, by exploiting replayability:
+These entries put the streaming surface (watermark windows, stateful
+dedup, interval joins, store sink) under the oracle gate by exploiting
+replayability:
 the events fixture is finite, so replaying it through a real
 ``readStream`` → aggregation → sink pipeline (``availableNow`` trigger:
 process everything available, then stop) must produce EXACTLY the batch
 answer — which is ANSI-SQL-expressible, so the queries carry full
-DuckDB oracles instead of the weaker rows-only check.
+DuckDB oracles.
 
 Sink/output-mode choices, and what they mean at 100 TB:
   * the replay aggregations run in ``complete`` output to a memory
@@ -32,10 +32,12 @@ import hashlib
 import os
 import shutil
 import tempfile
+import textwrap
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_db_core_spark.operators.extra import _DAILY_CENTS_SQL
 from vector_db_core_spark.operators.registry import register
 from vector_db_core_spark.sources import load_table
 from vector_db_core_spark.streaming.ingest import (
@@ -643,14 +645,8 @@ def streaming_minhash_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.table("stream_replay_minhash_dedup").distinct()
 
 
-_EWMA_STREAM_SQL = """
-    WITH RECURSIVE
-    d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                 SUM(CAST(round(value * 100) AS BIGINT)) AS cents
-          FROM events GROUP BY 1, 2),
-    o AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-                                            ORDER BY day) AS INT) AS rn
-          FROM d),
+_EWMA_STREAM_SQL = f"""
+{textwrap.indent(_DAILY_CENTS_SQL, "    ")}
     r AS (
       SELECT event_type, day, cents, rn, (3 * cents + 5) // 10 AS e
       FROM o WHERE rn = 1

@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_sizing() -> tuple[str, str]:
+    """``(master, driver_memory)`` for a local session on this host:
+    ``local[$SPARK_GRAFT_CPUS]`` (default all cores) and
+    ``$SPARK_GRAFT_DRIVER_MEM`` (default 16g). Shared by ``get_spark``
+    and the tools that build a plain session of their own."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    master = f"local[{cpus}]" if cpus else "local[*]"
+    return master, os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+
 def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -21,9 +31,9 @@ def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | 
     on a real cluster this would be ~2-3x total executor cores, and AQE
     coalesces the excess at runtime anyway.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    master = f"local[{cpus}]" if cpus else "local[*]"
+    master, driver_memory = host_sizing()
     if shuffle_partitions is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
         shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
 
     builder = (
@@ -65,7 +75,7 @@ def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | 
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )
