@@ -61,6 +61,9 @@ FAST_ORACLE_SPOT = {
     "streaming_minhash_dedup_replay",
     "multimodal_phash_neardup",
     "profile_functional_dependencies",
+    # the only registered queries that write through OrdinalStore
+    "ref_schema_evolution",
+    "ref_compact_preserves_content",
 }
 
 #: registry-only checks in test_oracle.py (no Spark session) that stay

@@ -881,7 +881,7 @@ def test_theil_sen_matches_numpy_rederivation(spark):
         assert abs(slope - float(np.median(slopes))) < 1e-5, et
 
 
-def test_round11_wave3_invariants(spark):
+def test_bm25_drawdown_entropy_invariants(spark):
     """Structural pins for the wave-3 trio: BM25 emits a dense,
     score-ordered top-20 with matched counts inside the 3-term query;
     drawdown rows are genuine peak-to-trough excursions; the entropy
@@ -950,7 +950,7 @@ def _check_entropy_profile(ent):
             assert 0 <= r.entropy_normalized <= 1 + 1e-9
 
 
-def test_round12_wave2_invariants(spark):
+def test_ltv_curve_and_odds_ratio_invariants(spark):
     """Structural pins for the LTV curve and the 2x2 effect sizes:
     cumulative revenue is non-decreasing along each cohort's age axis
     and closes to the corpus purchase total; LTV recomputes from its
@@ -998,7 +998,7 @@ def test_round12_wave2_invariants(spark):
     spark.catalog.clearCache()
 
 
-def test_round12_wave3_invariants(spark):
+def test_streaming_bm25_distinct_n_interarrival_invariants(spark):
     """Pins for the wave-3 trio: the streaming-postings BM25 equals
     the batch ranking ROW FOR ROW (the whole point — incrementally
     maintained stats, identical scoring path); distinct-n ratios are

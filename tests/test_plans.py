@@ -1022,7 +1022,7 @@ def test_round10_gini_lorenz_two_phase_rank(spark):
     """The inequality pair ranks the customer reduction with the
     DISTRIBUTED two-phase protocol (range-partitioned parallel sort +
     constant prefix offsets — store._dense_rowid_frame), replacing
-    the r9 single-task W.orderBy window (the verdict's named
+    the former single-task W.orderBy window (the verdict's named
     perf-weak point): the rank sort must be within-partition only
     (global=false under a rangepartitioning exchange), and no window
     function may touch the customer rows — the only window allowed is
@@ -1088,7 +1088,7 @@ def test_round10_phash_banded_join_plan(spark):
 
 
 def test_round11_topk_cuts_are_takeordered(spark):
-    """The two round-11 bounded-cut ops must plan their K-row cuts as
+    """The two bounded-cut ops must plan their K-row cuts as
     TakeOrderedAndProject (per-partition top-K + merge), never a
     global sort, and BM25 must semi-join the query terms down to
     matching postings via broadcast before scoring."""
@@ -1124,7 +1124,7 @@ def test_round10_anova_single_corpus_scan(spark):
 
 
 def test_round14_kmeans_assignment_is_centroid_array_fold(spark):
-    """r14: the Lloyd assignment argmin folds over the centroid table
+    """The Lloyd assignment argmin folds over the centroid table
     collapsed to ONE broadcast array row (array_min over (dist, cid)
     structs) — the old form fanned the corpus out k-times and
     re-collapsed it with a groupBy(vec_id) min(struct) exchange per
@@ -1138,7 +1138,7 @@ def test_round14_kmeans_assignment_is_centroid_array_fold(spark):
 
 
 def test_round14_link_prediction_degree_table_computed_once(spark):
-    """r14: graph_link_prediction_seeded's degree table is persisted
+    """graph_link_prediction_seeded's degree table is persisted
     for its three join arms (dw/du/dv) — the unpersisted plan cloned
     the union+aggregate degree subtree per consumer (22 scans of the
     edge scratch). The cached table must appear in the plan, and the
@@ -1148,9 +1148,9 @@ def test_round14_link_prediction_degree_table_computed_once(spark):
 
 
 def test_round14_shingle_hashes_no_window_no_exchange(spark):
-    """r14: the shingle-hash builder indexes the carried token array
+    """The shingle-hash builder indexes the carried token array
     inside codegen (element_at over an exploded position sequence) —
-    the r13 window-lead path paid a corpus-wide (doc_id, pos, token)
+    the former window-lead path paid a corpus-wide (doc_id, pos, token)
     exchange + sort per consumer. The subplan must stay shuffle-free
     and window-free; output is multiset-identical by construction."""
     from vector_db_core_spark.operators.llm import _shingle_hashes, _t

@@ -4,6 +4,10 @@ dynamic_vector_manage_service.rs:362-518)."""
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -93,29 +97,41 @@ def test_bounds_semantics(spark, tmp_path):
         store.pullx(8, 3)
 
 
-def test_crash_consistency_stale_meta(spark, tmp_path):
-    """A crash between the parquet commit and the meta rename leaves a
-    stale-low header; count() must reconcile against the footers (max)
-    so the next pushx does NOT reuse ordinals."""
-    import json
+def test_crash_orphan_files_are_invisible_and_dropped(spark, tmp_path):
+    """What a crashed write leaves — a data file named at the committed
+    length, a staging directory, a manifest temp file — is invisible to
+    reads (they stop at the committed length), and the next pushx
+    deletes it and reuses those ordinals for its own rows."""
+    import os
+
+    from vector_db_core_spark.store import _file_name, with_list_rowid
 
     path = str(tmp_path / "s5")
-    store = OrdinalStore(spark, path)
-    store.pushx(spark.createDataFrame(sample_rows(100), schema=SCHEMA))
-    # simulate the crash window: roll the header back
-    with open(store._meta_path, "w") as f:
-        json.dump({"length": 40}, f)
-    reopened = OrdinalStore(spark, path)  # fresh instance, like a restart
-    assert reopened.count() == 100  # footer wins over stale meta
-    # header was repaired in place
-    with open(store._meta_path) as f:
-        assert json.load(f)["length"] == 100
-    start = reopened.pushx(spark.createDataFrame(sample_rows(10, start=100), schema=SCHEMA))
-    assert start == 100  # no ordinal reuse
-    ids = reopened.getall().select("rowid").agg(
-        F.countDistinct("rowid").alias("d"), F.max("rowid").alias("m")
-    ).collect()[0]
-    assert ids.d == 110 and ids.m == 109  # still dense, no duplicates
+    store = OrdinalStore(spark, path, schema="a INT, b STRING")
+    store.pushx([{"a": i, "b": "kept"} for i in range(100)])
+    orphan_src = str(tmp_path / "orphan")
+    with_list_rowid(
+        spark.createDataFrame([(100 + i, "orphan") for i in range(10)], "a INT, b STRING"), 100
+    ).write.parquet(orphan_src)
+    part = next(f for f in os.listdir(orphan_src) if f.endswith(".parquet"))
+    os.rename(os.path.join(orphan_src, part), os.path.join(path, _file_name(100)))
+    os.makedirs(os.path.join(path, "_staging", "crashed"))
+    open(os.path.join(path, "_meta.crashed.tmp"), "w").close()
+
+    reopened = OrdinalStore(spark, path, schema="a INT, b STRING")  # like a restart
+    assert reopened.count() == 100
+    assert reopened.getall(ordered=False).where("b = 'orphan'").count() == 0
+    assert reopened.pull_row(99).b == "kept"
+    with pytest.raises(IndexError):
+        reopened.pull(100)
+
+    assert reopened.pushx([{"a": 100 + i, "b": "new"} for i in range(10)]) == 100
+    assert sorted(os.listdir(path)) == sorted(
+        [_file_name(0), _file_name(100), "_meta.json", "_writer.lock"]
+    )
+    rows = reopened.getall().collect()
+    assert [r.rowid for r in rows] == list(range(110))
+    assert [r.b for r in rows] == ["kept"] * 100 + ["new"] * 10
 
 
 def test_pushx_nondeterministic_source_stays_dense(spark, tmp_path):
@@ -504,15 +520,15 @@ def test_read_ordered_empty_store_matches_getall(spark, tmp_path):
         store.read_ordered()
 
 
-def test_round14_pushx_files_are_rowid_ordered_without_sort(spark, tmp_path):
-    """r14: pushx dropped its sortWithinPartitions — the rowid is
+def test_pushx_files_are_rowid_ordered_without_sort(spark, tmp_path):
+    """pushx writes without a sortWithinPartitions — the rowid is
     provably in physical row order within every partition (offset +
     the low-33-bit record counter of monotonically_increasing_id, a
     per-row projection that keeps row order). Pin the
     invariant the row-group pruning relies on: within every written
     parquet file, rowids appear strictly increasing.
 
-    r15 hardening (ADVICE): the old proxy — monotonically_increasing_id
+    The check reads files directly: the old proxy — monotonically_increasing_id
     within input_file_name — was itself only valid while Spark read
     each file as a single split (true at 50k rows, unreliable for
     files >128MB). Read every file with ONE pyarrow reader instead (a
@@ -568,19 +584,20 @@ def _parquet_files(path):
     return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
 
 
-def test_pull_row_is_one_job_once_the_schema_is_known(spark, tmp_path, job_count):
-    """A point read launches only its own scan: the store's merged
-    schema is inferred by the first read after a write and reused by
-    every read until the files change."""
+def test_first_read_after_a_write_is_one_job(spark, tmp_path, job_count):
+    """A point read launches only its own scan, also right after a
+    write: the manifest carries the store schema, so no read infers it,
+    and the scan opens the one file that holds the ordinal."""
     store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
     store.pushx(sample_rows(300))
     store.pushx(spark.createDataFrame(sample_rows(300, start=300), SCHEMA), deterministic_source=True)
     assert len(_parquet_files(store.path)) >= 2
     _, first = job_count(lambda: store.pull_row(10))
-    assert first == 2  # the schema inference, then the scan
+    assert first == 1
     row, n = job_count(lambda: store.pull_row(450))
     assert n == 1
     assert row.rowid == 450 and row.my_number1 == 450
+    assert len(store.pull(450).inputFiles()) == 1
 
 
 def test_dataframe_pushx_has_no_broadcast(spark, tmp_path):
@@ -635,3 +652,158 @@ def test_hot_table_serves_point_reads(spark, tmp_path):
         plan = store.pull(150)._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, plan
         assert store.pull_row(150).my_number1 == 150
+
+
+def _input_records(spark, fn):
+    """``(fn(), rows its jobs read from storage)``, from Spark's status store."""
+    sc = spark.sparkContext
+    group = f"input_records_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    status, rows = jsc.statusStore(), 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        stages = status.job(job).stageIds()
+        rows += sum(status.lastStageAttempt(stages.apply(i)).inputRecords() for i in range(stages.size()))
+    return out, rows
+
+
+def _cached_blocks(spark):
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sorted((i.id(), i.numCachedPartitions(), i.memSize() + i.diskSize()) for i in infos)
+
+
+def test_hot_table_survives_appends(spark, tmp_path):
+    """An append does not drop a hot_table pinned over the store: the
+    pin keeps its cached blocks and stays the snapshot at its length,
+    the new ordinal reads back, and an old ordinal read after the
+    append opens only the file that holds it instead of re-reading the
+    whole store into the cache."""
+    from vector_db_core_spark.cache import hot_table
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(spark.createDataFrame(sample_rows(2000), SCHEMA))
+    with hot_table(store.getall(ordered=False), warm=True) as pinned:
+        blocks = _cached_blocks(spark)
+        assert blocks and all(parts > 0 for _, parts, _ in blocks)
+        store.pushx(sample_rows(50, start=2000))
+        store.pushx(spark.createDataFrame(sample_rows(50, start=2050), SCHEMA))
+        assert _cached_blocks(spark) == blocks
+
+        assert store.pull_row(2099).my_number1 == 2099
+        file_rows = {s.min_rowid: s.n_rows for s in store.stats()}
+        holder = max(lo for lo in file_rows if lo <= 5)
+        row, read = _input_records(spark, lambda: store.pull_row(5))
+        assert row.my_number1 == 5
+        assert 0 < read <= file_rows[holder]
+        assert _cached_blocks(spark) == blocks
+        assert pinned.count() == 2000
+
+
+
+def test_ordered_spans_checks_file_names(spark, tmp_path):
+    """ordered_spans fails loudly when a file's name is not the first
+    ordinal it holds: point reads bisect the names, so a misnamed file
+    would answer the wrong ordinals."""
+    import os
+
+    from vector_db_core_spark.store import _file_name
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema="a INT")
+    store.pushx([{"a": i} for i in range(10)])
+    store.pushx([{"a": i} for i in range(10, 20)])
+    assert [s.min_rowid for s in store.ordered_spans()] == [0, 10]
+    os.rename(os.path.join(store.path, _file_name(10)), os.path.join(store.path, _file_name(11)))
+    with pytest.raises(RuntimeError, match="not named by its first rowid"):
+        store.ordered_spans()
+
+
+_CRASHING_WRITER = """
+import os, signal, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from vector_db_core_spark.store import OrdinalStore
+
+path, kind, kill_at, first, n = sys.argv[2], sys.argv[3], *map(int, sys.argv[4:7])
+spark = (SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+store = OrdinalStore(spark, path, schema="k INT")
+if kind == "rows":
+    batch, txn = [{"k": k} for k in range(first, first + n)], None
+else:
+    batch = spark.range(first, first + n, 1, 2).selectExpr("CAST(id AS INT) AS k")
+    txn = ("stream", first)
+calls = 0
+
+def killing(real):
+    def call(*args, **kwargs):
+        global calls
+        calls += 1
+        if calls == kill_at:
+            os.kill(os.getpid(), signal.SIGKILL)
+        return real(*args, **kwargs)
+    return call
+
+os.rename, os.replace = killing(os.rename), killing(os.replace)
+store.pushx(batch, txn=txn)
+print("returned", calls, flush=True)
+os.kill(os.getpid(), signal.SIGKILL)  # committed, but never acknowledged
+"""
+
+
+@pytest.mark.parametrize("kind", ["rows", "frame_txn"])
+def test_sigkill_at_every_pushx_step_is_exact(spark, tmp_path, kind):
+    """SIGKILL a writer process before each rename/replace of a pushx
+    and once after it returns, then reopen and retry (row list: only if
+    the length shows the batch missing) or replay (DataFrame with a
+    stream txn: always). Every acknowledged row reads back exactly once
+    and rowids stay 0..n-1 — including at the step where the data
+    files are in place and the manifest is not yet replaced."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "writer.py"
+    script.write_text(_CRASHING_WRITER)
+    path = str(tmp_path / "s")
+    acked: list[int] = []
+    kill_at, n = 1, 40
+    while True:
+        first = kill_at * 1000
+        proc = subprocess.Popen(
+            [sys.executable, str(script), repo, path, kind, str(kill_at), str(first), str(n)],
+            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True, start_new_session=True,
+        )
+        out, _ = proc.communicate(timeout=300)
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)  # the writer's JVM
+        assert proc.returncode == -signal.SIGKILL, out
+
+        store = OrdinalStore(spark, path, schema="k INT")
+        before = len(acked)
+        if kind == "rows":
+            if store.count() == before:
+                store.pushx([{"k": k} for k in range(first, first + n)])
+        else:
+            batch = spark.range(first, first + n, 1, 2).selectExpr("CAST(id AS INT) AS k")
+            store.pushx(batch, txn=("stream", first))
+        acked.extend(range(first, first + n))
+        got = store.getall(ordered=False).agg(
+            F.count("*").alias("n"), F.countDistinct("rowid").alias("rowids"),
+            F.min("rowid").alias("lo"), F.max("rowid").alias("hi"),
+            F.countDistinct("k").alias("keys"), F.sum("k").alias("key_sum"),
+        ).collect()[0]
+        assert (got.n, got.rowids, got.lo, got.hi, got.keys, got.key_sum) == (
+            len(acked), len(acked), 0, len(acked) - 1, len(acked), sum(acked)
+        ), f"after SIGKILL at step {kill_at}: {got}"
+        assert store.count() == len(acked)
+        if out.startswith("returned"):
+            break
+        kill_at += 1
+    assert kill_at >= 2

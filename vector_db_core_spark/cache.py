@@ -24,18 +24,14 @@ under memory pressure), not the row — a documented deviation
                        fed by streaming/ingest can be hot_table'd by
                        readers independently.
 
-Refresh cost of a hot table over a store that keeps growing: every
-append to a path (``pushx``, an ``IngestBuffer`` flush, a stream
-micro-batch) makes Spark's ``recacheByPath`` drop the cached data of
-each plan that reads that path. The cache entry stays registered, so
-the next read whose plan matches it — a ``pull`` or ``getall`` on the
-same store — re-materializes the WHOLE table before it answers, and
-that one read costs a full scan instead of a pruned one. In a cycle of
-writes followed by point reads, the first read after the writes reads
-every row of the store (about half the rows the ``store`` benchmark
-workload reads per pass). Where writes and reads interleave, release
-the hot table before writing and pin it again when a read burst
-starts.
+Refresh cost: a pin over an ``OrdinalStore`` read is the snapshot at
+its length. Every store read carries the committed length as a
+literal (``rowid < length``), and ``pushx`` has Spark write only into a
+staging directory, so Spark's ``recacheByPath`` never drops the pin on
+an append. After an append the pin keeps answering reads at its own
+length from memory; reads at the new length no longer match it, and
+the store answers them from the ordinal-named files (one file for a
+point read). Pin again when a read burst should see the new rows.
 """
 
 from __future__ import annotations

@@ -2744,8 +2744,8 @@ def _ranked_customer_spend(spark: SparkSession, sf_dir: str):
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     tagged = srt.withColumn("_mid", F.monotonically_increasing_id())
-    ranked, n_total = _dense_rowid_frame(tagged, start=1)
-    return ranked.withColumnRenamed("rowid", "i"), n_total
+    ranked, counts = _dense_rowid_frame(tagged, start=1)
+    return ranked.withColumnRenamed("rowid", "i"), sum(counts.values())
 
 
 _PATTERN_SQL = """

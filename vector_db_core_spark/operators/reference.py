@@ -115,8 +115,8 @@ def ref_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict task 7): two ``pushx`` batches with DIFFERENT schemas —
     the first 3,000 events as (event_id, user_id), the next 3,000
     with two added columns (event_type, value) — then one merged
-    read. ``mergeSchema`` reconciles the footers and the older rows
-    surface NULL for the later columns (store.py pushx docstring);
+    read. The store manifest's schema gains the added columns and the
+    older rows surface NULL for them (store.py pushx docstring);
     the oracle states that exact NULL-backfill from the fixture, so
     DuckDB verifies the merged values, not just the row count.
     [EXT] beyond the reference: its record schema is fixed at compile
@@ -125,10 +125,10 @@ def ref_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The store is (re)built in a session-temp dir per sf_dir — a
     bounded 6,000-row write; the returned DataFrame is the store's
-    merged-footer read, so the gate exercises the real pushx →
-    parquet append → mergeSchema path, not a simulation of it.
-    Scale: evolution costs one footer read per file at planning time
-    (compact() amortizes it); NULL backfill is metadata-only."""
+    own read with the manifest schema, so the gate exercises the real
+    pushx → ordinal-named files → manifest path, not a simulation of it.
+    Scale: evolution costs no footer read (the manifest carries the
+    schema); NULL backfill is metadata-only."""
     import hashlib
     import os
     import shutil
@@ -181,7 +181,8 @@ def ref_compact_preserves_content(spark: SparkSession, sf_dir: str) -> DataFrame
     pytest: tests/test_store.py covers span tiling; this row puts the
     content-preservation contract under the cross-engine gate).
 
-    Scale: compact is ONE repartitionByRange + sorted write — the
+    Scale: compact is ONE repartitionByRange + sorted write, then a
+    rowid-only scan that names each file by its first ordinal — the
     standard offline maintenance job; file count drops 8 → 1 here
     (asserted by tests/test_store.py compaction pins at larger
     geometries)."""

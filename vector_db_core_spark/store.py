@@ -37,37 +37,79 @@ Scale design
   ``rowid = i`` / ``rowid BETWEEN a AND b`` by reading only the
   overlapping row groups — the Spark analog of the reference's
   O(1) slot arithmetic (dynamic_vector_manage_service.rs:226-242).
-* **count() without a data scan.** Parquet footers carry row counts, so
-  ``count()`` on a plain scan is metadata-only; we additionally keep a
-  tiny ``_meta.json`` with the committed length (the analog of the
-  reference's 8-byte persisted length header,
-  dynamic_vector_manage_service.rs:24,72-79).
+* **count() without a data scan.** ``_meta.json`` holds the committed
+  length (the analog of the reference's 8-byte persisted length
+  header, dynamic_vector_manage_service.rs:24,72-79) and the store
+  schema, so ``count()`` is one file read and every read is
+  ``spark.read.schema(<manifest schema>).parquet(store)
+  .where(rowid < length)``: no schema-inference or footer job.
+* **Files named by ordinal.** Each data file is a flat
+  ``<first ordinal>.parquet`` in the store directory, the analog of
+  the reference's offset index (dynamic_vector_manage_service.rs:
+  226-242). A point or range read bisects the names and opens only
+  the files that overlap it: one file, one task for a point read.
 
-Consistency: visibility is committed-batch (Spark's commit protocol),
-deliberately *stronger* than the reference, which bumps its length
-header before data lands and so can expose phantom ordinals
+Commit protocol
+---------------
+``pushx`` has Spark write the batch into ``<store>/_staging/<token>/``
+(Spark skips ``_``-prefixed directories when it lists the store). The
+driver then renames each part file into the store directory under the
+first ordinal it holds, and the atomic replace of ``_meta.json`` is the
+one commit point. A crash before that replace leaves files whose names
+start at or past the committed length: reads never see them (the
+length predicate), and the next ``pushx`` deletes them and the staging
+directory under the writer lock. So a crash loses the whole batch or
+none of it, and a retry or a stream replay is exact.
+
+Because Spark's writer only ever targets the staging path, its
+``recacheByPath`` never drops a hot table pinned over the store; the
+length literal in every read keeps such a pin answering reads at its
+own length only (see ``cache.py``).
+
+The commit relies on local-file-system ``rename`` and ``replace``
+being atomic; object stores have no atomic rename, so a store there
+needs a different commit point. Process crashes are covered, not
+power loss (nothing is fsynced, as in the reference). Store
+directories written before files were named by ordinal (parquet
+``part-*`` files, a ``_meta.json`` without a schema) are not read.
+
+Consistency: visibility is committed-batch, deliberately *stronger*
+than the reference, which bumps its length header before data lands
+and so can expose phantom ordinals
 (dynamic_vector_manage_service.rs:291-302; SURVEY.md §7).
 """
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import json
 import os
+import re
+import shutil
 import tempfile
 import threading
+import uuid
 from typing import Iterable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
-
-from vector_db_core_spark.sources.loaders import read_parquet
 
 _PARTITION_MASK = (1 << 33) - 1  # low 33 bits of monotonically_increasing_id
 
 ROWID = "rowid"
+
+_STAGING = "_staging"
+#: Spark's part file name: part-<partition id>-<job uuid>-c000[.codec].parquet
+_PART = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _file_name(first: int) -> str:
+    """A data file's name: the first ordinal it holds, zero-padded so a
+    plain listing sorts in ordinal order."""
+    return f"{first:020d}.parquet"
 
 
 def prefix_offsets(counts: dict[int, int], pid: Column, start: int = 0) -> tuple[Column, int]:
@@ -97,18 +139,19 @@ def _rowid(offset: Column, position: Column) -> Column:
     return F.try_add(offset, position)
 
 
-def _dense_rowid_frame(tagged: DataFrame, start: int) -> tuple[DataFrame, int]:
+def _dense_rowid_frame(tagged: DataFrame, start: int) -> tuple[DataFrame, dict[int, int]]:
     """Core rowid assignment over an already-``_mid``-tagged frame.
 
-    Returns ``(frame_with_rowid, total_rows)`` — the total comes from
-    the same per-partition counts used for the prefix sum, so callers
-    never need a second counting job over the data.
+    Returns ``(frame_with_rowid, counts)``: ``counts`` maps each
+    non-empty partition id to its rows, the same counts the prefix sum
+    used, so callers never need a second counting job over the data.
     """
     pid = F.shiftright(F.col("_mid"), 33)
-    counts = tagged.select(pid.alias("_pid")).groupBy("_pid").count().collect()
-    offset, total = prefix_offsets({r["_pid"]: r["count"] for r in counts}, pid, start)
+    rows = tagged.select(pid.alias("_pid")).groupBy("_pid").count().collect()
+    counts = {r["_pid"]: r["count"] for r in rows}
+    offset, _ = prefix_offsets(counts, pid, start)
     out = tagged.withColumn(ROWID, _rowid(offset, F.col("_mid").bitwiseAND(_PARTITION_MASK))).drop("_mid")
-    return out, total
+    return out, counts
 
 
 def with_list_rowid(df: DataFrame, start: int) -> DataFrame:
@@ -143,6 +186,24 @@ def with_dense_rowid(df: DataFrame, start: int = 0, rowid_col: str = ROWID) -> D
     return out
 
 
+def _merged_schema(stored: dict | None, batch: StructType) -> StructType:
+    """The manifest schema after appending a batch: the stored fields,
+    then the batch's new ones. A retyped column raises (parquet would
+    read it inconsistently); nullability is not compared."""
+    if stored is None:
+        return batch
+    merged = StructType.fromJson(stored)
+    for field in batch.fields:
+        if field.name not in merged.names:
+            merged.add(field)
+        elif merged[field.name].dataType.simpleString() != field.dataType.simpleString():
+            raise ValueError(
+                f"column {field.name!r} is {merged[field.name].dataType.simpleString()} in the "
+                f"store, {field.dataType.simpleString()} in the batch"
+            )
+    return merged
+
+
 class OrdinalStore:
     """Append-only, ordinal-addressed table — the ``VectorEngine`` façade.
 
@@ -160,13 +221,9 @@ class OrdinalStore:
         self.path = path
         self.schema = schema
         self._meta_path = os.path.join(path, "_meta.json")
-        # one meta-vs-footer reconciliation per instance (repaired on
-        # first count(), refreshed after every write through this
-        # instance); crash repair still happens on reopen
-        self._reconciled = False
         # in-process writer serialization, matching the reference's
         # Mutex<WritableCache> — two threads appending through the same
-        # instance must not interleave count()/write/meta. Cross-process
+        # instance must not interleave count()/write/manifest. Cross-process
         # writers are additionally serialized by an advisory flock
         # (_process_write_lock), which the reference does not have.
         self._write_lock = threading.Lock()
@@ -198,122 +255,103 @@ class OrdinalStore:
             finally:
                 os.close(fd)
 
-    # -- length header ------------------------------------------------
-    def _read_meta_dict(self) -> dict | None:
+    # -- manifest -----------------------------------------------------
+    def _read_meta(self) -> dict | None:
+        """The committed manifest ``{"length", "schema", "streams"}``;
+        None for a store nothing was ever committed to."""
         try:
             with open(self._meta_path) as f:
                 meta = json.load(f)
-            int(meta["length"])
-            return meta
-        except (OSError, ValueError, KeyError, TypeError):
+        except FileNotFoundError:
             return None
+        if "schema" not in meta:
+            raise RuntimeError(
+                f"{self.path} was written before store files were named by "
+                "ordinal and cannot be read by this version"
+            )
+        return meta
 
-    def _read_meta(self) -> int | None:
-        meta = self._read_meta_dict()
-        return None if meta is None else int(meta["length"])
+    def _write_meta(self, meta: dict, root: str | None = None) -> None:
+        """Atomic manifest update: temp file + ``os.replace`` in the same
+        directory — the store's one commit point.
 
-    def _write_meta(self, length: int, txn: tuple[str, int] | None = None) -> None:
-        """Atomic header update: temp file + rename in the same dir.
-
-        A crash can no longer leave a half-written header; a crash
-        *between* the parquet commit and this rename leaves a stale
-        (too-small) length, which ``count()`` repairs by reconciling
-        against the parquet footers (taking the max) — so committed
-        rows are never hidden and ordinals are never reused.
-
-        ``txn=(stream_id, epoch)`` records a streaming commit in the
-        SAME atomic rename as the length, so "rows visible" and "epoch
-        marked done" can never disagree after a clean write — the
-        idempotence handshake ``pushx`` uses to skip replayed
-        micro-batches. Existing stream marks are carried forward.
+        ``meta["streams"]`` maps each ``txn`` stream id to its last
+        committed epoch, so "rows visible" and "epoch marked done" are
+        one rename and can never disagree — the idempotence handshake
+        ``pushx`` uses to skip replayed micro-batches.
         """
-        os.makedirs(self.path, exist_ok=True)
-        meta = self._read_meta_dict() or {}
-        streams = dict(meta.get("streams") or {})
-        if txn is not None:
-            streams[txn[0]] = int(txn[1])
-        payload: dict = {"length": length}
-        if streams:
-            payload["streams"] = streams
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="_meta.", suffix=".tmp")
+        root = root or self.path
+        fd, tmp = tempfile.mkstemp(dir=root, prefix="_meta.", suffix=".tmp")
         try:
             with os.fdopen(fd, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, self._meta_path)
+                json.dump(meta, f)
+            os.replace(tmp, os.path.join(root, "_meta.json"))
         except BaseException:
-            try:
+            with contextlib.suppress(OSError):
                 os.unlink(tmp)
-            except OSError:
-                pass
             raise
 
     def last_committed_epoch(self, stream_id: str) -> int:
         """Highest epoch committed by ``pushx(..., txn=(stream_id, e))``;
         -1 if none. The streaming sink's replay detector."""
-        meta = self._read_meta_dict() or {}
-        return int((meta.get("streams") or {}).get(stream_id, -1))
-
-    def _footer_count(self) -> int | None:
-        """Row count from parquet footers (metadata-only job); None if
-        the dataset doesn't exist yet. Only the missing-path error is
-        swallowed — a transient read failure propagates rather than
-        silently restarting ordinals at 0 over existing data."""
-        try:
-            return self._df().count()
-        except AnalysisException as exc:
-            # missing dir, or a dir holding only sidecars (_meta.json /
-            # _writer.lock) with no parquet yet — both mean length 0;
-            # any other failure propagates (never silently restart
-            # ordinals at 0 over existing data)
-            s = str(exc)
-            if (
-                "PATH_NOT_FOUND" in s
-                or "Path does not exist" in s
-                or "UNABLE_TO_INFER_SCHEMA" in s
-            ):
-                return None
-            raise
+        meta = self._read_meta() or {}
+        return int(meta.get("streams", {}).get(stream_id, -1))
 
     def count(self) -> int:
-        """Record count — the reference's `len` (vector_engine.rs:92-94).
-
-        The meta header is the analog of the reference's 8-byte length
-        header (dynamic_vector_manage_service.rs:72-79) but is written
-        *after* the data commits, so on any crash window it can only be
-        stale-low; reconciling with the footer count (max) yields the
-        committed length. Concurrent writers are not supported (the
-        reference serializes writers on an in-process mutex; across
-        processes neither engine guards this).
-        """
+        """Record count — the reference's `len` (vector_engine.rs:92-94):
+        the manifest's committed length, one small file read. Concurrent
+        writers are serialized (``pushx``), so it never runs ahead of
+        the data."""
         meta = self._read_meta()
-        if meta is not None and self._reconciled:
-            return meta  # O(1) header read, like the reference
-        footer = self._footer_count()
-        self._reconciled = True
-        if meta is None and footer is None:
-            return 0
-        if footer is None:
-            return meta
-        if meta is None or footer > meta:
-            self._write_meta(footer)  # repair the stale/missing header
-            return footer
-        return meta
+        return 0 if meta is None else int(meta["length"])
 
     def is_empty(self) -> bool:
         return self.count() == 0
 
-    # -- writes -------------------------------------------------------
-    def _df(self) -> DataFrame:
-        # the stored dataset carries payload + rowid; parquet footers
-        # are authoritative (self.schema describes only the payload and
-        # is used when coercing python rows in pushx). mergeSchema
-        # reconciles batches appended with evolved (column-added)
-        # schemas — see ``pushx`` docstring. Merging reads every
-        # file's footer in a Spark job; read_parquet runs that job only
-        # when the store's files changed since the last read, so the
-        # first read after a write pays it and later reads do not.
-        return read_parquet(self.spark, self.path, merge_schema=True)
+    def _ordinals(self) -> list[int]:
+        """First ordinals of every data file in the store directory,
+        ascending — committed files and, past the committed length,
+        the orphans of a crashed write."""
+        try:
+            names = os.listdir(self.path)
+        except FileNotFoundError:
+            return []
+        firsts = []
+        for name in names:
+            if name.endswith(".parquet"):
+                stem = name[: -len(".parquet")]
+                if not stem.isdigit():
+                    raise RuntimeError(f"{self.path}: {name} is not an ordinal-named store file")
+                firsts.append(int(stem))
+        return sorted(firsts)
 
+    def _drop_uncommitted(self, length: int) -> None:
+        """Delete what a crashed write left: the staging directory, an
+        unreplaced manifest temp file, and every file whose first
+        ordinal is at or past the committed ``length``. Writer lock held."""
+        os.makedirs(self.path, exist_ok=True)
+        shutil.rmtree(os.path.join(self.path, _STAGING), ignore_errors=True)
+        for name in os.listdir(self.path):
+            if name.startswith("_meta.") and name.endswith(".tmp"):
+                os.remove(os.path.join(self.path, name))
+        for first in self._ordinals():
+            if first >= length:
+                os.remove(os.path.join(self.path, _file_name(first)))
+
+    def _df(self, meta: dict | None = None) -> DataFrame:
+        """The committed store: every file read with the manifest schema,
+        cut at the committed length. ``self.schema`` describes only the
+        payload and is used when coercing python rows in ``pushx``."""
+        if meta is None:
+            meta = self._read_meta()
+        if meta is None:
+            # nothing committed: Spark raises its missing-path or
+            # no-schema error for a never-written store
+            return self.spark.read.parquet(self.path).where(F.col(ROWID) < 0)
+        schema = StructType.fromJson(meta["schema"])
+        return self.spark.read.schema(schema).parquet(self.path).where(F.col(ROWID) < int(meta["length"]))
+
+    # -- writes -------------------------------------------------------
     def pushx(
         self,
         batch: DataFrame | Sequence[Row] | Iterable[dict],
@@ -329,8 +367,9 @@ class OrdinalStore:
         partition by construction (the partition's constant offset +
         the low-33-bit record number of ``monotonically_increasing_id``,
         a per-row projection that keeps row order), so row-group stats
-        are pruning-friendly without any sort, and one atomic parquet
-        append commits it.
+        are pruning-friendly without any sort. Each write task writes
+        one file; the driver names it by the partition's first ordinal
+        and commits by replacing the manifest (module docstring).
 
         A list of rows (``push``, ``IngestBuffer.flush``) is already on
         the driver and in order: it is written as ONE partition whose
@@ -339,10 +378,10 @@ class OrdinalStore:
 
         Schema evolution [EXT — the reference's schemas are fixed at
         compile time, dynamic-vector-macro]: a batch may ADD nullable
-        columns relative to earlier batches; reads merge footers
-        (``mergeSchema``) and older rows surface NULL for the new
-        columns. Dropping or retyping columns is not supported —
-        parquet would resolve them inconsistently.
+        columns relative to earlier batches; the manifest schema gains
+        them and older rows read NULL for them. A batch that retypes a
+        column raises ``ValueError``; one that omits a column stores
+        NULL for it.
 
         ``deterministic_source=True`` skips the safety persist of the
         tagged batch (one full materialization) — correct ONLY when
@@ -355,15 +394,11 @@ class OrdinalStore:
         ``txn=(stream_id, epoch)`` makes the append idempotent per
         stream: if ``epoch`` <= the last epoch recorded for
         ``stream_id`` the call is a no-op returning -1, and on success
-        the epoch commits in the SAME atomic meta rename as the length
-        header. This is how the streaming sink survives micro-batch
-        replays after a restart without duplicating rows (the pattern
-        Spark's docs prescribe for ``foreachBatch`` exactly-once: an
-        epoch-keyed idempotent sink). The remaining window is a crash
-        BETWEEN the parquet commit and the meta rename — a replay then
-        re-appends that one batch (at-least-once for exactly that
-        batch; the reference under the same crash instead LOSES its
-        whole buffer, writable_cache.rs has no WAL).
+        the epoch commits in the SAME manifest replace as the length.
+        This is how the streaming sink survives micro-batch replays
+        after a restart without duplicating rows (the pattern Spark's
+        docs prescribe for ``foreachBatch`` exactly-once: an
+        epoch-keyed idempotent sink).
         """
         n_rows = 0
         if not isinstance(batch, DataFrame):
@@ -371,68 +406,108 @@ class OrdinalStore:
             n_rows = len(rows)
             batch = self.spark.createDataFrame(rows, schema=self.schema)
         with self._write_lock, self._process_write_lock():
-            if txn is not None and txn[1] <= self.last_committed_epoch(txn[0]):
+            meta = self._read_meta() or {"length": 0, "streams": {}}
+            streams = meta.get("streams", {})
+            if txn is not None and txn[1] <= streams.get(txn[0], -1):
                 return -1
-            start = self.count()
-            if n_rows:
-                written = n_rows
-                with_list_rowid(batch, start).write.mode("append").parquet(self.path)
-            else:
-                # Persist the tagged frame so the counts action and the
-                # write see the SAME partitioning even for
-                # non-deterministic sources (shuffles, sampled/rand
-                # inputs) — without this, drift between the two
-                # evaluations could assign non-dense or duplicate
-                # ordinals silently.
-                tagged = batch.withColumn("_mid", F.monotonically_increasing_id())
-                if not deterministic_source:
-                    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    out, written = _dense_rowid_frame(tagged, start)
-                    # r14: no sortWithinPartitions — rowid is provably in
-                    # physical row order within every partition (see the
-                    # docstring), so the old sort was a semantic no-op
-                    # that still paid a full Tungsten sort pass over the
-                    # batch (alternating A/B on the 1M-row w1 append: min
-                    # 2.08 s -> 1.62 s). A plan test pins the written
-                    # files rowid-ordered.
-                    out.write.mode("append").parquet(self.path)
-                finally:
+            start = int(meta["length"])
+            self._drop_uncommitted(start)
+            persisted = None
+            try:
+                if n_rows:
+                    out, counts = with_list_rowid(batch, start), {0: n_rows}
+                else:
+                    tagged = batch.withColumn("_mid", F.monotonically_increasing_id())
                     if not deterministic_source:
-                        tagged.unpersist()
-            self._write_meta(start + written, txn=txn)
-            self._reconciled = True
+                        # Persist the tagged frame so the counts action
+                        # and the write see the SAME partitioning even
+                        # for non-deterministic sources (shuffles,
+                        # sampled/rand inputs) — without this, drift
+                        # between the two evaluations could assign
+                        # non-dense or duplicate ordinals silently.
+                        tagged = persisted = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+                    out, counts = _dense_rowid_frame(tagged, start)
+                schema = _merged_schema(meta.get("schema"), out.schema)
+                staging = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
+                # one file per task, so a part file's partition id names
+                # its first ordinal
+                out.write.option("maxRecordsPerFile", 0).parquet(staging)
+            finally:
+                if persisted is not None:
+                    persisted.unpersist()
+            end = self._place(staging, counts, start)
+            if txn is not None:
+                streams = {**streams, txn[0]: int(txn[1])}
+            self._write_meta({"length": end, "schema": schema.jsonValue(), "streams": streams})
+            shutil.rmtree(os.path.join(self.path, _STAGING), ignore_errors=True)
             return start
+
+    def _place(self, staging: str, counts: dict[int, int], start: int) -> int:
+        """Rename each non-empty partition's part file from ``staging``
+        into the store, named by its first ordinal (partitions in id
+        order from ``start``, as ``prefix_offsets`` numbers them), and
+        return the length after the batch. A partition with no rows has
+        no file to place (Spark writes one schema-only file for an empty
+        batch; it stays in staging)."""
+        firsts, end = {}, start
+        for pid in sorted(counts):
+            firsts[pid], end = end, end + counts[pid]
+        parts = [(int(m.group(1)), name) for name in os.listdir(staging) if (m := _PART.match(name))]
+        parts = [(pid, name) for pid, name in parts if pid in firsts]
+        if sorted(pid for pid, _ in parts) != sorted(firsts):
+            raise RuntimeError(f"staged part files {sorted(parts)} do not match partitions {sorted(firsts)}")
+        for pid, name in parts:
+            os.rename(os.path.join(staging, name), os.path.join(self.path, _file_name(firsts[pid])))
+        return end
 
     def push(self, row: Row | dict) -> int:
         """Append one record (degenerate pushx — vector_engine.rs:79-81)."""
         return self.pushx([row])
 
     # -- reads --------------------------------------------------------
+    def _span(self, lo: int, hi: int, what: str) -> DataFrame:
+        """Rows with ``lo <= rowid < hi``; raises IndexError past the length.
+
+        A store pinned by ``hot_table`` at the current length answers
+        from its cached blocks: ``storageLevel`` looks the plan up in
+        the cache manager without running a job, the probe of the
+        reference's ``ReadableCache`` (readable_cache.rs:54-63).
+        Otherwise the file names are bisected and only the files that
+        overlap ``[lo, hi)`` are read — the reference's offset-index
+        lookup (dynamic_vector_manage_service.rs:226-242)."""
+        meta = self._read_meta()
+        n = 0 if meta is None else int(meta["length"])
+        if lo < 0 or hi < lo or hi > n:
+            raise IndexError(f"{what} out of bounds for length {n}")
+        df = self._df(meta)
+        cond = F.col(ROWID).between(lo, hi - 1)
+        if df.storageLevel != StorageLevel.NONE:
+            return df.where(cond)
+        firsts = [f for f in self._ordinals() if f < n]
+        files = firsts[max(bisect.bisect_right(firsts, lo) - 1, 0) : bisect.bisect_left(firsts, hi)]
+        if not files:
+            return df.where(cond)
+        paths = [os.path.join(self.path, _file_name(f)) for f in files]
+        return self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(*paths).where(cond)
+
     def pullx(self, index: int, count: int, ordered: bool = True) -> DataFrame:
         """Contiguous range read by ordinal (reference `pullx`).
 
-        A rowid BETWEEN predicate pushed into the Parquet scan; with
-        rowid-ordered row groups this touches only the overlapping
-        groups — the analog of the reference's single spanning blob
-        read (dynamic_vector_manage_service.rs:332-359).
+        Reads only the files whose ordinal span overlaps the range, and
+        the rowid BETWEEN predicate pushed into their scan touches only
+        the overlapping row groups — the analog of the reference's
+        single spanning blob read (dynamic_vector_manage_service.rs:332-359).
 
         ``ordered=False`` skips the result sort (a range-sized shuffle)
         for callers feeding joins/aggregates that don't need row order
         — same guidance as ``getall``.
         """
-        n = self.count()
-        if index < 0 or count < 0 or index + count > n:
-            raise IndexError(f"range [{index}, {index + count}) out of bounds for length {n}")
-        df = self._df().where(F.col(ROWID).between(index, index + count - 1))
+        df = self._span(index, index + count, f"range [{index}, {index + count})")
         return df.orderBy(ROWID) if ordered else df
 
     def pull(self, index: int) -> DataFrame:
-        """Point read by ordinal (reference `pull`)."""
-        n = self.count()
-        if index < 0 or index >= n:
-            raise IndexError(f"index {index} out of bounds for length {n}")
-        return self._df().where(F.col(ROWID) == index)
+        """Point read by ordinal (reference `pull`): one file, one task."""
+        return self._span(index, index + 1, f"index {index}")
 
     def pull_row(self, index: int) -> Row:
         rows = self.pull(index).collect()
@@ -485,42 +560,58 @@ class OrdinalStore:
         large files, each covering a CONTIGUOUS rowid range and sorted
         within (``repartitionByRange(rowid)`` + sortWithinPartitions),
         so row-group pruning for point/range reads is as tight as a
-        freshly bulk-written store. Offline operation — concurrent
-        readers of the same path may see a partial swap (same
-        single-writer contract as ``pushx``); a crash mid-swap leaves
-        the complete old or complete new directory plus a leftover to
-        clean, never a mix.
+        freshly bulk-written store. The new store is built beside the
+        old one — ordinal-named files plus the same manifest — and the
+        two directories are swapped by rename. Offline operation —
+        concurrent readers of the same path may see a partial swap
+        (same single-writer contract as ``pushx``); a crash mid-swap
+        leaves the complete old or complete new directory plus a
+        leftover to clean, never a mix.
 
         Returns the row count (sanity-checked before the swap).
         """
-        import shutil
-
         with self._write_lock, self._process_write_lock():
-            n = self.count()
+            meta = self._read_meta()
+            n = 0 if meta is None else int(meta["length"])
             if n == 0:
                 return 0
             if n_files <= 0:
                 n_files = max(1, n // 1_000_000)
             new_path = self.path.rstrip("/") + ".compacting"
+            staging = os.path.join(new_path, _STAGING)
             shutil.rmtree(new_path, ignore_errors=True)
             (
-                self._df()
+                self._df(meta)
                 .repartitionByRange(n_files, F.col(ROWID))
                 .sortWithinPartitions(ROWID)
-                .write.mode("overwrite")
-                .parquet(new_path)
+                .write.option("maxRecordsPerFile", 0)
+                .parquet(staging)
             )
-            rewritten = self.spark.read.parquet(new_path).count()
-            if rewritten != n:
+            spans = (
+                self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(staging)
+                .groupBy(F.input_file_name().alias("file"))
+                .agg(F.min(ROWID).alias("lo"), F.count("*").alias("n"))
+                .orderBy("lo")
+                .collect()
+            )
+            covered = 0
+            for s in spans:
+                if s.lo != covered:
+                    break
+                covered += s.n
+            if covered != n:
                 shutil.rmtree(new_path, ignore_errors=True)
-                raise RuntimeError(f"compact wrote {rewritten} rows, expected {n}; aborted")
+                raise RuntimeError(f"compact's files tile rowids 0..{covered - 1}, expected 0..{n - 1}; aborted")
+            for s in spans:
+                name = s.file.rsplit("/", 1)[-1]
+                os.rename(os.path.join(staging, name), os.path.join(new_path, _file_name(s.lo)))
+            shutil.rmtree(staging)
+            self._write_meta(meta, root=new_path)
             old_path = self.path.rstrip("/") + ".old"
             shutil.rmtree(old_path, ignore_errors=True)
             os.replace(self.path, old_path)
             os.replace(new_path, self.path)
             shutil.rmtree(old_path, ignore_errors=True)
-            self._write_meta(n)
-            self._reconciled = True
             return n
 
     def getall(self, ordered: bool = True) -> DataFrame:
@@ -548,7 +639,8 @@ class OrdinalStore:
         validates that invariant from the actual footer stats —
         min/max/count per file, sorted — and raises if any gap or
         overlap is found (a torn layout must fail loudly, not export
-        silently misordered data).
+        silently misordered data). It also checks that each file's name
+        is the first ordinal it holds, the index point reads bisect.
         """
         spans = self.stats()
         expected = 0
@@ -560,6 +652,8 @@ class OrdinalStore:
                     f"[{s.min_rowid}, {s.max_rowid}] rows={s.n_rows}, "
                     f"expected span start {expected}"
                 )
+            if s.file.rsplit("/", 1)[-1] != _file_name(s.min_rowid):
+                raise RuntimeError(f"{s.file} is not named by its first rowid {s.min_rowid}")
             expected = s.max_rowid + 1
         n = self.count()
         if expected != n:

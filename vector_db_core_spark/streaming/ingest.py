@@ -24,16 +24,14 @@ Spark mapping (SURVEY.md §2 rows W1-W3, §4):
   reference's routing rule ``idx < db.len ? disk : buffer``).
 * **W3 ingest metrics** → ``StreamingQuery.lastProgress`` passthrough.
 
-Failure semantics, documented honestly: the sink is idempotent by
-epoch (``pushx(..., txn=(stream_id, epoch))`` — replayed micro-batches
-are skipped, the epoch mark committing atomically with the length
-header), which is the ``foreachBatch`` exactly-once recipe from
-Spark's own docs. One crash window remains: dying BETWEEN the parquet
-commit and the meta rename re-appends that single batch on replay
-(at-least-once for exactly that batch). The reference under the same
-crash *loses* the buffered rows entirely (no WAL, no fsync —
-file_access_service.rs has neither); ours errs to bounded duplication,
-the reference's to loss.
+Failure semantics: the sink is idempotent by epoch
+(``pushx(..., txn=(stream_id, epoch))`` — replayed micro-batches are
+skipped, the epoch mark committing in the same manifest replace as the
+length), which is the ``foreachBatch`` exactly-once recipe from
+Spark's own docs. A crash at any point of a ``pushx`` commits the whole
+micro-batch or none of it, so the replay after a restart is exact. The
+reference under the same crash *loses* the buffered rows entirely (no
+WAL, no fsync — file_access_service.rs has neither).
 
 Scale: the stream never funnels through the driver — each micro-batch
 is a normal distributed write; state for windows/dedup is bounded by
@@ -75,8 +73,7 @@ def stream_append_to_store(
     ``idempotent=True`` (default) passes ``(checkpoint_dir, epoch_id)``
     as the pushx transaction key, so a micro-batch replayed after a
     crash/restart is skipped instead of re-appended — the epoch commits
-    atomically with the store's length header. See ``pushx`` for the
-    one remaining at-least-once crash window.
+    atomically with the store's length header.
     """
     reader = spark.readStream.schema(schema).format(fmt)
     if max_files_per_trigger is not None:
