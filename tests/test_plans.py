@@ -906,7 +906,7 @@ def test_pattern_sequences_single_shuffle_no_python(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_round8_timeseries_windows_on_reductions(spark):
+def test_timeseries_windows_on_reductions(spark):
     """CUSUM / MoM: every keyless or low-card window feeds from the
     day- or month-rolled reduction (partial hash aggregate before any
     SinglePartition exchange), never the raw corpus."""
@@ -1109,7 +1109,7 @@ def test_round11_phash_wide_banded_join_plan(spark):
     assert "k#" in plan and "bv#" in plan
 
 
-def test_round10_anova_single_corpus_scan(spark):
+def test_anova_single_corpus_scan(spark):
     """The ANOVA grand totals are windows over the 5-row priority
     grid, not crossJoins against re-aggregated branches — the corpus
     must be scanned exactly once (the contingency-marginals
@@ -1123,7 +1123,7 @@ def test_round10_anova_single_corpus_scan(spark):
     assert plan.count("orders.parquet") == 1, plan.count("orders.parquet")
 
 
-def test_round14_kmeans_assignment_is_centroid_array_fold(spark):
+def test_kmeans_assignment_is_centroid_array_fold(spark):
     """The Lloyd assignment argmin folds over the centroid table
     collapsed to ONE broadcast array row (array_min over (dist, cid)
     structs) — the old form fanned the corpus out k-times and

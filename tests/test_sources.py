@@ -288,11 +288,13 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
 # ---------------------------------------------------------------- read_parquet
 
 
-def _same_as_plain_read(spark, path, merge_schema=False):
+def _same_as_plain_read(spark, path):
+    """Every caller's files share one schema, so the footer a plain read
+    infers from does not matter."""
     from vector_db_core_spark.sources import read_parquet
 
-    plain = spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(path)
-    got = read_parquet(spark, path, merge_schema=merge_schema)
+    plain = spark.read.parquet(path)
+    got = read_parquet(spark, path)
     assert got.schema == plain.schema
     assert sorted(map(tuple, got.collect()), key=repr) == sorted(map(tuple, plain.collect()), key=repr)
     return got
@@ -327,31 +329,36 @@ def test_read_parquet_hive_partitioned_scratch_table(spark, tmp_path):
     _same_as_plain_read(spark, path)
 
 
-def test_read_parquet_store_with_added_column(spark, tmp_path):
-    store = OrdinalStore(spark, str(tmp_path / "s"))
+def test_read_parquet_store_directory(spark, tmp_path):
+    """A store directory (ordinal-named files beside ``_meta.json`` and
+    ``_writer.lock``) reads like a plain read: the sidecars are not
+    data files. Added columns are ``test_store``'s schema-evolution
+    test, read through the manifest schema."""
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema="a INT")
     store.pushx(spark.range(0, 10).select(F.col("id").cast("int").alias("a")))
-    store.pushx(spark.range(10, 20).select(
-        F.col("id").cast("int").alias("a"), F.lit("new").alias("b")))
-    got = _same_as_plain_read(spark, store.path, merge_schema=True)
-    assert sorted(got.columns) == ["a", "b", "rowid"]
-    assert store.getall().where("b IS NULL").count() == 10
+    store.pushx([{"a": 10 + i} for i in range(10)])
+    got = _same_as_plain_read(spark, store.path)
+    assert got.columns == ["a", "rowid"]
+    assert sorted(r.rowid for r in got.collect()) == list(range(20))
 
 
 def test_read_parquet_reinfers_on_changed_files(spark, tmp_path, job_count):
-    """A memo hit launches no job; a rewritten file or an added file
-    re-infers and the new schema is returned."""
+    """A memo hit launches no job; an added file re-infers (its rows
+    are read), and a rewritten file re-infers and the new schema is
+    returned."""
     from vector_db_core_spark.sources import read_parquet
 
     path = str(tmp_path / "t")
     spark.range(5).select(F.col("id").alias("a")).write.parquet(path)
-    read_parquet(spark, path, merge_schema=True)
-    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
+    read_parquet(spark, path)
+    df, jobs = job_count(lambda: read_parquet(spark, path))
     assert jobs == 0 and df.columns == ["a"]
-    spark.range(5).select(F.col("id").alias("a"), F.col("id").alias("b")).write.mode("append").parquet(path)
-    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
-    assert jobs == 1 and df.columns == ["a", "b"]
+    spark.range(5, 8).select(F.col("id").alias("a")).write.mode("append").parquet(path)
+    df, jobs = job_count(lambda: read_parquet(spark, path))
+    assert jobs == 1 and df.columns == ["a"]
+    assert sorted(r.a for r in df.collect()) == list(range(8))
     spark.range(5).select(F.col("id").cast("string").alias("c")).write.mode("overwrite").parquet(path)
-    df, jobs = job_count(lambda: read_parquet(spark, path, merge_schema=True))
+    df, jobs = job_count(lambda: read_parquet(spark, path))
     assert jobs == 1 and df.columns == ["c"]
     assert df.schema["c"].dataType.simpleString() == "string"
 

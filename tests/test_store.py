@@ -704,6 +704,56 @@ def test_hot_table_survives_appends(spark, tmp_path):
         assert pinned.count() == 2000
 
 
+def test_point_read_decodes_one_page(spark, tmp_path):
+    """A point read decodes one parquet page of the file that holds the
+    ordinal, not the whole file: store files are written in pages of at
+    most 1,000 rows, and the pushed rowid filter meets the page index.
+    Holds for a pushx file and for a compacted one."""
+    store = OrdinalStore(spark, str(tmp_path / "s"))
+    store.pushx(spark.range(0, 12_500, 1, 1).select(
+        F.col("id").cast("int").alias("a"), F.concat(F.lit("v"), F.col("id")).alias("b")))
+    assert len(_parquet_files(store.path)) == 1
+
+    def check():
+        for i in (0, 7_777, 12_499):
+            row, read = _input_records(spark, lambda i=i: store.pull_row(i))
+            assert (row.rowid, row.a, row.b) == (i, i, f"v{i}")
+            assert 0 < read <= 1_000, (i, read)
+
+    check()
+    assert store.compact(n_files=1) == 12_500
+    assert len(_parquet_files(store.path)) == 1
+    check()
+
+
+def test_ordered_pullx_has_no_exchange(spark, tmp_path, job_count):
+    """An ordered pullx sorts its range in one task: no Exchange in the
+    executed plan and one job (no range-sampling job), on an unpinned
+    store and under hot_table, with rows in ordinal order across a file
+    boundary and into a row-list append file."""
+    from vector_db_core_spark.cache import hot_table
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema="a INT")
+    store.pushx(spark.range(0, 3_000, 1, 3).select(F.col("id").cast("int").alias("a")))
+    store.pushx([{"a": 3_000 + i} for i in range(100)])
+    assert len(_parquet_files(store.path)) == 4
+    lo, n = 1_500, 1_550
+
+    def check():
+        df = store.pullx(lo, n)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        rows, jobs = job_count(df.collect)
+        assert jobs == 1
+        assert [r.rowid for r in rows] == list(range(lo, lo + n))
+        assert [r.a for r in rows] == list(range(lo, lo + n))
+
+    check()
+    with hot_table(store.getall(ordered=False), warm=True):
+        assert "InMemoryTableScan" in store.pullx(lo, n)._jdf.queryExecution().executedPlan().toString()
+        check()
+
+
 
 def test_ordered_spans_checks_file_names(spark, tmp_path):
     """ordered_spans fails loudly when a file's name is not the first

@@ -8,12 +8,16 @@ ladder re-times them at 10x to show the dense-rowid protocol
 prefix-sum, offsets as a literal array (`store.prefix_offsets`), NO
 shuffle and NO single-task stage)
 holds its slope when the batch outgrows any single partition, and
-compares the three full-corpus read disciplines:
+compares four full-corpus read disciplines:
 
   unordered       getall(ordered=False) — plain scan, the analytics path
   orderBy         getall(ordered=True)  — global range sort (sampling
                   pass + full-data shuffle; the cost insertion-order
                   streaming consumers pay if they insist on one frame)
+  pullx           pullx(0, rows) — the ordered range read over the whole
+                  store: one task gathers and sorts the range, no
+                  exchange (store.py:pullx); its slope against orderBy
+                  is what the one-task sort costs as ranges grow
   export_ordered  per-file span walk (store.py:export_ordered) — zero
                   shuffle; at local scale its 1-job-per-file launch
                   overhead dominates, at production file sizes that
@@ -96,6 +100,7 @@ def main() -> None:
                 .format("noop")
                 .save()
             )
+            ranged = best_of_2(lambda: store.pullx(0, rows).write.mode("overwrite").format("noop").save())
 
             def export() -> None:
                 n = 0
@@ -108,7 +113,7 @@ def main() -> None:
             print(
                 f"rows={rows:>11,}  w1_pushx={min(w1a, w1b):6.2f}s "
                 f"(runs {w1a:.2f}/{w1b:.2f})  unordered={unordered:5.2f}s  "
-                f"orderBy={ordered:5.2f}s  export_ordered={exported:5.2f}s",
+                f"orderBy={ordered:5.2f}s  pullx={ranged:5.2f}s  export_ordered={exported:5.2f}s",
                 flush=True,
             )
         finally:

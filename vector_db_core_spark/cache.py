@@ -30,8 +30,10 @@ literal (``rowid < length``), and ``pushx`` has Spark write only into a
 staging directory, so Spark's ``recacheByPath`` never drops the pin on
 an append. After an append the pin keeps answering reads at its own
 length from memory; reads at the new length no longer match it, and
-the store answers them from the ordinal-named files (one file for a
-point read). Pin again when a read burst should see the new rows.
+the store answers them from the ordinal-named files (one parquet page
+of one file for a point read: one task, at most 1,000 rows, where an
+answer from the pin would scan every cached partition). Pin again when
+a read burst should see the new rows.
 """
 
 from __future__ import annotations

@@ -83,7 +83,7 @@ _INFERENCE_CONFS = (
 )
 
 _SCHEMAS_LOCK = threading.Lock()
-#: (path, merge_schema, conf values) -> (data-file signature, schema)
+#: (path, conf values) -> (data-file signature, schema)
 _SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
 
 
@@ -117,13 +117,12 @@ def _data_files(path: str) -> tuple | None:
     return tuple(sorted(files))
 
 
-def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without re-inferring an unchanged schema.
 
-    Schema inference is a Spark job that reads file footers (every
-    footer under ``merge_schema``), launched each time a reader is
-    built. This keeps the inferred ``StructType`` per ``(path,
-    merge_schema, values of the confs that change inference)`` and
+    Schema inference is a Spark job that reads a file footer, launched
+    each time a reader is built. This keeps the inferred ``StructType``
+    per ``(path, values of the confs that change inference)`` and
     reuses it while the data files' signature — name, size and mtime
     of every file the scan reads — is unchanged; any rewritten, added
     or removed file re-infers. The memo is process-wide, with one entry
@@ -135,15 +134,14 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     one relation shape for every read of a path, so a ``hot_table``
     over one read still matches the next read's plan.
     """
-    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     files = _data_files(path)
     if not files:
-        return reader.parquet(path)
-    key = (path, merge_schema, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
     with _SCHEMAS_LOCK:
         entry = _SCHEMAS.get(key)
     if entry is None or entry[0] != files:
-        entry = (files, reader.parquet(path).schema)
+        entry = (files, spark.read.parquet(path).schema)
         with _SCHEMAS_LOCK:
             _SCHEMAS[key] = entry
     return spark.read.schema(entry[1]).parquet(path)

@@ -30,13 +30,22 @@ Scale design
   single partition, no zipWithIndex RDD round-trip, no join, no
   shuffle of the data. A batch of driver-local rows skips even the
   count: its ordinals are its list positions.
-* **Point/range reads prune, not scan.** Rowids come out in physical
-  row order within every partition and each write task writes one
-  file, so every file holds one contiguous, ascending rowid span and
-  Parquet row-group min/max statistics answer
-  ``rowid = i`` / ``rowid BETWEEN a AND b`` by reading only the
-  overlapping row groups — the Spark analog of the reference's
-  O(1) slot arithmetic (dynamic_vector_manage_service.rs:226-242).
+* **Point/range reads decode what they return.** Rowids come out in
+  physical row order within every partition and each write task
+  writes one file, so every file holds one contiguous, ascending rowid
+  span. Every store file is written with parquet pages of at most
+  ``_PAGE_ROWS`` (1,000) rows, and parquet writes a page index
+  (per-page min/max) beside each footer; Spark's vectorized reader
+  applies the pushed ``rowid = i`` / ``rowid BETWEEN a AND b`` filter
+  to that index and decodes only the overlapping pages. A point read
+  decodes one 1,000-row page, not the whole file: the Spark analog of
+  the reference's O(1) slot arithmetic
+  (dynamic_vector_manage_service.rs:226-242). Without the row limit a
+  page is bounded by bytes only, and one 12,500-row append file holds
+  a single ``rowid`` page, so the index could skip nothing. 1,000 rows
+  keep a point read near the cost of opening the file; on 12,500-row
+  SampleData files they add 0.9% to the ``rowid`` column chunk and
+  2.9% to the file (more pages, a longer page index).
 * **count() without a data scan.** ``_meta.json`` holds the committed
   length (the analog of the reference's 8-byte persisted length
   header, dynamic_vector_manage_service.rs:24,72-79) and the store
@@ -102,6 +111,8 @@ _PARTITION_MASK = (1 << 33) - 1  # low 33 bits of monotonically_increasing_id
 ROWID = "rowid"
 
 _STAGING = "_staging"
+#: rows per parquet page in every store file: the unit a point read decodes
+_PAGE_ROWS = 1_000
 #: Spark's part file name: part-<partition id>-<job uuid>-c000[.codec].parquet
 _PART = re.compile(r"part-(\d+)-.*\.parquet$")
 
@@ -110,6 +121,18 @@ def _file_name(first: int) -> str:
     """A data file's name: the first ordinal it holds, zero-padded so a
     plain listing sorts in ordinal order."""
     return f"{first:020d}.parquet"
+
+
+def _write_files(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet under ``path``, one file per task (so a
+    part file's partition id names its first ordinal) in pages of at
+    most ``_PAGE_ROWS`` rows (so a point read decodes one page; see the
+    module docstring)."""
+    (
+        df.write.option("maxRecordsPerFile", 0)
+        .option("parquet.page.row.count.limit", _PAGE_ROWS)
+        .parquet(path)
+    )
 
 
 def prefix_offsets(counts: dict[int, int], pid: Column, start: int = 0) -> tuple[Column, int]:
@@ -366,8 +389,8 @@ class OrdinalStore:
         shuffle-free and are ALREADY strictly increasing within each
         partition by construction (the partition's constant offset +
         the low-33-bit record number of ``monotonically_increasing_id``,
-        a per-row projection that keeps row order), so row-group stats
-        are pruning-friendly without any sort. Each write task writes
+        a per-row projection that keeps row order), so page min/max
+        stats are pruning-friendly without any sort. Each write task writes
         one file; the driver names it by the partition's first ordinal
         and commits by replacing the manifest (module docstring).
 
@@ -429,9 +452,7 @@ class OrdinalStore:
                     out, counts = _dense_rowid_frame(tagged, start)
                 schema = _merged_schema(meta.get("schema"), out.schema)
                 staging = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
-                # one file per task, so a part file's partition id names
-                # its first ordinal
-                out.write.option("maxRecordsPerFile", 0).parquet(staging)
+                _write_files(out, staging)
             finally:
                 if persisted is not None:
                     persisted.unpersist()
@@ -474,7 +495,10 @@ class OrdinalStore:
         reference's ``ReadableCache`` (readable_cache.rs:54-63).
         Otherwise the file names are bisected and only the files that
         overlap ``[lo, hi)`` are read — the reference's offset-index
-        lookup (dynamic_vector_manage_service.rs:226-242)."""
+        lookup (dynamic_vector_manage_service.rs:226-242) — and within
+        them the pushed ``rowid`` range meets each file's page index, so
+        the scan decodes only the ``_PAGE_ROWS``-row pages that overlap
+        it: one page for a point read."""
         meta = self._read_meta()
         n = 0 if meta is None else int(meta["length"])
         if lo < 0 or hi < lo or hi > n:
@@ -494,19 +518,30 @@ class OrdinalStore:
         """Contiguous range read by ordinal (reference `pullx`).
 
         Reads only the files whose ordinal span overlaps the range, and
-        the rowid BETWEEN predicate pushed into their scan touches only
-        the overlapping row groups — the analog of the reference's
-        single spanning blob read (dynamic_vector_manage_service.rs:332-359).
+        the rowid BETWEEN predicate pushed into their scan decodes only
+        the overlapping pages — the analog of the reference's single
+        spanning blob read (dynamic_vector_manage_service.rs:332-359).
 
-        ``ordered=False`` skips the result sort (a range-sized shuffle)
-        for callers feeding joins/aggregates that don't need row order
-        — same guidance as ``getall``.
+        ``ordered=True`` gathers the range into one task and sorts it
+        there (``coalesce(1)`` + ``sortWithinPartitions``), pinned or
+        not: one job, no range-sampling job and no exchange, where a
+        global ``orderBy`` would sample the range and shuffle it.
+        Measured on a 4-core host (``local[4]``, noop sink, median of
+        5, global sort -> one-task sort), unpinned: 10k rows 0.28 ->
+        0.16 s, 1M 0.98 -> 0.61 s, 2M 1.13 -> 1.21 s; pinned: 0.33 ->
+        0.20, 0.82 -> 0.55, 0.98 -> 1.00 s; a 10M full-store range
+        (``tools/store_ladder.py``, best of 2) 6.25 -> 6.42 s. Faster up
+        to 1M rows and at most 7% slower from 2M to 10M, so no size
+        switches paths; ``getall(ordered=True)`` keeps the global sort.
+        ``ordered=False`` skips the sort and keeps the scan parallel,
+        for callers feeding joins/aggregates that don't need row order.
         """
         df = self._span(index, index + count, f"range [{index}, {index + count})")
-        return df.orderBy(ROWID) if ordered else df
+        return df.coalesce(1).sortWithinPartitions(ROWID) if ordered else df
 
     def pull(self, index: int) -> DataFrame:
-        """Point read by ordinal (reference `pull`): one file, one task."""
+        """Point read by ordinal (reference `pull`): one page of one file,
+        one task."""
         return self._span(index, index + 1, f"index {index}")
 
     def pull_row(self, index: int) -> Row:
@@ -559,7 +594,7 @@ class OrdinalStore:
         data are unchanged, but the physical layout goes back to few
         large files, each covering a CONTIGUOUS rowid range and sorted
         within (``repartitionByRange(rowid)`` + sortWithinPartitions),
-        so row-group pruning for point/range reads is as tight as a
+        so page pruning for point/range reads is as tight as a
         freshly bulk-written store. The new store is built beside the
         old one — ordinal-named files plus the same manifest — and the
         two directories are swapped by rename. Offline operation —
@@ -580,12 +615,9 @@ class OrdinalStore:
             new_path = self.path.rstrip("/") + ".compacting"
             staging = os.path.join(new_path, _STAGING)
             shutil.rmtree(new_path, ignore_errors=True)
-            (
-                self._df(meta)
-                .repartitionByRange(n_files, F.col(ROWID))
-                .sortWithinPartitions(ROWID)
-                .write.option("maxRecordsPerFile", 0)
-                .parquet(staging)
+            _write_files(
+                self._df(meta).repartitionByRange(n_files, F.col(ROWID)).sortWithinPartitions(ROWID),
+                staging,
             )
             spans = (
                 self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(staging)
@@ -664,11 +696,12 @@ class OrdinalStore:
         """Shuffle-free ordered bulk export: ``(lo, hi, DataFrame)``
         per file, in ordinal order.
 
-        ``getall(ordered=True)``/full-range ``pullx`` pay a global
-        range sort — at 10M rows that is a sampling re-scan plus a
-        full-data shuffle (measured 22x the unordered scan,
-        BASELINE.md §D), and at 100 TB it is the single most
-        expensive thing you can ask a cluster to do. But the store's
+        ``getall(ordered=True)`` pays a global range sort — at 10M
+        rows that is a sampling re-scan plus a full-data shuffle
+        (measured 22x the unordered scan, BASELINE.md §D), and at
+        100 TB it is the single most expensive thing you can ask a
+        cluster to do; a full-range ``pullx`` sorts everything in one
+        task instead, which no cluster can widen. But the store's
         files ALREADY tile the ordinal range in sorted order
         (``ordered_spans``), so a consumer that streams the corpus in
         insertion order — checkpointed training-shard export, ordered
