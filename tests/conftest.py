@@ -56,6 +56,8 @@ FAST_ORACLE_SPOT = {
     "sim_pca_power_iteration_exact",
     "graph_pagerank_exact",
     "graph_triangle_estimate",
+    "graph_connected_components",
+    "dedup_connected_clusters",
     "pipeline_pii_scrub",
     "pipeline_bpe_train_merges",
     "streaming_minhash_dedup_replay",

@@ -1162,6 +1162,101 @@ def test_connected_components_partition_the_graph(spark):
     spark.catalog.clearCache()
 
 
+def _physical_plan(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    return plan
+
+
+def _operators(plan):
+    """Every operator of a physical plan, preorder, descending into the
+    plans that cached relations were built from."""
+    if plan.getClass().getSimpleName() == "InMemoryTableScanExec":
+        return [plan] + _operators(plan.relation().cachedPlan())
+    kids = plan.children()
+    return [plan] + [n for i in range(kids.size()) for n in _operators(kids.apply(i))]
+
+
+def _name(op):
+    return op.getClass().getSimpleName()
+
+
+def test_connected_components_rounds_broadcast_labels_over_unshuffled_edges(spark, monkeypatch):
+    """Every checkpointed round of the connected-components loop reads
+    the edge cache in place: round 1 offers each edge's min id without
+    a join, and every later round joins the edges to the broadcast
+    label frame, with no exchange or shuffled join anywhere on the
+    edge (streamed) side, the cache's own build included."""
+    from vector_db_core_spark.operators import analytics as A
+
+    rounds = []
+    real = A.loop_checkpoint
+
+    def capture(df, eager=False):
+        rounds.append(_physical_plan(df))
+        return real(df, eager)
+
+    monkeypatch.setattr(A, "loop_checkpoint", capture)
+    QUERIES["graph_connected_components"](spark, SF_ORACLE).collect()
+    assert len(rounds) >= 2, len(rounds)
+    first = [_name(op) for op in _operators(rounds[0])]
+    assert not [n for n in first if "Join" in n], first
+    for i, plan in enumerate(rounds[1:], start=2):
+        joins = [op for op in _operators(plan) if _name(op) == "BroadcastHashJoinExec"]
+        assert joins, (i, plan.toString())
+        for join in joins:
+            edge_side = [_name(op) for op in _operators(join.streamedPlan())]
+            assert "InMemoryTableScanExec" in edge_side, (i, plan.toString())
+            bad = [
+                n
+                for n in edge_side
+                if "Exchange" in n or n in ("ShuffledHashJoinExec", "SortMergeJoinExec")
+            ]
+            assert not bad, (i, bad, plan.toString())
+    spark.catalog.clearCache()
+
+
+def test_min_label_fixpoint_round_budget(spark, monkeypatch):
+    """On a path whose ids are shuffled, k rounds label every node with
+    the min id within distance k; with a budget past the diameter every
+    label is the path's min id, and the loop stops one round after the
+    last label change instead of spending the budget."""
+    import random
+
+    from vector_db_core_spark.operators import analytics as A
+
+    n = 24
+    ids = list(range(100, 100 + n))
+    random.Random(11).shuffle(ids)
+    edges = spark.createDataFrame(
+        [(ids[i + 1], ids[i]) if i % 2 else (ids[i], ids[i + 1]) for i in range(n - 1)],
+        "u bigint, v bigint",
+    )
+
+    def within(k):
+        return {ids[i]: min(ids[max(0, i - k) : i + k + 1]) for i in range(n)}
+
+    for k in (1, 2, 5):
+        got = {r.node: r.comp for r in A._min_label_fixpoint(edges, k).collect()}
+        assert got == within(k), k
+
+    calls = {"n": 0}
+    real = A.loop_checkpoint
+
+    def counting(df, eager=False):
+        calls["n"] += 1
+        return real(df, eager)
+
+    monkeypatch.setattr(A, "loop_checkpoint", counting)
+    got = {r.node: r.comp for r in A._min_label_fixpoint(edges, 3 * n).collect()}
+    assert got == dict.fromkeys(ids, min(ids))
+    # the last change lands at round ecc(min), the next round confirms it
+    pos = ids.index(min(ids))
+    assert calls["n"] == max(pos, n - 1 - pos) + 1, calls
+    spark.catalog.clearCache()
+
+
 def test_kcore_initial_degree_aggregate_folded(spark, monkeypatch):
     """The initial degree aggregate feeds BOTH the k quantile and
     round 1's peel (r10 verdict nit: they were computed twice over

@@ -1041,7 +1041,7 @@ def test_round10_gini_lorenz_two_phase_rank(spark):
         spark.catalog.clearCache()
 
 
-def test_round9_triangle_estimate_samples_before_orientation(spark):
+def test_triangle_estimate_samples_before_orientation(spark):
     """The DOULION sample predicate must sit below the degree
     aggregate and wedge joins (orientation runs on the thinned graph,
     the whole point of the twin); no Python, no cartesian product."""
@@ -1054,7 +1054,7 @@ def test_round9_triangle_estimate_samples_before_orientation(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_round10_link_prediction_plans(spark):
+def test_link_prediction_plans(spark):
     """Link-prediction pair: the all-pairs baseline's global top-100
     must be TakeOrderedAndProject (top-k cost, never a global sort);
     the seeded twin's query-set predicate must exist as a pushed
@@ -1137,7 +1137,7 @@ def test_kmeans_assignment_is_centroid_array_fold(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_round14_link_prediction_degree_table_computed_once(spark):
+def test_link_prediction_degree_table_computed_once(spark):
     """graph_link_prediction_seeded's degree table is persisted
     for its three join arms (dw/du/dv) — the unpersisted plan cloned
     the union+aggregate degree subtree per consumer (22 scans of the

@@ -607,11 +607,18 @@ def test_dataframe_pushx_has_no_broadcast(spark, tmp_path):
     store = OrdinalStore(spark, str(tmp_path / "s"))
     batch = spark.range(0, 4_000, 1, 4).select(F.col("id").cast("int").alias("a"))
     sql_store = spark._jsparkSession.sharedState().statusStore()
-    before = sql_store.executionsList().size()
+    # by execution id, not list position: the status store keeps only
+    # the newest spark.sql.ui.retainedExecutions, dropping the oldest
+    execs = sql_store.executionsList()
+    last = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
     store.pushx(batch)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = sql_store.executionsList()
-    plans = [execs.apply(i).physicalPlanDescription() for i in range(before, execs.size())]
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() > last
+    ]
     assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
     for p in plans:
         assert "BroadcastExchange" not in p and "Join" not in p, p

@@ -2555,6 +2555,75 @@ FROM sz GROUP BY component_size
     )
 
 
+def _min_label_fixpoint(edges: DataFrame, rounds: int) -> DataFrame:
+    """Min-label propagation over the undirected edge frame ``edges``
+    (columns ``u``, ``v`` only; one row per edge, either orientation): at
+    most ``rounds`` rounds, where each round gives every node the min
+    of its own label and its neighbours' labels, starting from each
+    node's own id. After k rounds a node's label is the smallest id
+    within distance k; at the fixpoint it is the smallest id of its
+    component. Returns ``(node, comp)`` for every endpoint.
+
+    Each round reads every edge once, as two arcs (u -> v, v -> u)
+    generated in the scan's own stage; no symmetrized copy is stored
+    or shuffled. Round 1 reads the edges alone: each arc offers
+    ``least(u, v)`` to its head, and each node takes the min offered,
+    which is min(own id, neighbours). Every later round joins the arcs
+    on their tail to the previous label frame, BROADCAST, so the E-row
+    edge side is scanned in place; each node takes a map-side-combined
+    min of its own label and the labels its arcs bring. The broadcast
+    side is two longs per node. The hint is required: the planner
+    sizes the checkpointed label frame from the arcs, above the edges,
+    so without it a round builds its hash table on the edge side or
+    shuffles the edge list. The label frame is joined ONCE per round:
+    the planner multiplies the size estimates of a join's inputs, so
+    joining it on both endpoints squares the estimate every round,
+    and its arithmetic alone took seconds per round past round 20.
+
+    Every round's frame goes through ``loop_checkpoint``, so each
+    round plans against a scan of the previous labels, not the
+    accumulated chain. Labels only fall, so an unchanged label SUM
+    means no label changed: the loop stops there, one scalar per
+    round.
+
+    The edges are read once per round, so the helper caches them for
+    the loop, unless the caller already holds them cached."""
+    owned = not edges.is_cached
+    ed = edges.persist() if owned else edges
+    arcs = ed.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("a")
+    ).select("a.src", "a.dst")
+
+    def min_per_node(offers: DataFrame) -> DataFrame:
+        return offers.groupBy("node").agg(F.min("comp").alias("comp"))
+
+    def label_sum(lbl: DataFrame) -> int:  # the action that materializes lbl
+        return lbl.agg(F.sum("comp")).collect()[0][0]
+
+    lbl = loop_checkpoint(
+        min_per_node(arcs.select(F.col("dst").alias("node"), F.least("src", "dst").alias("comp")))
+    )
+    prev_sum = label_sum(lbl)
+    for _ in range(rounds - 1):
+        tails = F.broadcast(lbl.select(F.col("node").alias("src"), "comp"))
+        msgs = arcs.join(tails, "src").select(F.col("dst").alias("node"), "comp")
+        lbl = loop_checkpoint(min_per_node(lbl.unionByName(msgs)))
+        cur_sum = label_sum(lbl)
+        if cur_sum == prev_sum:  # monotone: equal sum == fixpoint
+            break
+        prev_sum = cur_sum
+    # every label frame is materialized, so the edge cache is no
+    # longer referenced; the registry's clearCache reaps the labels
+    if owned:
+        ed.unpersist()
+    return lbl
+
+
 @register("graph_connected_components", oracle=_cc_sql())
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONNECTED COMPONENTS of the co-purchase graph by iterative
@@ -2568,11 +2637,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical component id — hash-min propagation, the textbook
     MapReduce CC formulation of Rastogi et al. 2013's HashMin).
     Output is the bounded component-size histogram (component_size,
-    n_components), not the |V|-row labeling. Sibling of
-    ``dedup_connected_clusters`` (same fixpoint over the TINY near-dup
-    pair graph, emitting per-doc labels); this one runs on the full
-    co-purchase graph where |V|-row output would be data-sized and
-    the histogram is the analyst's question.
+    n_components), not the |V|-row labeling. ``dedup_connected_clusters``
+    runs the same fixpoint (``_min_label_fixpoint``) over the TINY
+    near-dup pair graph and emits per-doc labels; this one runs on the
+    full co-purchase graph, where |V|-row output would be data-sized
+    and the histogram is the analyst's question.
 
     Exactness: labels and counts are integers throughout; no floats
     anywhere. Both engines state EXACTLY ``CC_ROUNDS`` propagation
@@ -2582,67 +2651,21 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity by monotonicity — measured fixpoint <= 4 rounds at
     sf0.01 and sf0.1, far under the budget.
 
-    Plan/scale: reuses the session-shared edge scratch. Each round is
-    one join of the |V|-row label frame against the symmetrized edge
-    list (both sides keyed on node id) + a map-side-combined min —
-    the PageRank loop shape, persist+count per round with superseded
-    frames unpersisted. Convergence is detected by the SUM of labels
-    (strictly decreasing until fixpoint — min-propagation is
-    monotone), one scalar per round instead of a change-count join.
-    Rounds = graph diameter (small for the dense co-purchase graph;
-    capped with a sanity bound). At 1000-executor scale the same loop
-    runs with the label frame hash-partitioned on node; for
-    high-diameter graphs the published large-star/small-star
-    alternation (Kiveris et al. 2014) bounds rounds at O(log n) with
-    the same per-round join shape."""
-    edges = _co_purchase_edges(spark, sf_dir)
-    # r14: cache the symmetrized edges HASH-PARTITIONED ON src at a
-    # pinned width (the PageRank loop-shape rework) — the per-round
-    # lbl⋈ed join then keeps the 2|E| edge side in place and only the
-    # |V|-row label frame moves; the old unpartitioned cache
-    # re-shuffled the edge list every round.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ed = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .repartition(width, "src")
-        .persist()
-    )
-    lbl = (
-        ed.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .persist()
-    )
-    prev_sum = lbl.agg(F.sum("comp").alias("s")).collect()[0].s
-    first_lbl = lbl
-    for _ in range(CC_ROUNDS):  # the oracle's exact round budget
-        msgs = lbl.join(ed, lbl.node == ed.src).select(
-            F.col("dst").alias("node"), "comp"
-        )
-        # localCheckpoint, not persist (r14, the k-core lesson): each
-        # round references lbl twice (the union arm + the join probe),
-        # so plain persist grows the ANALYZED plan 2^round and the
-        # per-round action pays plan-string rendering on the driver;
-        # checkpointing keeps every round's plan scan-shaped. The sum
-        # collect is the materializing action.
-        nxt = loop_checkpoint(
-            lbl.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp")),
-            eager=False,
-        )
-        cur_sum = nxt.agg(F.sum("comp").alias("s")).collect()[0].s
-        if lbl is first_lbl:
-            lbl.unpersist()
-        lbl = nxt
-        if cur_sum == prev_sum:  # monotone: equal sum == fixpoint
-            break
-        prev_sum = cur_sum
-    # final labels stay materialized (the PageRank discipline); the
-    # symmetrized edge cache is no longer needed — re-derivable from
-    # the scratch parquet on eviction. Registry clearCache reaps lbl.
-    ed.unpersist()
+    Plan/scale: reads the session-shared edge scratch once into an
+    E-row (u < v) edge cache — no symmetrized copy, no repartition.
+    Each round streams that cache as two arcs per edge, joins them to
+    the broadcast |V|-row label frame, and takes a map-side-combined
+    min per node: only the label frame and the per-node partial mins
+    move, never an edge. Convergence is detected by the SUM of labels (strictly
+    decreasing until fixpoint — min-propagation is monotone), one
+    scalar per round instead of a change-count join. Rounds = graph
+    diameter (small for the dense co-purchase graph; capped with a
+    sanity bound). The broadcast side is bounded by the part count;
+    where |V| outgrows a broadcast, or the graph's diameter is large,
+    the published large-star/small-star alternation (Kiveris et al.
+    2014) bounds rounds at O(log n) over a node-partitioned label
+    frame."""
+    lbl = _min_label_fixpoint(_co_purchase_edges(spark, sf_dir), CC_ROUNDS)
     sz = lbl.groupBy("comp").agg(F.count("*").alias("component_size"))
     return sz.groupBy("component_size").agg(F.count("*").alias("n_components"))
 

@@ -1043,54 +1043,23 @@ def dedup_connected_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative per group" decisions (pairs alone can't: near-dup is
     not transitive, components are).
 
-    Iterative min-label propagation — the canonical Spark shape for an
-    algorithm SQL can't express in one pass: each round is one
-    (edges ⋈ labels) + min-aggregate, labels persist between rounds
-    (lineage cut), and the loop stops when a one-row count says no
-    label changed. Rounds needed = component diameter (tiny for dedup
-    graphs: duplicates cluster tightly); each round shuffles only
-    (node, label) pairs, never documents. The DuckDB oracle computes
-    the same fixpoint with a recursive CTE.
+    Iterative min-label propagation over the pair graph, the same
+    fixpoint ``graph_connected_components`` computes
+    (``analytics._min_label_fixpoint``): each round joins the pairs to
+    the broadcast label frame and takes a min per document, so a round
+    moves only (node, label) pairs, never documents or pairs, and the
+    loop stops when the label sum stops falling. Rounds needed =
+    component diameter (tiny for dedup graphs: duplicates cluster
+    tightly), capped at 20. The DuckDB oracle computes the same
+    fixpoint with a recursive CTE.
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    labels = (
-        edges.select(F.col("doc_a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
+    from vector_db_core_spark.operators.analytics import _min_label_fixpoint
+
+    pairs = dedup_minhash_lsh(spark, sf_dir).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    try:
-        for _ in range(20):  # >= diameter of any real dedup component
-            nbr = (
-                edges.join(labels, edges.doc_b == labels.node)
-                .groupBy("doc_a")
-                .agg(F.min("label").alias("nbr_min"))
-            )
-            new_labels = (
-                labels.join(nbr, labels.node == nbr.doc_a, "left")
-                .select(
-                    "node",
-                    F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
-                )
-                .persist()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .where(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep")
-        )
-    finally:
-        edges.unpersist()
+    labels = _min_label_fixpoint(pairs, 20)  # >= diameter of any real dedup component
+    return labels.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_rep"))
 
 
 #: rare-shingle blocking threshold: candidate pairs must share at least
@@ -6673,9 +6642,10 @@ def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     quote". Cycle edges (redundantly-connected pairs) never appear.
 
     Plan — components first, then Tarjan per component: (1) min-label
-    propagation labels every node with its component (ONE |V|-row
-    frame folding to the fixpoint — diameter rounds, the
-    ``dedup_connected_clusters`` loop); (2) edges group by component
+    propagation labels every node with its component
+    (``analytics._min_label_fixpoint``, the loop
+    ``dedup_connected_clusters`` runs: diameter rounds over the
+    pairs, the |V|-row label frame broadcast); (2) edges group by component
     label and each component's edge list runs TARJAN'S linear
     low-link bridge algorithm inside ``applyInPandas`` — dedup
     components are duplicate-family-sized, so each fits one Arrow
@@ -6700,69 +6670,22 @@ def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an INDEPENDENT Tarjan + union-find and pins equality.
 
     Plan/scale: the edge list is duplication-bounded (the [2,20]
-    span doc-frequency cap); the CC loop shuffles (node, label)
-    pairs only; the per-component work is linear in component edges.
+    span doc-frequency cap); the CC loop shuffles per-node partial
+    min labels only; the per-component work is linear in component edges.
     At 100 TB the shape is unchanged — millions of small components,
     each one Arrow batch."""
     from pyspark.sql.types import LongType, StructField, StructType
+
+    from vector_db_core_spark.operators.analytics import _min_label_fixpoint
 
     pairs = (
         dedup_span_pairs(spark, sf_dir)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .persist()
     )
-    sym = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .repartition(8, "node")
-        .persist()
-    )
-    # scope a small shuffle width to the duplication-bounded loop (the
-    # _run_to_memory device): a plain 200-partition session turns each
-    # tiny CC round into hundreds of near-empty tasks
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        prev = labels.agg(F.sum("label")).collect()[0][0]
-        first_labels = labels
-        for _ in range(30):  # sanity cap >> any dedup component diameter
-            nbr = (
-                sym.join(labels, sym.v == labels.node)
-                .groupBy("u")
-                .agg(F.min("label").alias("nbr_min"))
-            )
-            # localCheckpoint, not persist (r14, the k-core lesson):
-            # each round references labels twice (join probe + the
-            # left-join spine), so plain persist grows the ANALYZED
-            # plan 2^round and every round's sum-collect pays
-            # plan-string rendering on the driver. Checkpointing
-            # keeps each round's plan scan-shaped.
-            new_labels = loop_checkpoint(
-                labels.join(nbr, labels.node == nbr.u, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce("nbr_min", F.col("label")),
-                    ).alias("label"),
-                )
-                .repartition(8, "node"),
-                eager=False,
-            )
-            cur = new_labels.agg(F.sum("label")).collect()[0][0]
-            if labels is first_labels:
-                labels.unpersist()
-            labels = new_labels
-            if cur == prev:  # min-propagation is monotone: fixpoint
-                break
-            prev = cur
-        lab = labels.select(
-            F.col("node").alias("u"), F.col("label").alias("comp")
-        )
+        labels = _min_label_fixpoint(pairs, 30)  # sanity cap >> any dedup component diameter
+        lab = labels.select(F.col("node").alias("u"), "comp")
         edges_labeled = pairs.join(lab, "u").select("comp", "u", "v")
 
         schema = StructType(
@@ -6838,9 +6761,6 @@ def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # finally block unpersists the frames this plan reads.
         out = loop_checkpoint(out, eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        labels.unpersist()
-        sym.unpersist()
         pairs.unpersist()
     return out
 

@@ -43,27 +43,25 @@ def get_spark(app_name: str = "vector_db_core_spark", shuffle_partitions: int | 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r15: keep persisted plans' output partitioning VISIBLE to
+        # Keep persisted plans' output partitioning VISIBLE to
         # consumers (Spark 3.4+ defaults this to true, wrapping cached
         # subtrees in AdaptiveSparkPlan and hiding their partitioning,
         # so every join against a deliberately repartition(k, key)'d
         # cache re-exchanged BOTH sides — measured in the executed
-        # triangle/pagerank plans). This engine's caches are
-        # explicitly partitioned loop state (edges on src, labels on
-        # node, oriented edges on src): consumers must be able to
-        # reuse that partitioning. Quiet-host alternating A/B:
-        # pagerank med 9.47 -> 7.81 s, connected components med
-        # 5.27 -> 4.02 s, triangles flat. The cost — no AQE
-        # coalescing inside cached builds — is deliberate: the builds
-        # pin their own widths.
+        # triangle/pagerank plans). Two loops cache explicitly
+        # partitioned state and reuse that partitioning: PageRank's
+        # edge cache on src and the triangle ops' oriented edges on
+        # src. Quiet-host alternating A/B: pagerank med 9.47 -> 7.81 s,
+        # triangles flat. The cost — no AQE coalescing inside cached
+        # builds — is deliberate: the builds pin their own widths.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-        # r15: let the planner pick shuffled-hash join when its size
+        # Let the planner pick shuffled-hash join when its size
         # conditions are met instead of always preferring sort-merge.
-        # The iterative loops join a large cached edge table against a
+        # PageRank and k-core join a large cached edge table against a
         # per-iteration state frame; SMJ re-SORTS the 2|E| cached edge
         # rows every iteration, SHJ does not. Quiet-host alternating
         # A/B (two windows): pagerank med 9.14 -> 7.57 s / min
-        # 10.27 -> 6.65, CC and kcore flat-to-better, nothing worse.
+        # 10.27 -> 6.65, kcore flat-to-better, nothing worse.
         # The hash is built on the CACHED EDGE side, not the small
         # state: plans/r15/graph_pagerank_iteration_after_shj.txt shows
         # `ShuffledHashJoin Inner BuildLeft` over the 2.39M-row edge
