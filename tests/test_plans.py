@@ -995,7 +995,7 @@ def test_minhash_md5_estimate_no_all_pairs(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_round9_gini_and_theil_sen_rank_reductions(spark):
+def test_gini_and_theil_sen_reduce_before_ranking(spark):
     """Gini's global ranking window and Theil-Sen's pairwise self-join
     must feed from the per-customer / per-day reduction (partial hash
     aggregate between the scan and any SinglePartition exchange or
@@ -1018,7 +1018,7 @@ def test_round9_gini_and_theil_sen_rank_reductions(spark):
         assert "Python" not in simple and "CartesianProduct" not in simple
 
 
-def test_round10_gini_lorenz_two_phase_rank(spark):
+def test_gini_lorenz_rank_is_two_phase_range_sort(spark):
     """The inequality pair ranks the customer reduction with the
     DISTRIBUTED two-phase protocol (range-partitioned parallel sort +
     constant prefix offsets — store._dense_rowid_frame), replacing
@@ -1075,7 +1075,7 @@ def test_link_prediction_plans(spark):
     spark.catalog.clearCache()
 
 
-def test_round10_phash_banded_join_plan(spark):
+def test_phash_neardup_joins_on_lsh_bands(spark):
     """The perceptual-hash near-dup must join candidates on the LSH
     band keys (k, bv) — never all-pairs — and the signature must come
     from the Arrow mapInPandas decode path (the real multimodal

@@ -646,6 +646,86 @@ def test_ingest_buffer_flush_is_one_job_one_file(spark, tmp_path, job_count):
     assert [r.my_number1 for r in rows] == list(range(65))
 
 
+def test_row_list_pushx_starts_no_python_worker(spark, tmp_path, monkeypatch):
+    """A row list enters Spark as Arrow batches: the frame pushx writes
+    reads a ParallelCollectionRDD, with no PythonRDD (pickled rows that
+    a Python worker must unpickle) anywhere in its lineage."""
+    import vector_db_core_spark.store as store_mod
+
+    written = []
+    write = store_mod._write_files
+    monkeypatch.setattr(store_mod, "_write_files", lambda df, path: (written.append(df), write(df, path)))
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(sample_rows(250))
+    lineage = written[0]._jdf.queryExecution().toRdd().toDebugString()
+    assert "ParallelCollectionRDD" in lineage and "PythonRDD[" not in lineage, lineage
+    assert [r.my_number1 for r in store.getall().collect()] == list(range(250))
+
+
+@pytest.mark.parametrize("bad", ["7", True, 2**40, 7.0], ids=["string", "bool", "2**40", "float"])
+def test_row_list_pushx_rejects_what_create_dataframe_rejects(spark, tmp_path, bad):
+    """A value Spark's type verifier rejects in an INT column raises the
+    exception createDataFrame raises, before anything is staged: the
+    length and the store's files stay as they were."""
+    import os
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema=SCHEMA)
+    store.pushx(sample_rows(3))
+    rows = sample_rows(2, start=3) + [{**sample_rows(1, start=5)[0].asDict(), "my_number1": bad}]
+    with pytest.raises(Exception) as expected:
+        spark.createDataFrame(rows, SCHEMA)
+    files = sorted(os.listdir(store.path))
+    with pytest.raises(type(expected.value)):
+        store.pushx(rows)
+    assert store.count() == 3
+    assert sorted(os.listdir(store.path)) == files
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_row_list_pushx_values_match_create_dataframe(spark, tmp_path, monkeypatch, tz):
+    """Every column type a store commonly holds, NULLs and a missing
+    dict key included, reads back as createDataFrame builds it; naive
+    datetimes too (Spark reads them in the Python process's local
+    time), around a daylight-saving gap when that is not UTC."""
+    import datetime as dt
+    import time
+
+    schema = (
+        "i INT, l BIGINT, d DOUBLE, s STRING, b BOOLEAN, n INT, v ARRAY<FLOAT>, "
+        "day DATE, ts TIMESTAMP"
+    )
+    rows = [
+        {
+            "i": k, "l": k << 40, "d": k / 3, "s": f"s{k}", "b": k % 2 == 0, "n": None,
+            "v": [k / 7, None, 1e-3], "day": dt.date(2020, 2, 27 + k),
+            "ts": dt.datetime(2021, 3, 14, 1 + k, 30, 5, 123_457),
+        }
+        for k in range(3)
+    ] + [Row(i=9, l=None, d=None, s=None, b=None, n=None, v=None, day=None, ts=None), {"i": 10}]
+    monkeypatch.setenv("TZ", tz)
+    time.tzset()
+    try:
+        store = OrdinalStore(spark, str(tmp_path / "s"), schema=schema)
+        store.pushx(rows)
+        got = store.getall().drop("rowid").collect()
+        assert got == spark.createDataFrame(rows, schema).collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_schemaless_row_list_pushx_stores_the_inferred_schema(spark, tmp_path):
+    """A store without a schema stores the types createDataFrame infers
+    from the same dict list."""
+    from vector_db_core_spark.store import with_list_rowid
+
+    rows = [{"a": 1, "b": "x", "c": [1.5], "d": True}, {"a": 2, "b": None, "c": None, "d": False}]
+    store = OrdinalStore(spark, str(tmp_path / "s"))
+    store.pushx(rows)
+    assert store._read_meta()["schema"] == with_list_rowid(spark.createDataFrame(rows), 0).schema.jsonValue()
+    assert store.getall().drop("rowid").collect() == spark.createDataFrame(rows).collect()
+
+
 def test_hot_table_serves_point_reads(spark, tmp_path):
     """A warmed hot_table over getall(ordered=False) still answers
     pull(): every store read builds the same relation, so the cached
@@ -709,6 +789,35 @@ def test_hot_table_survives_appends(spark, tmp_path):
         assert 0 < read <= file_rows[holder]
         assert _cached_blocks(spark) == blocks
         assert pinned.count() == 2000
+
+
+def _shuffle_bytes_written(spark):
+    """Shuffle bytes every executor has written so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    execs = sc.statusStore().executorList(False)
+    return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
+
+
+def test_hot_table_warm_is_one_job_without_shuffle(spark, tmp_path, job_count):
+    """Warming a pin over a many-file store is one job that shuffles
+    nothing and leaves every partition cached."""
+    from vector_db_core_spark.cache import hot_table
+
+    store = OrdinalStore(spark, str(tmp_path / "s"), schema="a INT")
+    for i in range(6):
+        store.pushx(spark.range(i * 1000, (i + 1) * 1000, 1, 1).select(F.col("id").cast("int").alias("a")))
+    df = store.getall(ordered=False)
+    cached = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    before = _shuffle_bytes_written(spark)
+    pin, jobs = job_count(lambda: hot_table(df, warm=True))
+    try:
+        assert jobs == 1
+        assert _shuffle_bytes_written(spark) == before
+        infos = [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo() if i.id() not in cached]
+        assert infos and all(i.numCachedPartitions() == i.numPartitions() for i in infos)
+    finally:
+        pin.release()
 
 
 def test_point_read_decodes_one_page(spark, tmp_path):

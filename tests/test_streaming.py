@@ -122,6 +122,22 @@ def test_ingest_buffer_union_view(spark, tmp_path):
     assert store.count() == 151 and buf.lens() == (0, 151, 151)
 
 
+def test_ingest_buffer_read_starts_no_python_worker(spark, tmp_path):
+    """The pending rows of the union view enter Spark as Arrow batches:
+    no PythonRDD in the view's lineage, and the provisional ordinals
+    still continue the store's in push order."""
+    store = OrdinalStore(spark, str(tmp_path / "store"), schema=SCHEMA)
+    store.pushx([{"my_number1": i, "my_string1": f"c{i}", "my_number2": i} for i in range(5)])
+    buf = IngestBuffer(store, threshold=100)
+    buf.pushx([{"my_number1": 5 + i, "my_string1": f"p{i}"} for i in range(7)])
+    view = buf.read()
+    lineage = view._jdf.queryExecution().toRdd().toDebugString()
+    assert "ParallelCollectionRDD" in lineage and "PythonRDD[" not in lineage, lineage
+    rows = view.orderBy("rowid").collect()
+    assert [(r.rowid, r.my_number1) for r in rows] == [(i, i) for i in range(12)]
+    assert rows[-1].my_string1 == "p6" and rows[-1].my_number2 is None
+
+
 def _events_landing(spark, tmp_path, n_files=3):
     """Re-land the events fixture as micro-batch parquet files with
     plain µs timestamps (the fixture's TIMESTAMP(NANOS) doesn't matter

@@ -1,6 +1,13 @@
-"""Time the store write/read paths across batch sizes — W1/W2 slopes.
+"""Time the store write/read paths across batch sizes — W1/W2/W7 slopes.
 
-Usage: python tools/store_ladder.py [rows ...]   (default: 1M 10M)
+Usage: python tools/store_ladder.py [--row-lists-only] [rows ...]   (default: 1M 10M)
+
+First the row-list rung: ``pushx`` of a driver-side list of SampleData
+``Row`` objects at 1 / 250 / 10k / 100k rows, the path ``push`` and an
+``IngestBuffer`` flush (W7) take (``store.rows_frame``: Spark's type
+verifier, then one Arrow table the JVM reads itself). Three runs per
+size, each into a fresh store, after one untimed 250-row warm-up push.
+``--row-lists-only`` stops after it.
 
 bench.py pins W1 (pushx 1M) / W2 (range-read 1M) at one size; this
 ladder re-times them at 10x to show the dense-rowid protocol
@@ -54,14 +61,64 @@ def sample_df(spark, rows: int):
     )
 
 
+SCHEMA = "my_number1 INT, my_string1 STRING, my_number2 INT, my_boolean1 BOOLEAN, my_string2 STRING"
+
+
+def sample_rows(rows: int) -> list:
+    from pyspark.sql import Row
+
+    return [
+        Row(
+            my_number1=i,
+            my_string1=f"Hello, World! 你好世界 {i}",
+            my_number2=i * 10,
+            my_boolean1=i % 2 == 0,
+            my_string2=f"This is another longer string. {i}",
+        )
+        for i in range(rows)
+    ]
+
+
+
+def row_list_rung(spark) -> None:
+    from vector_db_core_spark.store import OrdinalStore
+
+    def push_list(rows: list) -> float:
+        tmp = tempfile.mkdtemp(prefix="store_ladder_")
+        try:
+            store = OrdinalStore(spark, os.path.join(tmp, "s"), schema=SCHEMA)
+            t0 = time.perf_counter()
+            store.pushx(rows)
+            secs = time.perf_counter() - t0
+            assert store.count() == len(rows)
+            return secs
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    push_list(sample_rows(250))  # absorb the first write's set-up
+    for n in (1, 250, 10_000, 100_000):
+        rows = sample_rows(n)
+        runs = sorted(push_list(rows) for _ in range(3))
+        print(
+            f"row list rows={n:>7,}  pushx min={runs[0]:5.2f}s median={runs[1]:5.2f}s max={runs[2]:5.2f}s",
+            flush=True,
+        )
+
+
 def main() -> None:
-    sizes = [int(float(a)) for a in sys.argv[1:]] or [1_000_000, 10_000_000]
+    args = sys.argv[1:]
+    lists_only = "--row-lists-only" in args
+    sizes = [int(float(a)) for a in args if a != "--row-lists-only"] or [1_000_000, 10_000_000]
 
     from vector_db_core_spark.session import get_spark
     from vector_db_core_spark.store import OrdinalStore
 
     spark = get_spark(app_name="store_ladder")
     spark.sparkContext.setLogLevel("ERROR")
+
+    row_list_rung(spark)
+    if lists_only:
+        return
 
     def push_once(rows: int):
         tmp = tempfile.mkdtemp(prefix="store_ladder_")

@@ -16,9 +16,11 @@ under memory pressure), not the row — a documented deviation
   R2 bulk bypass     → don't cache one-shot bulk scans — on Spark
                        that's simply *not calling* hot_table for them;
                        the helper exists so the choice is explicit.
-  R3 manual warm-up  → ``warm=True`` runs a cheap materializing action
-                       so the first real query hits memory
-                       (add_bulk_to_cache's role).
+  R3 manual warm-up  → ``warm=True`` writes the pinned frame to the
+                       ``noop`` sink, one job that caches every
+                       partition and shuffles nothing, so the first
+                       real query hits memory (add_bulk_to_cache's
+                       role).
   C1 composition     → orthogonal to the streaming sink, exactly like
                        the reference's stackable decorators: a table
                        fed by streaming/ingest can be hot_table'd by
@@ -53,9 +55,13 @@ class HotTable:
                  warm: bool = False):
         self.df = df.persist(level)
         if warm:
-            # materialize all partitions now (R3 warm-up): count() is
-            # the cheapest full-scan action (no row transfer)
-            self.df.count()
+            # materialize all partitions now (R3 warm-up) through the
+            # noop sink: one job, one task per partition, nothing
+            # shuffled. count() caches the same partitions in 3 jobs on
+            # a 22-file store: AQE builds the cache as a stage of its
+            # own, then a partial aggregate writes an exchange and a
+            # final one reads it.
+            self.df.write.format("noop").mode("overwrite").save()
 
     def __enter__(self) -> DataFrame:
         return self.df

@@ -29,7 +29,10 @@ Scale design
   arithmetic yields a dense, batch-stable ordinal. No window over a
   single partition, no zipWithIndex RDD round-trip, no join, no
   shuffle of the data. A batch of driver-local rows skips even the
-  count: its ordinals are its list positions.
+  count: its ordinals are its list positions. It enters Spark as Arrow
+  batches (``rows_frame``: Spark's type verifier on every row, then one
+  Arrow table the JVM reads itself), so writing it is one task that
+  starts no Python worker.
 * **Point/range reads decode what they return.** Rowids come out in
   physical row order within every partition and each write task
   writes one file, so every file holds one contiguous, ascending rowid
@@ -101,9 +104,21 @@ import threading
 import uuid
 from typing import Iterable, Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DateType,
+    MapType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _create_converter,
+    _make_type_verifier,
+)
 from pyspark.storagelevel import StorageLevel
 
 _PARTITION_MASK = (1 << 33) - 1  # low 33 bits of monotonically_increasing_id
@@ -133,6 +148,63 @@ def _write_files(df: DataFrame, path: str) -> None:
         .option("parquet.page.row.count.limit", _PAGE_ROWS)
         .parquet(path)
     )
+
+
+def _internal_arrow_type(dtype: DataType) -> pa.DataType:
+    """The Arrow type of ``dtype.toInternal``'s output: days since the
+    epoch for a date, microseconds for a timestamp, the same recursively
+    inside arrays, maps and structs."""
+    if isinstance(dtype, DateType):
+        return pa.int32()
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
+        return pa.int64()
+    if isinstance(dtype, ArrayType):
+        return pa.list_(_internal_arrow_type(dtype.elementType))
+    if isinstance(dtype, MapType):
+        return pa.map_(_internal_arrow_type(dtype.keyType), _internal_arrow_type(dtype.valueType))
+    if isinstance(dtype, StructType):
+        return pa.struct([pa.field(f.name, _internal_arrow_type(f.dataType)) for f in dtype.fields])
+    return to_arrow_type(dtype)
+
+
+def _arrow_column(values: list, dtype: DataType) -> pa.Array:
+    """One column of a row list as an Arrow array of ``dtype``. Values
+    that Spark converts before they reach the JVM (dates, timestamps,
+    structs, ...) go through the same ``toInternal`` and are cast from
+    its output, so a naive datetime means what it means to
+    ``TimestampType.toInternal`` (the Python process's local time)."""
+    if dtype.needConversion():
+        internal = [None if v is None else dtype.toInternal(v) for v in values]
+        return pa.array(internal, type=_internal_arrow_type(dtype)).cast(to_arrow_type(dtype))
+    return pa.array(values, type=to_arrow_type(dtype))
+
+
+def rows_frame(spark: SparkSession, rows: list, schema: StructType | str | None = None) -> DataFrame:
+    """A driver-side row list as a DataFrame that enters Spark as Arrow
+    batches: the JVM reads them itself, so the frame's lineage is a
+    ``ParallelCollectionRDD`` and computing it starts no Python worker.
+    ``spark.createDataFrame(rows, schema)`` pickles the list into a
+    ``PythonRDD`` of ``defaultParallelism`` slices instead, and every
+    task that reads it unpickles them in a Python worker.
+
+    Everything else is ``createDataFrame``'s: ``Row``, dict and tuple
+    rows (a missing dict key is NULL); under a schema each row passes
+    Spark's own type verifier first, so the same rows raise the same
+    exceptions before anything runs; without one the schema is Spark's
+    list inference."""
+    if schema is None:
+        struct = spark._inferSchemaFromList(rows)
+    else:
+        struct = spark._parse_ddl(schema) if isinstance(schema, str) else schema
+        verify = _make_type_verifier(struct)
+        for row in rows:
+            verify(row)
+    tuples = list(map(_create_converter(struct), rows))
+    columns = zip(*tuples) if tuples else ([] for _ in struct.fields)
+    table = pa.Table.from_arrays(
+        [_arrow_column(list(c), f.dataType) for c, f in zip(columns, struct.fields)], names=struct.names
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def prefix_offsets(counts: dict[int, int], pid: Column, start: int = 0) -> tuple[Column, int]:
@@ -397,7 +469,24 @@ class OrdinalStore:
         A list of rows (``push``, ``IngestBuffer.flush``) is already on
         the driver and in order: it is written as ONE partition whose
         rowid is ``start`` + its position, one job and one file, with no
-        persist and no counting job.
+        persist and no counting job. ``rows_frame`` hands it to Spark:
+        every row passes Spark's type verifier (a rejected row raises
+        before anything is staged), and the rows travel as one Arrow
+        table that the JVM reads itself, so the write task starts no
+        Python worker, where ``createDataFrame(rows, schema)`` pickles
+        them into a ``PythonRDD`` that the task unpickles through Python
+        workers. Row-list ``pushx`` of SampleData rows
+        (``tools/store_ladder.py --row-lists-only``, 4-core host,
+        ``local[4]``, median of 3 in each of two runs):
+
+            rows     createDataFrame(list)   rows_frame
+            1        1.01 / 1.22 s            0.29 / 0.32 s
+            250      1.04 / 1.37 s            0.27 / 0.29 s
+            10k      1.31 / 1.48 s            0.46 / 0.52 s
+            100k     2.37 / 2.66 s            1.87 / 1.99 s
+
+        At 100k rows the verifier and Spark's row converter, both
+        kept, are most of what is left.
 
         Schema evolution [EXT — the reference's schemas are fixed at
         compile time, dynamic-vector-macro]: a batch may ADD nullable
@@ -427,7 +516,7 @@ class OrdinalStore:
         if not isinstance(batch, DataFrame):
             rows = list(batch)
             n_rows = len(rows)
-            batch = self.spark.createDataFrame(rows, schema=self.schema)
+            batch = rows_frame(self.spark, rows, self.schema)
         with self._write_lock, self._process_write_lock():
             meta = self._read_meta() or {"length": 0, "streams": {}}
             streams = meta.get("streams", {})
